@@ -16,9 +16,15 @@ optimize_layout rewrites each table into n-file sorted zstd parquet:
 
 from __future__ import annotations
 
+import json
 import os
+from dataclasses import dataclass
+from typing import Callable
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession, functions as F
+
+from nerd_spark.sources import fsutil
 
 # (sort column, file count) per table; counts sized for ~100k rows or
 # a few MB per file at sf0.1 — scale up with data.
@@ -297,12 +303,10 @@ def optimize_layout(
     from concurrent.futures import ThreadPoolExecutor
 
     from nerd_spark.session import read_table
-    from nerd_spark.sources import fsutil
 
     os.makedirs(out_dir, exist_ok=True)
 
     from nerd_spark.operators.dedup import _bytes_conf
-    from nerd_spark.sources.fsutil import estimate_input_bytes
 
     target = _bytes_conf(spark, "spark.nerd.layoutTargetFileBytes", 8 << 20)
     floor = _bytes_conf(spark, "spark.nerd.layoutMinFileBytes", 512 << 10)
@@ -311,7 +315,7 @@ def optimize_layout(
     def _rewrite(name: str) -> None:
         sort_col = _LAYOUT[name]
         df = read_table(spark, sf_dir, name)
-        est = estimate_input_bytes(df) or 0
+        est = fsutil.estimate_input_bytes(df) or 0
         # two regimes: small tables fan out toward one file per core
         # for scan parallelism but never below `floor` bytes/file
         # (open cost dominates under that); big tables grow by the
@@ -615,22 +619,15 @@ def optimize_layout(
     if tables is None or "events" in tables:
 
         def _ix_daily_window():
-            from nerd_spark.plans import derivations as D
-
             ev = read_table(spark, out_dir, "events")
-            # cluster by day before the partitioned write: without it every
+            # the partitioned write clusters by day: without it every
             # shuffle partition drops a sliver file into every date dir
-            # (days x partitions tiny files) and scan/listing cost eats the
-            # summary's benefit. At 100 TB the key becomes (d, file_group).
-            daily = D.daily_rollup(ev, "user_id")
-            daily.repartition("d").write.mode("overwrite").partitionBy("d").parquet(
-                os.path.join(out_dir, SUMMARY_DAILY_DIRNAME)
+            # (days x partitions tiny files) and scan/listing cost eats
+            # the summary's benefit
+            daily = _daily_spec(
+                os.path.join(out_dir, SUMMARY_DAILY_DIRNAME), "user_id"
             )
-            write_summary_meta(
-                spark,
-                os.path.join(out_dir, SUMMARY_DAILY_DIRNAME),
-                {"entity": "user_id"},
-            )
+            _seed(spark, daily, daily.state(ev))
             as_of = ev.agg(F.max("ts").alias("as_of"))
             as_of.write.mode("overwrite").parquet(
                 os.path.join(out_dir, SUMMARY_ASOF_DIRNAME)
@@ -638,7 +635,7 @@ def optimize_layout(
             # Second-level window rollup (the A2 answer table): reading
             # the just-committed daily summary (compact) rather than
             # re-aggregating raw events.
-            sd = spark.read.parquet(os.path.join(out_dir, SUMMARY_DAILY_DIRNAME))
+            sd = spark.read.parquet(daily.path)
             asof_d_df = as_of.select(F.to_date("as_of").alias("as_of_d"))
             wpath = os.path.join(out_dir, SUMMARY_WINDOW_DIRNAME)
             (
@@ -656,155 +653,24 @@ def optimize_layout(
             write_summary_meta(spark, wpath, {"entity": "user_id"})
             fsutil.touch(spark, os.path.join(wpath, WINDOW_GATE))
 
-        _chains.append(("daily/window rollup", _ix_daily_window))
-
-    if tables is None or "events" in tables:
-
-        def _ix_merged():
-            ev = read_table(spark, out_dir, "events")
-            # §2.4 merged snapshot (the op_merge_snapshot answer table):
-            # one mergeable row per entity, bucketed like the window
-            # table so incremental folds rewrite only touched buckets
-            # (update_merged_summary). Every column is commutative op
-            # state, so serving is bit-identical to the raw one-pass fold.
-            from nerd_spark.operators.merge import snapshot_events
-
-            (
-                snapshot_events(ev, "user_id")
-                .withColumn("wb", _wbucket("user_id"))
-                .repartition("wb")
-                .write.mode("overwrite")
-                .partitionBy("wb")
-                .parquet(os.path.join(out_dir, SUMMARY_MERGED_DIRNAME))
+        def _ix_seed(spec):
+            # a fold's state of ALL events, written straight into the
+            # fresh dir. Merged snapshot (op_merge_snapshot), funnel /
+            # cohort per-user state (+ result caches) and the (type,
+            # entity) count table (+ totals, hh/top-k results) are the
+            # op_merge discipline: exact mergeable state, so the folds
+            # stay exact under out-of-order arrival. Raw dirs (and
+            # every oracle) recompute from events.
+            return spec.what, lambda: _seed(
+                spark, spec, spec.state(read_table(spark, out_dir, "events"))
             )
-            write_summary_meta(
-                spark,
-                os.path.join(out_dir, SUMMARY_MERGED_DIRNAME),
-                {"entity": "user_id"},
-            )
-
-        _chains.append(("merged snapshot", _ix_merged))
-
-    if tables is None or "events" in tables:
-
-        def _ix_funnel():
-            ev = read_table(spark, out_dir, "events")
-            # Funnel / cohort per-user state + resolved result caches (the
-            # op_merge discipline applied to event analytics): the state
-            # tables hold the exact mergeable per-user reduction — distinct
-            # (ts, stage) sets / (day set, per-type first day) — so ingest
-            # folds stay exact under out-of-order arrival; the result
-            # caches make the registered queries a tiny file read. Raw
-            # dirs (and every oracle) recompute from events.
-            from nerd_spark.operators.funnels import (
-                cohort_user_state,
-                funnel_user_state,
-                resolve_funnel_times,
-            )
-
-            fstages = list(FUNNEL_STAGES_DEFAULT)
-            fstate = resolve_funnel_times(
-                funnel_user_state(ev, fstages), fstages
-            )
-            fpath = os.path.join(out_dir, SUMMARY_FUNNEL_DIRNAME)
-            (
-                fstate.withColumn("wb", _wbucket("u"))
-                .repartition("wb")
-                .write.mode("overwrite")
-                .partitionBy("wb")
-                .parquet(fpath)
-            )
-            write_summary_meta(
-                spark, fpath, {"stages": fstages, "entity": "user_id"}
-            )
-            fsutil.touch(spark, os.path.join(fpath, "_SUCCESS"))
-            _write_funnel_result(
-                spark, out_dir, spark.read.parquet(fpath), fstages
-            )
-
-        _chains.append(("funnel state+result", _ix_funnel))
-
-    if tables is None or "events" in tables:
-
-        def _ix_cohort():
-            ev = read_table(spark, out_dir, "events")
-            from nerd_spark.operators.funnels import cohort_user_state
-
-            cstate = cohort_user_state(ev)
-            cpath = os.path.join(out_dir, SUMMARY_COHORT_DIRNAME)
-            (
-                cstate.withColumn("wb", _wbucket("u"))
-                .repartition("wb")
-                .write.mode("overwrite")
-                .partitionBy("wb")
-                .parquet(cpath)
-            )
-            write_summary_meta(spark, cpath, {"entity": "user_id"})
-            fsutil.touch(spark, os.path.join(cpath, "_SUCCESS"))
-            _write_cohort_result(spark, out_dir, spark.read.parquet(cpath))
-
-        _chains.append(("cohort state+result", _ix_cohort))
-
-    if tables is None or "events" in tables:
-
-        def _ix_bucketed():
-            # (type, entity) count table + entity totals: the hh / top-k
-            # sketch-spot serve tables (operators/sketches.py::
-            # *_from_counts) — the corpus pass the screen/plain paths pay
-            # per query happens once here; queries read O(pairs)/O(keys).
-            # user-bucketed sorted events: per-user ordered operators (the
-            # j5 as-of window, w4 last-N, sessionize) plan exchange-free
-            write_events_bucketed(spark, out_dir)
-
-        _chains.append(("bucketed events", _ix_bucketed))
-
-    if tables is None or "events" in tables:
 
         def _ix_topk():
-            ev = read_table(spark, out_dir, "events")
             # global top-k-by-value rows (the w1 serve table; exactly
             # mergeable for append-only events — update_topk_summary)
-            update_topk_summary(spark, out_dir, ev)
-
-        _chains.append(("topk values", _ix_topk))
-
-    if tables is None or "events" in tables:
-
-        def _ix_keycount():
-            ev = read_table(spark, out_dir, "events")
-            kpath = os.path.join(out_dir, SUMMARY_TYPE_USER_DIRNAME)
-            (
-                ev.groupBy(
-                    F.col("event_type").alias("et"),
-                    F.col("user_id").alias("u"),
-                )
-                .agg(F.count("*").alias("cnt"))
-                .withColumn("wb", _wbucket("u"))
-                .repartition("wb")
-                .write.mode("overwrite")
-                .partitionBy("wb")
-                .parquet(kpath)
+            update_topk_summary(
+                spark, out_dir, read_table(spark, out_dir, "events")
             )
-            write_summary_meta(
-                spark, kpath, {"entity": "user_id", "type_col": "event_type"}
-            )
-            fsutil.touch(spark, os.path.join(kpath, "_SUCCESS"))
-            tpath = os.path.join(out_dir, SUMMARY_USER_COUNTS_DIRNAME)
-            (
-                spark.read.parquet(kpath)
-                .groupBy("u")
-                .agg(F.sum("cnt").alias("cnt"))
-                .write.mode("overwrite")
-                .parquet(tpath)
-            )
-            fsutil.touch(spark, os.path.join(tpath, "_SUCCESS"))
-            # resolved hh/top-k answers for the registered bindings (the
-            # funnel-result discipline over the count tables just written)
-            _write_keycount_results(spark, out_dir)
-
-        _chains.append(("keycount tables+results", _ix_keycount))
-
-    if tables is None or "events" in tables:
 
         def _ix_valuehist():
             ev = read_table(spark, out_dir, "events")
@@ -814,15 +680,27 @@ def optimize_layout(
             # above (a continuous value domain keeps the GK bracket path:
             # there the histogram would BE the corpus). One corpus pass;
             # quantiles become cumulative-sum lookups over distinct values.
-            from nerd_spark.sources import colstats as _cs
-
-            nd_ev = _cs.distinct_upper_bound(ev, ["event_type", "value"])
+            nd_ev = colstats.distinct_upper_bound(ev, ["event_type", "value"])
             if nd_ev is not None and nd_ev * 1.25 <= VALUE_HIST_MAX_ROWS:
                 seed_value_hist(spark, out_dir, ev)
 
-
-
-        _chains.append(("value histogram", _ix_valuehist))
+        _chains += [
+            ("daily/window rollup", _ix_daily_window),
+            _ix_seed(
+                _merged_spec(os.path.join(out_dir, SUMMARY_MERGED_DIRNAME))
+            ),
+            _ix_seed(
+                _funnel_spec(spark, out_dir, list(FUNNEL_STAGES_DEFAULT))
+            ),
+            _ix_seed(_cohort_spec(spark, out_dir)),
+            # user-bucketed sorted events: per-user ordered operators
+            # (the j5 as-of window, w4 last-N, sessionize) plan
+            # exchange-free
+            ("bucketed events", lambda: write_events_bucketed(spark, out_dir)),
+            ("topk values", _ix_topk),
+            _ix_seed(_keycount_spec(spark, out_dir)),
+            ("value histogram", _ix_valuehist),
+        ]
 
     def _run_chain(item):
         name, fn = item
@@ -873,8 +751,8 @@ def update_daily_summary(
 
     The batch rolls up to (entity, d, cat) rows, merges additively
     with ONLY its touched date partitions, and swaps those partitions
-    in via the staged commit: cost is O(batch + touched-partition
-    rows), never O(summary history). Same bounded-touch guard as the
+    in (:func:`_fold`): cost is O(batch + touched-partition rows),
+    never O(summary history). Same bounded-touch guard as the
     fact-table merge (streaming/ingest.py::merge_facts): a batch
     spanning more dates than the acceptance window allows is a bug
     upstream, not a bigger rewrite.
@@ -883,75 +761,33 @@ def update_daily_summary(
     fold records applied ids in the dir's batch ledger and a replayed
     batch is skipped (see SUMMARY_LEDGER_NAME).
     """
+    _fold(
+        spark,
+        _daily_spec(summary_path, entity, max_touched_dates),
+        new_events,
+        batch_id,
+    )
+
+
+def _daily_spec(path: str, entity: str, max_touched: int | None = None):
     from nerd_spark.plans import derivations as D
 
-    _staged_swap_recover(spark, summary_path, "d")
-    if _fold_ledger_skip(spark, summary_path, batch_id):
-        return
-    batch = D.daily_rollup(new_events, entity)
-    dates = [r.d for r in batch.select("d").distinct().collect()]
-    if len(dates) > max_touched_dates:
-        raise ValueError(
-            f"update_daily_summary: batch touches {len(dates)} date "
-            f"partitions (> {max_touched_dates}); filter to the "
-            "acceptance window first (P10)"
-        )
-    from nerd_spark.sources import fsutil
-
-    # presence = any partition directory, NOT the root _SUCCESS marker:
-    # the gate is down during every commit window (and historically the
-    # dynamic-overwrite commit never wrote one — an _SUCCESS check here
-    # made every merge miss the existing rows and silently drop them on
-    # overlapping dates). Listed via the
-    # Hadoop FS API so a non-local summary path (hdfs://, s3a://)
-    # merges instead of silently overwriting from empty.
-    has_state = any(
-        f.startswith("d=") for f in fsutil.list_names(spark, summary_path)
-    )
-    # binding guard: a bare summary path carries no route back to its
-    # fact table, so a meta-less legacy/crash dir is STAMPED with this
-    # call's binding rather than rebuilt; a genuine mismatch raises.
-    verdict = _fold_binding(
-        spark, summary_path, {"entity": entity}, has_state,
+    return _FoldSpec(
         "update_daily_summary",
+        path,
+        "d",
+        state=lambda ev: D.daily_rollup(ev, entity),
+        merge=lambda old, new: new.unionByName(old)
+        .groupBy("entity", "d", "cat")
+        .agg(
+            F.sum("n").alias("n"),
+            # keep the store schema identical to daily_rollup's output
+            # (sum widens decimal precision; values stay exact)
+            F.sum("val_dec").cast("decimal(28,4)").alias("val_dec"),
+        ),
+        binding={"entity": entity},
+        max_touched=max_touched,
     )
-    if verdict == "rebuild":
-        _warn_metaless_adoption(
-            "update_daily_summary", summary_path, {"entity": entity}
-        )
-    if has_state:
-        existing = (
-            spark.read.parquet(summary_path)
-            .filter(F.col("d").isin(dates))
-            .select(batch.columns)
-        )
-        batch = batch.unionByName(existing)
-    merged = batch.groupBy("entity", "d", "cat").agg(
-        F.sum("n").alias("n"),
-        # keep the store schema identical to daily_rollup's output
-        # (sum widens decimal precision; values stay exact)
-        F.sum("val_dec").cast("decimal(28,4)").alias("val_dec"),
-    )
-    # Staging-rename commit (_staged_partition_commit): the merge plan
-    # reads the very partitions the commit replaces, so the merged
-    # rows are fully materialized into a staging dir BEFORE any live
-    # partition moves (the former in-place dynamic overwrite needed an
-    # eager localCheckpoint to not race its own input, and left the
-    # reader gate down for the whole write job). Readers gate on the
-    # root _SUCCESS marker: it is dropped only around the per-date
-    # directory swap, and a tear at any point leaves no marker —
-    # queries fall back to the raw-events scan, never serve corrupt
-    # partitions — with the staging copy intact.
-    success = os.path.join(summary_path, "_SUCCESS")
-    _staged_partition_commit(
-        spark, merged, summary_path, "d", batch_id=batch_id
-    )
-    write_summary_meta(spark, summary_path, {"entity": entity})
-    _fold_ledger_record(spark, summary_path, batch_id)
-    # restore the root marker so readers (queries/analytics._daily)
-    # recognize a stream-maintained summary
-    fsutil.touch(spark, success)
-    _staged_commit_finalize(spark, summary_path)
 
 
 def update_window_summary(
@@ -1001,7 +837,6 @@ def update_window_summary(
     import datetime as _dt
 
     from nerd_spark.plans import derivations as D
-    from nerd_spark.sources import fsutil
 
     # discard-only: the window's gate-down recovery is a full rebuild
     # that never reads the (possibly mixed) live state
@@ -1225,16 +1060,11 @@ def update_window_summary(
             )
         )
 
-    # same staging-rename commit discipline as update_daily_summary
-    # (_staged_partition_commit — no lineage cut needed; the gate-down
-    # window is the swap, not the write job). The reader gate
-    # (WINDOW_GATE — see its comment for why not _SUCCESS) stays down
-    # until the sidecar anchor is written, so a tear at ANY point
-    # leaves no gate and readers fall back to the raw recompute
-    # instead of serving mixed or stale-anchor state. touched=None is
-    # the day-roll whole-table rewrite: full=True also removes live
-    # buckets absent from the new state; otherwise only touched
-    # bucket dirs swap and untouched bucket files are not rewritten.
+    # The reader gate (WINDOW_GATE — see its comment for why not
+    # _SUCCESS) stays down until the sidecar anchor is written, so a
+    # tear at ANY point leaves no gate and readers fall back to the
+    # raw recompute. touched=None is the day-roll whole-table rewrite:
+    # full=True also removes live buckets absent from the new state.
     merged = _with_rep_columns(merged).withColumn("wb", _wbucket())
     success = os.path.join(window_path, WINDOW_GATE)
     _staged_partition_commit(
@@ -1265,52 +1095,23 @@ def update_merged_summary(
     batch's snapshot state into the table with the op algebra
     (operators/merge.py::merge_snapshots) and rewrite ONLY the entity
     buckets the batch touches — cost O(batch + touched-bucket rows),
-    never O(entities). Same commit discipline as the daily summary
-    (staging-rename via _staged_partition_commit): readers gate on a
-    root _SUCCESS that is down only for the partition swap and
-    re-touched after the ledger write (torn swap -> no gate ->
-    raw-recompute fallback, staging copy intact)."""
-    from nerd_spark.operators.merge import merge_snapshots, snapshot_events
-    from nerd_spark.sources import fsutil
+    never O(entities)."""
+    _fold(spark, _merged_spec(summary_path, entity), new_events, batch_id)
 
-    _staged_swap_recover(spark, summary_path, "wb")
-    if _fold_ledger_skip(spark, summary_path, batch_id):
-        return
-    bs = snapshot_events(new_events, entity).withColumn(
-        "wb", _wbucket(entity)
-    )
-    has_state = any(
-        f.startswith("wb=") for f in fsutil.list_names(spark, summary_path)
-    )
-    # stamp-on-missing: no data_dir route back to the fact table here
-    verdict = _fold_binding(
-        spark, summary_path, {"entity": entity}, has_state,
+
+def _merged_spec(path: str, entity: str = "user_id"):
+    from nerd_spark.operators.merge import merge_snapshots, snapshot_events
+
+    return _FoldSpec(
         "update_merged_summary",
-    )
-    if verdict == "rebuild":
-        _warn_metaless_adoption(
-            "update_merged_summary", summary_path, {"entity": entity}
-        )
-    if has_state:
-        touched = [r.wb for r in bs.select("wb").distinct().collect()]
-        old = (
-            spark.read.parquet(summary_path)
-            .filter(F.col("wb").isin(touched))  # partition-pruned scan
-            .drop("wb")
-        )
-        merged = merge_snapshots(old, bs.drop("wb"), entity).withColumn(
+        path,
+        "wb",
+        state=lambda ev: snapshot_events(ev, entity).withColumn(
             "wb", _wbucket(entity)
-        )
-    else:
-        merged = bs
-    success = os.path.join(summary_path, "_SUCCESS")
-    _staged_partition_commit(
-        spark, merged, summary_path, "wb", batch_id=batch_id
+        ),
+        merge=_bucketed(lambda o, n: merge_snapshots(o, n, entity), entity),
+        binding={"entity": entity},
     )
-    write_summary_meta(spark, summary_path, {"entity": entity})
-    _fold_ledger_record(spark, summary_path, batch_id)
-    fsutil.touch(spark, success)
-    _staged_commit_finalize(spark, summary_path)
 
 
 def write_summary_meta(spark: SparkSession, dirpath: str, meta: dict) -> None:
@@ -1318,20 +1119,12 @@ def write_summary_meta(spark: SparkSession, dirpath: str, meta: dict) -> None:
     the _SUCCESS gate is (re)touched so a reader that sees the gate
     also sees the binding; a gate-passing dir with missing/mismatched
     meta falls back instead of serving wrong parameters."""
-    import json
-
-    from nerd_spark.sources import fsutil
-
     fsutil.write_text(
         spark, os.path.join(dirpath, SUMMARY_META_NAME), json.dumps(meta)
     )
 
 
 def read_summary_meta(spark: SparkSession, dirpath: str) -> dict | None:
-    import json
-
-    from nerd_spark.sources import fsutil
-
     txt = fsutil.read_text(spark, os.path.join(dirpath, SUMMARY_META_NAME))
     if txt is None:
         return None
@@ -1361,10 +1154,6 @@ _LEDGER_KEEP = 256
 
 
 def _ledger_ids(spark: SparkSession, dirpath: str) -> list[str]:
-    import json
-
-    from nerd_spark.sources import fsutil
-
     txt = fsutil.read_text(spark, os.path.join(dirpath, SUMMARY_LEDGER_NAME))
     if txt is None:
         return []
@@ -1385,8 +1174,6 @@ def _fold_ledger_skip(
     ``dirpath`` (skip the fold). Re-touches a gate the previous run
     dropped between ledger write and touch — the data write had
     already completed by ledger time."""
-    from nerd_spark.sources import fsutil
-
     if batch_id is None or batch_id not in _ledger_ids(spark, dirpath):
         return False
     gate = os.path.join(dirpath, marker)
@@ -1398,10 +1185,6 @@ def _fold_ledger_skip(
 def _fold_ledger_record(
     spark: SparkSession, dirpath: str, batch_id: str | None
 ) -> None:
-    import json
-
-    from nerd_spark.sources import fsutil
-
     if batch_id is None:
         return
     ids = [i for i in _ledger_ids(spark, dirpath) if i != batch_id]
@@ -1461,10 +1244,6 @@ def _staged_swap_recover(
     their designed no-gate -> rebuild path authoritative. Resume also
     assumes touched-partition commits (``full=False``) — the only
     ``full`` caller is the window summary, which discards."""
-    import json
-
-    from nerd_spark.sources import fsutil
-
     staging = table_path.rstrip("/") + ".staging"
     if not fsutil.exists(spark, staging):
         return
@@ -1498,7 +1277,7 @@ def _staged_partition_commit(
     gate_name: str = "_SUCCESS",
     full: bool = False,
     batch_id: str | None = None,
-) -> None:
+) -> list[str]:
     """Commit ``merged`` — the rewritten rows of its touched
     ``part_col`` partitions (the WHOLE table when ``full``) — into the
     partitioned summary at ``table_path`` with the staging-rename
@@ -1525,8 +1304,8 @@ def _staged_partition_commit(
     staging (the whole-table-rewrite case). The caller re-touches the
     gate after its sidecar/ledger writes, exactly as before. Object
     stores without atomic rename (raw S3) want an ACID table format
-    (Delta/Iceberg) here instead — same note as merge_facts."""
-    from nerd_spark.sources import fsutil
+    (Delta/Iceberg) here instead — same note as merge_facts. Returns
+    the staged partition names."""
 
     def must(ok: bool, what: str, path: str) -> None:
         # Hadoop rename/delete report failures by returning false —
@@ -1535,8 +1314,6 @@ def _staged_partition_commit(
             raise IOError(
                 f"_staged_partition_commit: failed to {what}: {path}"
             )
-
-    import json
 
     staging = table_path.rstrip("/") + ".staging"
     fsutil.delete(spark, staging, recursive=True)
@@ -1583,6 +1360,7 @@ def _staged_partition_commit(
     # after the swap but before the ledger write would replay into a
     # state that already holds the batch and double-count it (caught
     # by the tear-point sweep test at exactly that boundary).
+    return staged
 
 
 def _fold_binding(
@@ -1591,6 +1369,7 @@ def _fold_binding(
     binding: dict,
     has_state: bool,
     what: str,
+    lenient: tuple[str, ...] = (),
 ) -> str:
     """Parameter-binding guard for the additive folds (the funnel
     stage-binding discipline generalized): each fold stamps its
@@ -1606,19 +1385,21 @@ def _fold_binding(
     unknowable, so the caller rebuilds the state from the fact table
     for ITS binding where the table is reachable, or stamps when it
     is not), or raises on a genuine mismatch (a caller error, never a
-    crash artifact — crashes lose the meta, they do not rewrite it)."""
+    crash artifact — crashes lose the meta, they do not rewrite it).
+    Keys in ``lenient`` may be absent from a legacy meta written
+    before they were bound."""
     if not has_state:
         return "fold"
     prev = read_summary_meta(spark, state_path)
     if prev is None:
         return "rebuild"
     for k, v in binding.items():
-        if prev.get(k) != v:
+        if prev.get(k) != v and not (k in lenient and prev.get(k) is None):
+            bound = " / ".join(f"{b}={prev.get(b)!r}" for b in binding)
             raise ValueError(
                 f"{what}: existing state at {state_path} is bound to "
-                f"{ {k: prev.get(k) for k in binding} !r}, cannot fold "
-                f"a batch at {binding!r} into it — rebuild from raw "
-                "events instead"
+                f"{bound}, cannot fold a batch at {binding!r} into it — "
+                "rebuild from raw events instead"
             )
     return "fold"
 
@@ -1652,11 +1433,175 @@ def _staged_commit_finalize(spark: SparkSession, table_path: str) -> None:
     """Drop the staging dir of a fully-committed staged fold — call
     ONLY after the ledger record and gate touch. From this point the
     ledger alone carries the batch's applied-ness."""
-    from nerd_spark.sources import fsutil
-
     fsutil.delete(
         spark, table_path.rstrip("/") + ".staging", recursive=True
     )
+
+
+@dataclass(frozen=True)
+class _FoldSpec:
+    """One partitioned serve table as the fold driver sees it: what
+    its state is and how two states merge — the state-of(batch) +
+    merge(old, new) split of incremental maintenance. ``state`` maps
+    events to state rows carrying ``part_col``; ``merge`` folds the
+    batch's rows into the live rows of the partitions they touch.
+    The layout seed (:func:`_seed`) and every fold share them."""
+
+    what: str  # the public fold, named in errors and warnings
+    path: str
+    part_col: str
+    state: Callable
+    merge: Callable
+    binding: dict  # stamped into the meta sidecar, checked per fold
+    # meta-less state: rebuild from this dir's events; None = adopt it
+    # under the caller's binding, with a warning
+    events_dir: str | None = None
+    deps: Callable | None = None  # rewrites tables derived from state
+    deps_marker: str | None = None  # a dependent's commit marker
+    lenient: tuple[str, ...] = ()
+    # the table exists only where a seed certified it: an absent dir
+    # is a no-op, a partition-less one the seed's schema-only marker
+    seeded_only: bool = False
+    max_touched: int | None = None
+
+
+def _bucketed(merge: Callable, key: str) -> Callable:
+    """Lift a state merge over the ``wb`` bucket column."""
+    return lambda old, new: merge(old.drop("wb"), new.drop("wb")).withColumn(
+        "wb", _wbucket(key)
+    )
+
+
+def _sum_counts(key: str) -> Callable:
+    """Merge of additive (et, key, cnt) count tables."""
+    return _bucketed(
+        lambda o, n: o.unionByName(n)
+        .groupBy("et", key)
+        .agg(F.sum("cnt").alias("cnt")),
+        key,
+    )
+
+
+def _fold(spark: SparkSession, spec: _FoldSpec, new_events, batch_id) -> None:
+    """Fold one batch into the partitioned serve table of ``spec``.
+    The commit sequence, shared by every partitioned fold:
+
+    1. recover a torn staged swap (:func:`_staged_swap_recover`);
+    2. ledger skip: a batch already in the dir's ledger returns after
+       re-touching a gate dropped between ledger write and touch, and
+       re-running the dependents whose commit marker predates the
+       state's (a tear between the state commit and their writes);
+    3. state of the batch, and the partitions it touches;
+    4. binding check (:func:`_fold_binding`): meta-less state is
+       rebuilt from the dir's events, or adopted with a warning when
+       the table has no route back to them;
+    5. merge the batch into ONLY the touched live partitions;
+    6. staged commit (:func:`_staged_partition_commit`): the merged
+       rows are fully written to a staging dir BEFORE any live
+       partition moves — the merge plan reads the very partitions the
+       commit replaces — and the root ``_SUCCESS`` reader gate is down
+       only around the directory swap. A tear anywhere leaves no gate
+       (queries fall back to the raw-events scan, never serve corrupt
+       partitions) plus the staging copy for step 1;
+    7. meta sidecar, ledger record, gate touch, staging finalize;
+    8. dependents (result caches, projections) from the committed
+       state.
+
+    A table with no partitions never gets a gate: readers cannot infer
+    a schema from it. With no state and an empty batch the fold only
+    records the ledger id."""
+    path, part = spec.path, spec.part_col
+    gate = os.path.join(path, "_SUCCESS")
+
+    def has_parts() -> bool:
+        # state presence = any partition dir, NOT the gate: the gate is
+        # down during every commit window, and a merge that missed the
+        # existing rows would drop them on overlapping partitions
+        return any(
+            n.startswith(part + "=") for n in fsutil.list_names(spark, path)
+        )
+
+    _staged_swap_recover(spark, path, part)
+    if spec.seeded_only and not fsutil.exists(spark, path):
+        return
+    if batch_id is not None and batch_id in _ledger_ids(spark, path):
+        if has_parts():
+            if not fsutil.exists(spark, gate):
+                fsutil.touch(spark, gate)
+            if spec.deps is not None:
+                try:
+                    stale = not fsutil.exists(spark, spec.deps_marker) or (
+                        fsutil.mtime(spark, spec.deps_marker)
+                        < fsutil.mtime(spark, gate)
+                    )
+                except Py4JJavaError:  # a marker deleted meanwhile
+                    stale = True
+                if stale:
+                    spec.deps()
+        return
+    bs = spec.state(new_events)
+    touched = [r[0] for r in bs.select(part).distinct().collect()]
+    if spec.max_touched is not None and len(touched) > spec.max_touched:
+        raise ValueError(
+            f"{spec.what}: batch touches {len(touched)} {part} "
+            f"partitions (> {spec.max_touched}); filter to the "
+            "acceptance window first (P10)"
+        )
+    have = has_parts()
+    verdict = _fold_binding(
+        spark,
+        path,
+        spec.binding,
+        have or spec.seeded_only,  # the seed marker's meta binds too
+        spec.what,
+        spec.lenient,
+    )
+    if verdict == "rebuild" and spec.events_dir is None:
+        _warn_metaless_adoption(spec.what, path, spec.binding)
+    elif verdict == "rebuild":
+        from nerd_spark.session import read_table
+
+        bs = spec.state(read_table(spark, spec.events_dir, "events"))
+        have = False
+    elif not have and not touched:
+        _fold_ledger_record(spark, path, batch_id)
+        return
+    merged = bs
+    if not have:
+        # no partitions to merge with: clear what the dir holds (state
+        # of unknown binding, a schema-only seed marker, a ledger of
+        # empty batches) before the first partitioned build
+        fsutil.delete(spark, path, recursive=True)
+    else:
+        old = (
+            spark.read.parquet(path)
+            .filter(F.col(part).isin(touched))  # partition-pruned scan
+            .select(bs.columns)
+        )
+        merged = spec.merge(old, bs)
+    staged = _staged_partition_commit(
+        spark, merged, path, part, batch_id=batch_id
+    )
+    write_summary_meta(spark, path, spec.binding)
+    _fold_ledger_record(spark, path, batch_id)
+    if have or staged:
+        fsutil.touch(spark, gate)
+    _staged_commit_finalize(spark, path)
+    if (have or staged) and spec.deps is not None:
+        spec.deps()
+
+
+def _seed(spark: SparkSession, spec: _FoldSpec, rows, partitioned=True) -> None:
+    """Layout-time build of ``spec``'s table from its state ``rows``,
+    written straight into the fresh dir: no staging, no ledger."""
+    w = rows.write
+    if partitioned:
+        w = rows.repartition(spec.part_col).write.partitionBy(spec.part_col)
+    w.mode("overwrite").parquet(spec.path)
+    write_summary_meta(spark, spec.path, spec.binding)
+    fsutil.touch(spark, os.path.join(spec.path, "_SUCCESS"))
+    if spec.deps is not None:
+        spec.deps()
 
 
 def _write_funnel_result(
@@ -1666,7 +1611,6 @@ def _write_funnel_result(
     the per-user state — the q1-partials discipline taken to its
     limit: the registered query becomes a 3-row file read."""
     from nerd_spark.operators.funnels import funnel_rows_from_times
-    from nerd_spark.sources import fsutil
 
     out = os.path.join(data_dir, SUMMARY_FUNNEL_RESULT_DIRNAME)
     res = funnel_rows_from_times(state, stages).localCheckpoint()
@@ -1682,7 +1626,6 @@ def _write_cohort_result(spark: SparkSession, data_dir: str, state) -> None:
         cohort_state_to_per_user,
         retention_from_per_user,
     )
-    from nerd_spark.sources import fsutil
 
     out = os.path.join(data_dir, SUMMARY_COHORT_RESULT_DIRNAME)
     res = retention_from_per_user(
@@ -1710,97 +1653,47 @@ def update_keycount_summaries(
     entity buckets; null types/entities are KEPT in the table (true
     grain counts) and each serve path applies its own null contract.
     The totals table re-derives from the committed pair table (one
-    O(pairs) pass), so the two can never disagree. On a ledger skip
-    (replayed batch) the totals still re-derive when their commit
-    predates the pair table's — healing a tear between the two
-    writes."""
-    from nerd_spark.sources import fsutil
+    O(pairs) pass), so the two can never disagree."""
+    _fold(
+        spark,
+        _keycount_spec(spark, data_dir, entity, type_col),
+        new_events,
+        batch_id,
+    )
 
+
+def _keycount_spec(
+    spark: SparkSession,
+    data_dir: str,
+    entity: str = "user_id",
+    type_col: str = "event_type",
+):
     pair_path = os.path.join(data_dir, SUMMARY_TYPE_USER_DIRNAME)
     tot_path = os.path.join(data_dir, SUMMARY_USER_COUNTS_DIRNAME)
-    _staged_swap_recover(spark, pair_path, "wb")
-    if _fold_ledger_skip(spark, pair_path, batch_id):
-        tot_success = os.path.join(tot_path, "_SUCCESS")
-        try:
-            stale_tot = not fsutil.exists(spark, tot_success) or (
-                fsutil.mtime(spark, tot_success)
-                < fsutil.mtime(spark, os.path.join(pair_path, "_SUCCESS"))
-            )
-        except Exception:
-            stale_tot = True
-        if stale_tot:
-            _rederive_keycount_totals(spark, pair_path, tot_path)
-            _write_keycount_results(
-                spark, data_dir, entity=entity, type_col=type_col
-            )
-        return
-    bs = (
-        new_events.groupBy(
+
+    def deps():
+        spark.read.parquet(pair_path).groupBy("u").agg(
+            F.sum("cnt").alias("cnt")
+        ).write.mode("overwrite").parquet(tot_path)
+        fsutil.touch(spark, os.path.join(tot_path, "_SUCCESS"))
+        # resolved hh/top-k answers for the registered bindings
+        _write_keycount_results(spark, data_dir, entity, type_col)
+
+    return _FoldSpec(
+        "update_keycount_summaries",
+        pair_path,
+        "wb",
+        state=lambda ev: ev.groupBy(
             F.col(type_col).alias("et"), F.col(entity).alias("u")
         )
         .agg(F.count("*").alias("cnt"))
-        .withColumn("wb", _wbucket("u"))
+        .withColumn("wb", _wbucket("u")),
+        merge=_sum_counts("u"),
+        binding={"entity": entity, "type_col": type_col},
+        events_dir=data_dir,
+        deps=deps,
+        deps_marker=os.path.join(tot_path, "_SUCCESS"),
     )
-    has_state = any(
-        f.startswith("wb=") for f in fsutil.list_names(spark, pair_path)
-    )
-    binding = {"entity": entity, "type_col": type_col}
-    verdict = _fold_binding(
-        spark, pair_path, binding, has_state, "update_keycount_summaries"
-    )
-    if verdict == "rebuild":
-        # meta-less state (crash artifact / pre-binding dir): counts
-        # are exactly recoverable from the fact table — rebuild for
-        # THIS binding instead of merging into unknown semantics
-        from nerd_spark.session import read_table
-
-        merged = (
-            read_table(spark, data_dir, "events")
-            .groupBy(F.col(type_col).alias("et"), F.col(entity).alias("u"))
-            .agg(F.count("*").alias("cnt"))
-            .withColumn("wb", _wbucket("u"))
-        )
-        fsutil.delete(spark, pair_path, recursive=True)
-    elif has_state:
-        touched = [r.wb for r in bs.select("wb").distinct().collect()]
-        old = (
-            spark.read.parquet(pair_path)
-            .filter(F.col("wb").isin(touched))  # partition-pruned scan
-            .drop("wb")
-        )
-        merged = (
-            old.unionByName(bs.drop("wb"))
-            .groupBy("et", "u")
-            .agg(F.sum("cnt").alias("cnt"))
-            .withColumn("wb", _wbucket("u"))
-        )
-    else:
-        merged = bs
-    success = os.path.join(pair_path, "_SUCCESS")
-    _staged_partition_commit(
-        spark, merged, pair_path, "wb", batch_id=batch_id
-    )
-    write_summary_meta(spark, pair_path, binding)
-    _fold_ledger_record(spark, pair_path, batch_id)
-    fsutil.touch(spark, success)
-    _staged_commit_finalize(spark, pair_path)
-    _rederive_keycount_totals(spark, pair_path, tot_path)
-    _write_keycount_results(spark, data_dir, entity=entity, type_col=type_col)
-
-
-def _rederive_keycount_totals(
-    spark: SparkSession, pair_path: str, tot_path: str
-) -> None:
-    from nerd_spark.sources import fsutil
-
-    tot = (
-        spark.read.parquet(pair_path)
-        .groupBy("u")
-        .agg(F.sum("cnt").alias("cnt"))
-        .localCheckpoint()
-    )
-    tot.write.mode("overwrite").parquet(tot_path)
-    fsutil.touch(spark, os.path.join(tot_path, "_SUCCESS"))
 
 
 def _write_keycount_results(
@@ -1819,7 +1712,6 @@ def _write_keycount_results(
     parameters, falls through to the count-table tier (exact for any
     binding)."""
     from nerd_spark.operators import sketches as SK
-    from nerd_spark.sources import fsutil
 
     tot = spark.read.parquet(
         os.path.join(data_dir, SUMMARY_USER_COUNTS_DIRNAME)
@@ -1886,32 +1778,6 @@ def _write_keycount_results(
     fsutil.touch(spark, os.path.join(out, "_SUCCESS"))
 
 
-def _value_hist_batch(new_events, type_col: str, value_col: str):
-    return (
-        new_events.filter(F.col(value_col).isNotNull())
-        .groupBy(
-            F.col(type_col).alias("et"), F.col(value_col).alias("v")
-        )
-        .agg(F.count("*").alias("cnt"))
-        .withColumn("wb", _wbucket("v"))
-    )
-
-
-def _rederive_value_counts(
-    spark: SparkSession, hist_path: str, counts_path: str
-) -> None:
-    from nerd_spark.sources import fsutil
-
-    vc = (
-        spark.read.parquet(hist_path)
-        .groupBy("v")
-        .agg(F.sum("cnt").alias("cnt"))
-        .localCheckpoint()
-    )
-    vc.write.mode("overwrite").parquet(counts_path)
-    fsutil.touch(spark, os.path.join(counts_path, "_SUCCESS"))
-
-
 def _write_quantile_results(spark: SparkSession, data_dir: str) -> None:
     """Resolve the registered quantile bindings from the committed
     histogram tables into meta-bound result caches (|probs| rows and
@@ -1920,7 +1786,6 @@ def _write_quantile_results(spark: SparkSession, data_dir: str) -> None:
     read files. Non-default probs fall through to the histogram tier,
     which resolves ANY binding exactly."""
     from nerd_spark.operators import sketches as SK
-    from nerd_spark.sources import fsutil
 
     counts = spark.read.parquet(
         os.path.join(data_dir, SUMMARY_VALUE_COUNTS_DIRNAME)
@@ -1948,6 +1813,52 @@ def _write_quantile_results(spark: SparkSession, data_dir: str) -> None:
     fsutil.touch(spark, os.path.join(out_by, "_SUCCESS"))
 
 
+def _value_hist_spec(
+    spark: SparkSession,
+    data_dir: str,
+    type_col: str = "event_type",
+    value_col: str = "value",
+    max_rows: int | None = None,
+):
+    hist_path = os.path.join(data_dir, SUMMARY_VALUE_HIST_DIRNAME)
+    counts_path = os.path.join(data_dir, SUMMARY_VALUE_COUNTS_DIRNAME)
+
+    def deps():
+        # growth guard (folds only): parquet count(*) is footer-only
+        if max_rows is not None and (
+            spark.read.parquet(hist_path).count() > max_rows
+        ):
+            for p in (
+                hist_path,
+                counts_path,
+                os.path.join(data_dir, SUMMARY_QUANTILE_RESULT_DIRNAME),
+                os.path.join(data_dir, SUMMARY_QUANTILE_BY_RESULT_DIRNAME),
+            ):
+                fsutil.delete(spark, p, recursive=True)
+            return
+        spark.read.parquet(hist_path).groupBy("v").agg(
+            F.sum("cnt").alias("cnt")
+        ).write.mode("overwrite").parquet(counts_path)
+        fsutil.touch(spark, os.path.join(counts_path, "_SUCCESS"))
+        _write_quantile_results(spark, data_dir)
+
+    return _FoldSpec(
+        "update_value_hist_summary",
+        hist_path,
+        "wb",
+        state=lambda ev: ev.filter(F.col(value_col).isNotNull())
+        .groupBy(F.col(type_col).alias("et"), F.col(value_col).alias("v"))
+        .agg(F.count("*").alias("cnt"))
+        .withColumn("wb", _wbucket("v")),
+        merge=_sum_counts("v"),
+        binding={"type_col": type_col, "value_col": value_col},
+        events_dir=data_dir,
+        deps=deps,
+        deps_marker=os.path.join(counts_path, "_SUCCESS"),
+        seeded_only=True,
+    )
+
+
 def seed_value_hist(
     spark: SparkSession,
     data_dir: str,
@@ -1960,37 +1871,19 @@ def seed_value_hist(
     events table). No bounded-domain gate here — callers certify
     (optimize_layout checks the colstats sidecar; tests and the
     serve-path demo query seed knowingly-bounded frames)."""
-    from nerd_spark.sources import fsutil
-
     if events is None:
         from nerd_spark.session import read_table
 
         events = read_table(spark, data_dir, "events")
-    vhpath = os.path.join(data_dir, SUMMARY_VALUE_HIST_DIRNAME)
-    bs = _value_hist_batch(events, type_col, value_col).localCheckpoint()
-    if bs.limit(1).count() == 0:
-        # degenerate all-null-value corpus: a partitioned write of an
-        # empty frame leaves an unreadable dir (no partition files to
-        # infer from — hypothesis-caught). Write the schema'd empty
-        # frame unpartitioned: projections/results derive to empty
-        # (matching the reference: no values, no quantiles) and the
-        # fold treats the dir as unseeded until a real re-seed.
-        bs.write.mode("overwrite").parquet(vhpath)
-    else:
-        (
-            bs.repartition("wb")
-            .write.mode("overwrite")
-            .partitionBy("wb")
-            .parquet(vhpath)
-        )
-    write_summary_meta(
-        spark, vhpath, {"type_col": type_col, "value_col": value_col}
-    )
-    fsutil.touch(spark, os.path.join(vhpath, "_SUCCESS"))
-    _rederive_value_counts(
-        spark, vhpath, os.path.join(data_dir, SUMMARY_VALUE_COUNTS_DIRNAME)
-    )
-    _write_quantile_results(spark, data_dir)
+    spec = _value_hist_spec(spark, data_dir, type_col, value_col)
+    rows = spec.state(events).localCheckpoint()
+    # a degenerate all-null-value corpus is written unpartitioned: a
+    # partitioned write of an empty frame leaves an unreadable dir (no
+    # partition files to infer from — hypothesis-caught). Projections
+    # and results derive to empty (matching the reference: no values,
+    # no quantiles), and the fold replaces this schema-only marker
+    # with the first real partitioned build.
+    _seed(spark, spec, rows, partitioned=rows.limit(1).count() > 0)
 
 
 def update_value_hist_summary(
@@ -2019,104 +1912,12 @@ def update_value_hist_summary(
     had never been certified. Null event_type rows are KEPT (the
     per-group quantile contract groups nulls); null values are
     excluded (quantiles are over non-null values)."""
-    from nerd_spark.sources import fsutil
-
-    hist_path = os.path.join(data_dir, SUMMARY_VALUE_HIST_DIRNAME)
-    counts_path = os.path.join(data_dir, SUMMARY_VALUE_COUNTS_DIRNAME)
-    _staged_swap_recover(spark, hist_path, "wb")
-    # never-seeded = dir ABSENT (no bounded-domain certificate, or the
-    # growth guard deleted it). A dir that exists but has no wb=
-    # partitions is the degenerate all-null-value SEED's schema-only
-    # marker — that one IS seeded, and the fold below replaces it with
-    # the first real partitioned build (hypothesis caught the earlier
-    # treat-as-unseeded behavior: the seed's empty result caches kept
-    # serving while folded values were silently dropped).
-    if not fsutil.exists(spark, hist_path):
-        return
-    if _fold_ledger_skip(spark, hist_path, batch_id):
-        c_success = os.path.join(counts_path, "_SUCCESS")
-        try:
-            stale = not fsutil.exists(spark, c_success) or (
-                fsutil.mtime(spark, c_success)
-                < fsutil.mtime(spark, os.path.join(hist_path, "_SUCCESS"))
-            )
-        except Exception:
-            stale = True
-        if stale:
-            _rederive_value_counts(spark, hist_path, counts_path)
-            _write_quantile_results(spark, data_dir)
-        return
-    bs = _value_hist_batch(new_events, type_col, value_col)
-    touched = [r.wb for r in bs.select("wb").distinct().collect()]
-    if not touched:  # batch carries no non-null values: state already exact
-        _fold_ledger_record(spark, hist_path, batch_id)
-        return
-    binding = {"type_col": type_col, "value_col": value_col}
-    verdict = _fold_binding(
+    _fold(
         spark,
-        hist_path,
-        binding,
-        # the schema-only all-null-seed marker counts as state for the
-        # binding guard too: its meta records what the seed measured
-        True,
-        "update_value_hist_summary",
+        _value_hist_spec(spark, data_dir, type_col, value_col, max_rows),
+        new_events,
+        batch_id,
     )
-    if verdict == "rebuild":
-        # meta-less state: reseed from the fact table for THIS binding
-        # (the dir's existence is the bounded-domain certificate; the
-        # growth guard below still bounds the result)
-        from nerd_spark.session import read_table
-
-        merged = _value_hist_batch(
-            read_table(spark, data_dir, "events"), type_col, value_col
-        )
-        fsutil.delete(spark, hist_path, recursive=True)
-    elif any(
-        f.startswith("wb=") for f in fsutil.list_names(spark, hist_path)
-    ):
-        old = (
-            spark.read.parquet(hist_path)
-            .filter(F.col("wb").isin(touched))  # partition-pruned scan
-            .drop("wb")
-        )
-        merged = (
-            old.unionByName(bs.drop("wb"))
-            .groupBy("et", "v")
-            .agg(F.sum("cnt").alias("cnt"))
-            .withColumn("wb", _wbucket("v"))
-        )
-    else:
-        # seeded-empty: replace the schema-only marker with the first
-        # real partitioned build (root-level marker files cannot
-        # coexist with partition dirs for readers; the ledger holds at
-        # most value-less batches, harmless to forget)
-        fsutil.delete(spark, hist_path, recursive=True)
-        merged = bs
-    success = os.path.join(hist_path, "_SUCCESS")
-    _staged_partition_commit(
-        spark, merged, hist_path, "wb", batch_id=batch_id
-    )
-    write_summary_meta(spark, hist_path, binding)
-    # growth guard: parquet count(*) is footer-only — cheap
-    if spark.read.parquet(hist_path).count() > max_rows:
-        # drop the staging leftovers FIRST: a surviving manifest would
-        # make the next fold's recovery resurrect the deleted tables
-        _staged_commit_finalize(spark, hist_path)
-        fsutil.delete(spark, hist_path, recursive=True)
-        fsutil.delete(spark, counts_path, recursive=True)
-        for rd in (
-            SUMMARY_QUANTILE_RESULT_DIRNAME,
-            SUMMARY_QUANTILE_BY_RESULT_DIRNAME,
-        ):
-            fsutil.delete(
-                spark, os.path.join(data_dir, rd), recursive=True
-            )
-        return
-    _fold_ledger_record(spark, hist_path, batch_id)
-    fsutil.touch(spark, success)
-    _staged_commit_finalize(spark, hist_path)
-    _rederive_value_counts(spark, hist_path, counts_path)
-    _write_quantile_results(spark, data_dir)
 
 
 def _topk_value(df, k: int):
@@ -2149,8 +1950,6 @@ def update_topk_summary(
     Deletions/retention rewrites bump the events dir mtime past the
     commit and the gate falls back to the raw TakeOrderedAndProject
     (exact, just a corpus scan)."""
-    from nerd_spark.sources import fsutil
-
     out = os.path.join(data_dir, SUMMARY_TOPK_VALUE_DIRNAME)
     if _fold_ledger_skip(spark, out, batch_id):
         return
@@ -2205,8 +2004,7 @@ def update_funnel_summary(
     event lowers t1 and re-qualifies stage-2 timestamps, so scalar
     t_i states cannot fold; operators/funnels.py::funnel_user_state)
     and rewrite ONLY touched entity buckets. Resolved t1..tk columns
-    are recomputed row-locally on the rewritten buckets. Commit
-    discipline: update_merged_summary's drop/touch _SUCCESS gate.
+    are recomputed row-locally on the rewritten buckets.
 
     The existing state's meta sidecar BINDS the stage list: the state
     only retains (ts, stage) pairs for its recorded stage types, so
@@ -2215,108 +2013,54 @@ def update_funnel_summary(
     (r11 advisor). A stage mismatch against existing state raises —
     rebuild the state from the full events table (optimize_layout or
     a fresh dir) instead of folding across bindings."""
+    stages = list(stages or FUNNEL_STAGES_DEFAULT)
+    _fold(
+        spark, _funnel_spec(spark, data_dir, stages, entity), new_events, batch_id
+    )
+
+
+def _funnel_spec(
+    spark: SparkSession, data_dir: str, stages: list[str], entity="user_id"
+):
     from nerd_spark.operators.funnels import (
         funnel_user_state,
         merge_funnel_state,
         resolve_funnel_times,
     )
-    from nerd_spark.sources import fsutil
 
-    stages = list(stages or FUNNEL_STAGES_DEFAULT)
-    summary_path = os.path.join(data_dir, SUMMARY_FUNNEL_DIRNAME)
-    _staged_swap_recover(spark, summary_path, "wb")
-    if _fold_ledger_skip(spark, summary_path, batch_id):
-        # heal the dependent result cache if a previous run tore
-        # between the state commit and the result write (the state's
-        # meta binding is intact on the skip path by construction)
-        res_success = os.path.join(
+    path = os.path.join(data_dir, SUMMARY_FUNNEL_DIRNAME)
+
+    def merge(old, new):
+        return resolve_funnel_times(
+            merge_funnel_state(
+                old.select("u", "st_arr"), new.select("u", "st_arr")
+            ),
+            stages,
+        )
+
+    def deps():
+        # the state's own binding: a ledger-skip heal may be called
+        # with other stages than the ones the state holds
+        bound = (read_summary_meta(spark, path) or {}).get("stages")
+        _write_funnel_result(
+            spark, data_dir, spark.read.parquet(path), list(bound or stages)
+        )
+
+    return _FoldSpec(
+        "update_funnel_summary",
+        path,
+        "wb",
+        state=lambda ev: resolve_funnel_times(
+            funnel_user_state(ev, stages, user_col=entity), stages
+        ).withColumn("wb", _wbucket("u")),
+        merge=_bucketed(merge, "u"),
+        binding={"stages": stages, "entity": entity},
+        events_dir=data_dir,
+        deps=deps,
+        deps_marker=os.path.join(
             data_dir, SUMMARY_FUNNEL_RESULT_DIRNAME, "_SUCCESS"
-        )
-        try:
-            stale_res = not fsutil.exists(spark, res_success) or (
-                fsutil.mtime(spark, res_success)
-                < fsutil.mtime(spark, os.path.join(summary_path, "_SUCCESS"))
-            )
-        except Exception:
-            stale_res = True
-        if stale_res:
-            prev = read_summary_meta(spark, summary_path) or {}
-            _write_funnel_result(
-                spark,
-                data_dir,
-                spark.read.parquet(summary_path),
-                list(prev.get("stages") or stages),
-            )
-        return
-    bs = funnel_user_state(new_events, stages, user_col=entity).withColumn(
-        "wb", _wbucket("u")
-    )
-    have_state = any(
-        f.startswith("wb=") for f in fsutil.list_names(spark, summary_path)
-    )
-    if have_state and read_summary_meta(spark, summary_path) is None:
-        # state without its binding sidecar: a crash artifact (tear
-        # between the state commit and the meta write on the FIRST
-        # fold) or manual surgery — the binding is unknowable, so
-        # folding risks a silently wrong funnel. The dir's fact table
-        # is authoritative (append-first contract): rebuild the state
-        # for THIS call's stages from it instead of wedging on a
-        # raise. A real stage MISMATCH below still raises — that one
-        # is a caller error, not a crash artifact.
-        from nerd_spark.session import read_table
-
-        bs = funnel_user_state(
-            read_table(spark, data_dir, "events"), stages, user_col=entity
-        ).withColumn("wb", _wbucket("u"))
-        # drop the unknown state entirely: the swap only replaces
-        # buckets present in the rebuild, and a stale foreign bucket
-        # surviving beside rebuilt ones would mix bindings. Losing the
-        # ledger is safe — the funnel state is a distinct-set union
-        # (idempotent under replay) and the fact table holds every
-        # folded batch.
-        fsutil.delete(spark, summary_path, recursive=True)
-        have_state = False
-    if have_state:
-        prev = read_summary_meta(spark, summary_path)
-        if list(prev.get("stages") or []) != stages or (
-            prev.get("entity") or entity
-        ) != entity:
-            raise ValueError(
-                "update_funnel_summary: existing state at "
-                f"{summary_path} is bound to stages="
-                f"{prev.get('stages')!r} / entity="
-                f"{prev.get('entity')!r}, cannot fold a batch at "
-                f"stages={stages!r} / entity={entity!r} into it — the "
-                "state never retained events outside its binding; "
-                "rebuild from raw events instead"
-            )
-        touched = [r.wb for r in bs.select("wb").distinct().collect()]
-        old = (
-            spark.read.parquet(summary_path)
-            .filter(F.col("wb").isin(touched))  # partition-pruned scan
-            .select("u", "st_arr")
-        )
-        merged = merge_funnel_state(old, bs.drop("wb")).withColumn(
-            "wb", _wbucket("u")
-        )
-    else:
-        merged = bs
-    merged = resolve_funnel_times(merged, stages)
-    success = os.path.join(summary_path, "_SUCCESS")
-    _staged_partition_commit(
-        spark, merged, summary_path, "wb", batch_id=batch_id
-    )
-    write_summary_meta(
-        spark, summary_path, {"stages": stages, "entity": entity}
-    )
-    _fold_ledger_record(spark, summary_path, batch_id)
-    fsutil.touch(spark, success)
-    _staged_commit_finalize(spark, summary_path)
-    _write_funnel_result(
-        spark,
-        data_dir,
-        spark.read.parquet(summary_path),
-        stages,
+        ),
+        lenient=("entity",),
     )
 
 
@@ -2330,70 +2074,34 @@ def update_cohort_summary(
     """Incremental maintenance of the cohort per-user state + result
     cache: day-set union / per-type first-day min per user (both
     order-insensitive — the streaming_cohort monotone-set argument),
-    touched-buckets-only rewrite, same commit gate."""
+    touched-buckets-only rewrite."""
+    _fold(spark, _cohort_spec(spark, data_dir, entity), new_events, batch_id)
+
+
+def _cohort_spec(spark: SparkSession, data_dir: str, entity="user_id"):
     from nerd_spark.operators.funnels import (
         cohort_user_state,
         merge_cohort_state,
     )
-    from nerd_spark.sources import fsutil
 
-    summary_path = os.path.join(data_dir, SUMMARY_COHORT_DIRNAME)
-    _staged_swap_recover(spark, summary_path, "wb")
-    if _fold_ledger_skip(spark, summary_path, batch_id):
-        res_success = os.path.join(
-            data_dir, SUMMARY_COHORT_RESULT_DIRNAME, "_SUCCESS"
-        )
-        try:
-            stale_res = not fsutil.exists(spark, res_success) or (
-                fsutil.mtime(spark, res_success)
-                < fsutil.mtime(spark, os.path.join(summary_path, "_SUCCESS"))
-            )
-        except Exception:
-            stale_res = True
-        if stale_res:
-            _write_cohort_result(
-                spark, data_dir, spark.read.parquet(summary_path)
-            )
-        return
-    bs = cohort_user_state(new_events, user_col=entity).withColumn(
-        "wb", _wbucket("u")
-    )
-    has_state = any(
-        f.startswith("wb=") for f in fsutil.list_names(spark, summary_path)
-    )
-    verdict = _fold_binding(
-        spark, summary_path, {"entity": entity}, has_state,
+    path = os.path.join(data_dir, SUMMARY_COHORT_DIRNAME)
+    return _FoldSpec(
         "update_cohort_summary",
-    )
-    if verdict == "rebuild":
-        # meta-less state: exactly recoverable from the fact table
-        from nerd_spark.session import read_table
-
-        merged = cohort_user_state(
-            read_table(spark, data_dir, "events"), user_col=entity
-        ).withColumn("wb", _wbucket("u"))
-        fsutil.delete(spark, summary_path, recursive=True)
-    elif has_state:
-        touched = [r.wb for r in bs.select("wb").distinct().collect()]
-        old = (
-            spark.read.parquet(summary_path)
-            .filter(F.col("wb").isin(touched))
-            .drop("wb")
-        )
-        merged = merge_cohort_state(old, bs.drop("wb")).withColumn(
+        path,
+        "wb",
+        state=lambda ev: cohort_user_state(ev, user_col=entity).withColumn(
             "wb", _wbucket("u")
-        )
-    else:
-        merged = bs
-    success = os.path.join(summary_path, "_SUCCESS")
-    _staged_partition_commit(
-        spark, merged, summary_path, "wb", batch_id=batch_id
+        ),
+        merge=_bucketed(merge_cohort_state, "u"),
+        binding={"entity": entity},
+        events_dir=data_dir,
+        deps=lambda: _write_cohort_result(
+            spark, data_dir, spark.read.parquet(path)
+        ),
+        deps_marker=os.path.join(
+            data_dir, SUMMARY_COHORT_RESULT_DIRNAME, "_SUCCESS"
+        ),
     )
-    write_summary_meta(spark, summary_path, {"entity": entity})
-    _fold_ledger_record(spark, summary_path, batch_id)
-    fsutil.touch(spark, success)
-    _staged_commit_finalize(spark, summary_path)
-    _write_cohort_result(spark, data_dir, spark.read.parquet(summary_path))
 
 
 # (dirname, reader-gate file) for every ingest-maintained serve table
@@ -2445,8 +2153,6 @@ def serve_table_status(spark: SparkSession, data_dir: str) -> list[dict]:
     Pure driver-side metadata through the Hadoop FS layer (a handful
     of stats per table, no Spark jobs) — safe to poll from a
     monitoring loop at any frequency."""
-    from nerd_spark.sources import fsutil
-
     try:
         ev_mtime = fsutil.mtime(
             spark, os.path.join(data_dir, "events.parquet")
@@ -2515,8 +2221,6 @@ def update_event_summaries(
     the same state as a clean run (pinned by
     tests/test_summary_incremental.py::test_pool_crash_replay_converges)."""
     from concurrent.futures import ThreadPoolExecutor
-
-    from nerd_spark.sources import fsutil
 
     daily_p = os.path.join(data_dir, SUMMARY_DAILY_DIRNAME)
     asof_p = os.path.join(data_dir, SUMMARY_ASOF_DIRNAME)
@@ -2609,8 +2313,6 @@ def prune_summary(
     partition names. ``as_of`` defaults to the newest partition."""
     import datetime as _dt
 
-    from nerd_spark.sources import fsutil
-
     days = sorted(
         d for d in fsutil.list_names(spark, summary_path) if d.startswith("d=")
     )
@@ -2638,8 +2340,6 @@ def summary_fresh(
     the summary's commit), and carries the expected columns (an
     older-schema table falls back instead of failing). The general
     form of analytics._summary_fresh for non-events sources."""
-    from nerd_spark.sources import fsutil
-
     success = os.path.join(data_dir, dirname, "_SUCCESS")
     if not fsutil.exists(spark, success):
         return False
@@ -2684,8 +2384,6 @@ def read_summary_cached(spark: SparkSession, data_dir: str, dirname: str):
     footer pass. Call only after a truthy summary_fresh with
     expect_cols (which populates the cache); falls back to a plain
     read when the cache was since evicted."""
-    from nerd_spark.sources import fsutil
-
     path = os.path.join(data_dir, dirname)
     try:
         smtime = fsutil.mtime(spark, os.path.join(path, "_SUCCESS"))
@@ -2733,7 +2431,6 @@ def write_events_bucketed(
     don't satisfy would let Spark elide exchanges the data doesn't
     earn and silently corrupt every window result (r11 advisor)."""
     from nerd_spark.session import read_table
-    from nerd_spark.sources import fsutil
 
     tbl = bucketed_events_name(data_dir)
     loc = os.path.join(data_dir, f"{tbl}.bucketed")
@@ -2774,8 +2471,6 @@ def bucketed_events(spark: SparkSession, data_dir: str):
     the files don't satisfy would elide exchanges the data doesn't
     earn), defaulting to 32 for pre-sidecar dirs — the only count any
     writer ever produced before the sidecar existed."""
-    from nerd_spark.sources import fsutil
-
     tbl = bucketed_events_name(data_dir)
     loc = os.path.join(data_dir, f"{tbl}.bucketed")
     if not spark.catalog.tableExists(tbl):
@@ -2818,8 +2513,6 @@ def write_join_pair(
         ("orders", ot, "o_custkey"),
         ("customer", ct, "c_custkey"),
     ]
-    from nerd_spark.sources import fsutil
-
     for name, tbl, key in specs:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         # a killed session strands the LOCATION while the in-memory
@@ -2884,8 +2577,6 @@ def write_bucketed(
     """
     spark = df.sparkSession
     if not spark.catalog.tableExists(table):
-        from nerd_spark.sources import fsutil
-
         wh = spark.conf.get("spark.sql.warehouse.dir")
         orphan = os.path.join(wh, table.lower())
         if fsutil.exists(spark, orphan):

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nerd_spark.sources import fsutil
 from nerd_spark.sources.idea import (
     explode_source_ips,
     parse_idea,
@@ -46,24 +47,6 @@ def facts_from_batch(raw: DataFrame, as_of: Column | None = None) -> DataFrame:
 MAX_TOUCHED_DATES = 64
 
 
-def _fs_and_path(spark: SparkSession, path: str):
-    """Hadoop FileSystem handle for a path (works for file:// and hdfs://)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath
-
-
-def _must(ok: bool, what: str, path: str) -> None:
-    """Hadoop FileSystem.rename/delete report many failures (missing
-    parent, cross-FS move, quota) by returning false, not raising — an
-    unchecked false in the partition swap silently drops a live
-    partition, the exact loss the staging design exists to prevent
-    (ADVICE r02). Raising preserves the staging copy for recovery."""
-    if not ok:
-        raise IOError(f"merge_facts: failed to {what}: {path}")
-
-
 def merge_facts(
     spark: SparkSession,
     increments: DataFrame,
@@ -88,8 +71,8 @@ def merge_facts(
     deployment would put an ACID table format (Delta/Iceberg) here.
     """
     inc = increments.withColumn("d", F.to_date("date"))
-    fs, live = _fs_and_path(spark, table_path)
-    if fs.exists(live):
+    live = fsutil.exists(spark, table_path)
+    if live:
         # existence checked explicitly: any *other* read failure
         # (corrupt footer, permissions, transient IO) must propagate
         # rather than silently dropping history (ADVICE r01).
@@ -108,24 +91,20 @@ def merge_facts(
     merged = inc.groupBy("ip_int", "date", "node", "cats", "d").agg(
         F.sum("n").alias("n"), F.sum("conns").alias("conns")
     )
-    staging_path = table_path.rstrip("/") + ".staging"
-    sfs, staging = _fs_and_path(spark, staging_path)
-    if sfs.exists(staging):
-        _must(sfs.delete(staging, True), "delete stale staging", staging_path)
-    merged.write.mode("overwrite").partitionBy("d").parquet(staging_path)
-    if not fs.exists(live):
-        _must(fs.rename(staging, live), "promote staging table", table_path)
+    staging = table_path.rstrip("/") + ".staging"
+    # The overwrite clears a stale staging dir (and raises if it
+    # cannot). Hadoop rename/delete report failure (missing parent,
+    # cross-FS move, quota) by returning false, and an unchecked false
+    # in the swap silently drops a live partition (ADVICE r02): raise,
+    # keeping the staging copy. swap_partition_dirs raises by itself.
+    merged.write.mode("overwrite").partitionBy("d").parquet(staging)
+    if not live:
+        if not fsutil.rename(spark, staging, table_path):
+            raise IOError(f"merge_facts: failed to promote staging: {staging}")
         return
-    jvm = spark._jvm
-    for status in sfs.listStatus(staging):
-        name = status.getPath().getName()
-        if not name.startswith("d="):
-            continue
-        dest = jvm.org.apache.hadoop.fs.Path(live, name)
-        if fs.exists(dest):
-            _must(fs.delete(dest, True), "remove old partition", str(dest))
-        _must(fs.rename(status.getPath(), dest), "swap in partition", str(dest))
-    _must(sfs.delete(staging, True), "clean staging", staging_path)
+    fsutil.swap_partition_dirs(spark, staging, table_path, "d=")
+    if not fsutil.delete(spark, staging, recursive=True):
+        raise IOError(f"merge_facts: failed to clean staging: {staging}")
 
 
 def run_batch(

@@ -30,3 +30,69 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+class Torn(Exception):
+    """A crash injected by the tear-sweep harness."""
+
+
+@pytest.fixture
+def tear_sweep(monkeypatch):
+    """Exhaustive tear sweep over a staged fold commit. Every mutating
+    fsutil op (delete, rename, touch, write_text, mkdirs, and each
+    partition delete/rename of the swap) spends one unit of an op
+    budget; the op past the budget raises :class:`Torn`.
+
+    ``sweep(setup, fold, check, min_ops)``: ``setup(tag)`` builds a
+    fresh state and returns its handle, ``fold(handle)`` runs the
+    commit under test, ``check(handle, label)`` asserts the terminal
+    state. A probe run counts the fold's ops; then for every op
+    boundary k the fold is torn at op k, replayed without injection,
+    and checked."""
+    from nerd_spark.sources import fsutil as fsu
+
+    state = {"budget": None, "ops": 0}
+
+    def wrap(fn, name):
+        def inner(*a, **kw):
+            if state["budget"] is not None:
+                state["ops"] += 1
+                if state["ops"] > state["budget"]:
+                    raise Torn(f"op {state['ops']} ({name})")
+            return fn(*a, **kw)
+
+        return inner
+
+    for name in ("delete", "rename", "touch", "write_text", "mkdirs"):
+        monkeypatch.setattr(fsu, name, wrap(getattr(fsu, name), name))
+
+    def budgeted_swap(spark_, staging_, table_, prefix_):
+        # per-partition tears ride the wrapped delete/rename
+        moved = []
+        for nm in sorted(fsu.list_names(spark_, staging_)):
+            if nm.startswith(prefix_):
+                dest = os.path.join(table_, nm)
+                fsu.delete(spark_, dest, recursive=True)
+                assert fsu.rename(spark_, os.path.join(staging_, nm), dest)
+                moved.append(nm)
+        return moved
+
+    monkeypatch.setattr(fsu, "swap_partition_dirs", budgeted_swap)
+
+    def sweep(setup, fold, check, min_ops):
+        probe = setup("probe")
+        state.update(budget=10**9, ops=0)
+        fold(probe)
+        total_ops, state["budget"] = state["ops"], None
+        assert total_ops >= min_ops, f"sweep found only {total_ops} ops"
+        check(probe, "probe")
+        for k in range(1, total_ops):
+            h = setup(f"tear{k}")
+            state.update(budget=k, ops=0)
+            with pytest.raises(Torn):
+                fold(h)
+            state["budget"] = None
+            fold(h)  # replay
+            check(h, f"tear at op {k}")
+
+    return sweep

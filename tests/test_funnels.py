@@ -174,7 +174,7 @@ def test_containment_stage_drops_planted_subset_copy(spark):
     assert pairs[0].containment == 1.0
 
 
-def test_encoded_merge_verify_matches_broadcast(spark, sf_dir):
+def test_encoded_merge_verify_matches_broadcast(spark, sf_dir, monkeypatch):
     """r14 session-2: over the broadcast bound the verify's
     merge-join sides carry hot arrays bijectively encoded as longs
     (_encode_hot_longs) instead of strings. Forcing the over paths
@@ -186,20 +186,17 @@ def test_encoded_merge_verify_matches_broadcast(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
-    def run(fn, bound, **kw):
-        orig = DD._pair_scores_rare
+    orig = DD._pair_scores_rare
 
+    def run(fn, bound, **kw):
         def forced(cand, aset, broadcast_max_pairs=2_000_000, **kws):
             return orig(cand, aset, broadcast_max_pairs=bound, **kws)
 
-        DD._pair_scores_rare = forced
-        try:
-            df = fn(docs, **kw)
-            rows = sorted(tuple(r) for r in df.collect())
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            return rows, plan
-        finally:
-            DD._pair_scores_rare = orig
+        monkeypatch.setattr(DD, "_pair_scores_rare", forced)
+        df = fn(docs, **kw)
+        rows = sorted(tuple(r) for r in df.collect())
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return rows, plan
 
     for fn, kw in (
         (DD.jaccard_dedup, {"threshold": 0.8}),

@@ -327,8 +327,39 @@ def test_unfinished_staging_write_discarded(spark, sf_dir, tmp_path):
     )
 
 
+def _sweep_events(spark, n, step, span, users, types, vmod):
+    """Small deterministic events for the tear sweeps: n rows over
+    `span` hours, `users` users, event types cycling through `types`;
+    returns the even / odd event_id halves as two batches and the
+    whole."""
+    ev = spark.range(n).select(
+        F.col("id").alias("event_id"),
+        (
+            F.to_timestamp(F.lit("2024-03-01 00:00:00"))
+            + F.make_interval(hours=(F.col("id") * step % span).cast("int"))
+        ).alias("ts"),
+        F.pmod("id", F.lit(users)).alias("user_id"),
+        F.element_at(
+            F.array(*[F.lit(t) for t in types]),
+            (F.col("id") % len(types) + 1).cast("int"),
+        ).alias("event_type"),
+        (F.col("id") % vmod / 3.0).alias("value"),
+    )
+    return (
+        ev.filter(F.col("event_id") % 2 == 0),
+        ev.filter(F.col("event_id") % 2 == 1),
+        ev,
+    )
+
+
+def _sorted_rows(df):
+    return sorted(
+        map(repr, (tuple(r) for r in df.select(sorted(df.columns)).collect()))
+    )
+
+
 @pytest.mark.slow
-def test_staged_commit_tear_sweep(spark, tmp_path, monkeypatch):
+def test_staged_commit_tear_sweep(spark, tmp_path, tear_sweep):
     """Exhaustive tear sweep over the staged fold commit: crash the
     daily fold at EVERY mutating-FS-op boundary (manifest write, gate
     drop, each partition delete/rename of the swap, staging cleanup,
@@ -336,323 +367,195 @@ def test_staged_commit_tear_sweep(spark, tmp_path, monkeypatch):
     injection — every terminal state must equal the one-shot rebuild.
     Single-point tears are pinned above; this closes the gaps between
     them."""
-    import pytest
-
-    from nerd_spark.sources import fsutil as fsu
-
-    ev = spark.range(400).select(
-        F.col("id").alias("event_id"),
-        (
-            F.to_timestamp(F.lit("2024-03-01 00:00:00"))
-            + F.make_interval(hours=(F.col("id") * 7 % 96).cast("int"))
-        ).alias("ts"),
-        F.pmod("id", F.lit(9)).alias("user_id"),
-        F.element_at(
-            F.array(F.lit("view"), F.lit("click"), F.lit("error")),
-            (F.col("id") % 3 + 1).cast("int"),
-        ).alias("event_type"),
-        (F.col("id") % 31 / 3.0).alias("value"),
+    b1, b2, _ = _sweep_events(
+        spark, 400, 7, 96, 9, ("view", "click", "error"), 31
     )
-    b1 = ev.filter(F.col("event_id") % 2 == 0)
-    b2 = ev.filter(F.col("event_id") % 2 == 1)
-
-    class Torn(Exception):
-        pass
-
-    state = {"budget": None, "ops": 0}
-    real = {
-        n: getattr(fsu, n)
-        for n in ("delete", "rename", "touch", "write_text", "mkdirs")
-    }
-
-    def wrap(name):
-        fn = real[name]
-
-        def inner(*a, **kw):
-            if state["budget"] is not None:
-                state["ops"] += 1
-                if state["ops"] > state["budget"]:
-                    raise Torn(f"op {state['ops']} ({name})")
-            return fn(*a, **kw)
-
-        return inner
-
-    for n in real:
-        monkeypatch.setattr(fsu, n, wrap(n))
-
-    def budgeted_swap(spark_, staging_, table_, prefix_):
-        # per-partition tears ride the wrapped delete/rename
-        moved = []
-        for nm in sorted(fsu.list_names(spark_, staging_)):
-            if not nm.startswith(prefix_):
-                continue
-            dest = os.path.join(table_, nm)
-            fsu.delete(spark_, dest, recursive=True)
-            assert fsu.rename(spark_, os.path.join(staging_, nm), dest)
-            moved.append(nm)
-        return moved
-
-    monkeypatch.setattr(fsu, "swap_partition_dirs", budgeted_swap)
-
     oneshot = os.path.join(str(tmp_path), "oneshot")
     update_daily_summary(spark, oneshot, b1, batch_id="b1")
     update_daily_summary(spark, oneshot, b2, batch_id="b2")
     expected = _rows(spark.read.parquet(oneshot))
 
-    # dry run to count the fold's mutating ops
-    probe = os.path.join(str(tmp_path), "probe")
-    update_daily_summary(spark, probe, b1, batch_id="b1")
-    state.update(budget=10**9, ops=0)
-    update_daily_summary(spark, probe, b2, batch_id="b2")
-    total_ops = state["ops"]
-    state["budget"] = None
-    assert total_ops >= 6, f"sweep found only {total_ops} mutating ops"
-    assert _rows(spark.read.parquet(probe)) == expected
-
-    for k in range(1, total_ops):
-        d = os.path.join(str(tmp_path), f"tear{k}")
+    def setup(tag):
+        d = os.path.join(str(tmp_path), tag)
         update_daily_summary(spark, d, b1, batch_id="b1")
-        state.update(budget=k, ops=0)
-        with pytest.raises(Torn):
-            update_daily_summary(spark, d, b2, batch_id="b2")
-        state["budget"] = None
-        update_daily_summary(spark, d, b2, batch_id="b2")  # replay
-        assert _rows(spark.read.parquet(d)) == expected, f"tear at op {k}"
+        return d
+
+    def check(d, label):
+        assert _rows(spark.read.parquet(d)) == expected, label
+
+    tear_sweep(
+        setup,
+        lambda d: update_daily_summary(spark, d, b2, batch_id="b2"),
+        check,
+        min_ops=6,
+    )
 
 
 @pytest.mark.slow
-def test_staged_commit_tear_sweep_keycount(spark, tmp_path, monkeypatch):
+def test_staged_commit_tear_sweep_merged(spark, tmp_path, tear_sweep):
+    """The merged snapshot under the tear sweep: the entity-bucketed
+    shape without dependents, whose meta-less state is adopted rather
+    than rebuilt. Every terminal state holds the one-shot state and
+    its reader gate."""
+    from nerd_spark.sources.layout import update_merged_summary
+
+    b1, b2, _ = _sweep_events(
+        spark, 400, 7, 96, 9, ("view", "click", "error"), 31
+    )
+    oneshot = os.path.join(str(tmp_path), "oneshot")
+    update_merged_summary(spark, oneshot, b1, batch_id="b1")
+    update_merged_summary(spark, oneshot, b2, batch_id="b2")
+    expected = _sorted_rows(spark.read.parquet(oneshot))
+
+    def setup(tag):
+        d = os.path.join(str(tmp_path), tag)
+        update_merged_summary(spark, d, b1, batch_id="b1")
+        return d
+
+    def check(d, label):
+        assert os.path.exists(os.path.join(d, "_SUCCESS")), label
+        assert _sorted_rows(spark.read.parquet(d)) == expected, label
+
+    tear_sweep(
+        setup,
+        lambda d: update_merged_summary(spark, d, b2, batch_id="b2"),
+        check,
+        min_ops=8,
+    )
+
+
+def _sweep_data_dir(spark, tmp_path, tag, fold, b1, ev):
+    """A data dir whose state holds b1 (append-first: the fact table
+    holds it before the fold) and whose fact table then holds all of
+    ev, ready for the b2 fold under test."""
+    d = str(tmp_path / tag)
+    ev_path = os.path.join(d, "events.parquet")
+    b1.write.mode("overwrite").parquet(ev_path)
+    fold(spark, d, b1, batch_id="b1")
+    ev.write.mode("overwrite").parquet(ev_path)
+    return d
+
+
+@pytest.mark.slow
+def test_staged_commit_tear_sweep_keycount(spark, tmp_path, tear_sweep):
     """Same exhaustive tear sweep over the keycount fold — the
     wb-bucketed shape with DEPENDENT projections (entity totals,
     hh/top-k result caches) committed after the pair table: tears
     after the finalize must heal through the ledger-skip staleness
     rederives, and the hh serve must equal the raw recompute at every
     terminal state."""
-    import pytest
-
     from nerd_spark.queries.dataprep import hh_event_users
-    from nerd_spark.sources import fsutil as fsu
     from nerd_spark.sources.layout import (
         SUMMARY_TYPE_USER_DIRNAME,
         SUMMARY_USER_COUNTS_DIRNAME,
         update_keycount_summaries,
     )
 
-    ev = spark.range(300).select(
-        F.col("id").alias("event_id"),
-        (
-            F.to_timestamp(F.lit("2024-03-01 00:00:00"))
-            + F.make_interval(hours=(F.col("id") * 5 % 72).cast("int"))
-        ).alias("ts"),
-        F.pmod("id", F.lit(5)).alias("user_id"),
-        F.element_at(
-            F.array(F.lit("view"), F.lit("click")),
-            (F.col("id") % 2 + 1).cast("int"),
-        ).alias("event_type"),
-        (F.col("id") % 17 / 3.0).alias("value"),
+    b1, b2, ev = _sweep_events(spark, 300, 5, 72, 5, ("view", "click"), 17)
+
+    def pair_rows(d):
+        return _sorted_rows(
+            spark.read.parquet(
+                os.path.join(d, SUMMARY_TYPE_USER_DIRNAME)
+            ).drop("wb")
+        )
+
+    oneshot = _sweep_data_dir(
+        spark, tmp_path, "oneshot", update_keycount_summaries, b1, ev
     )
-    b1 = ev.filter(F.col("event_id") % 2 == 0)
-    b2 = ev.filter(F.col("event_id") % 2 == 1)
-
-    class Torn(Exception):
-        pass
-
-    state = {"budget": None, "ops": 0}
-    real = {
-        n: getattr(fsu, n)
-        for n in ("delete", "rename", "touch", "write_text", "mkdirs")
-    }
-
-    def wrap(name):
-        fn = real[name]
-
-        def inner(*a, **kw):
-            if state["budget"] is not None:
-                state["ops"] += 1
-                if state["ops"] > state["budget"]:
-                    raise Torn(f"op {state['ops']} ({name})")
-            return fn(*a, **kw)
-
-        return inner
-
-    for n in real:
-        monkeypatch.setattr(fsu, n, wrap(n))
-
-    def budgeted_swap(spark_, staging_, table_, prefix_):
-        moved = []
-        for nm in sorted(fsu.list_names(spark_, staging_)):
-            if not nm.startswith(prefix_):
-                continue
-            dest = os.path.join(table_, nm)
-            fsu.delete(spark_, dest, recursive=True)
-            assert fsu.rename(spark_, os.path.join(staging_, nm), dest)
-            moved.append(nm)
-        return moved
-
-    monkeypatch.setattr(fsu, "swap_partition_dirs", budgeted_swap)
-
-    def pair_rows(ddir):
-        return sorted(
-            map(
-                repr,
-                (
-                    tuple(r)
-                    for r in spark.read.parquet(
-                        os.path.join(ddir, SUMMARY_TYPE_USER_DIRNAME)
-                    )
-                    .drop("wb")
-                    .collect()
-                ),
-            )
-        )
-
-    def mk(ddir, events):
-        events.write.mode("overwrite").parquet(
-            os.path.join(ddir, "events.parquet")
-        )
-
-    oneshot = str(tmp_path / "oneshot")
-    mk(oneshot, ev)
-    update_keycount_summaries(spark, oneshot, b1, batch_id="b1")
     update_keycount_summaries(spark, oneshot, b2, batch_id="b2")
     expected = pair_rows(oneshot)
     raw = str(tmp_path / "raw")
-    mk(raw, ev)
+    ev.write.mode("overwrite").parquet(os.path.join(raw, "events.parquet"))
+    raw_hh = _sorted_rows(hh_event_users(spark, raw))
 
-    probe = str(tmp_path / "probe")
-    mk(probe, b1)
-    update_keycount_summaries(spark, probe, b1, batch_id="b1")
-    mk(probe, ev)
-    state.update(budget=10**9, ops=0)
-    update_keycount_summaries(spark, probe, b2, batch_id="b2")
-    total_ops = state["ops"]
-    state["budget"] = None
-    assert total_ops >= 8
-    assert pair_rows(probe) == expected
-
-    def rows(df):
-        return sorted(map(repr, (tuple(r) for r in df.collect())))
-
-    raw_hh = rows(hh_event_users(spark, raw))
-    for k in range(1, total_ops):
-        d = str(tmp_path / f"tear{k}")
-        mk(d, b1)
-        update_keycount_summaries(spark, d, b1, batch_id="b1")
-        mk(d, ev)
-        state.update(budget=k, ops=0)
-        with pytest.raises(Torn):
-            update_keycount_summaries(spark, d, b2, batch_id="b2")
-        state["budget"] = None
-        update_keycount_summaries(spark, d, b2, batch_id="b2")  # replay
-        assert pair_rows(d) == expected, f"pair table wrong after op-{k} tear"
+    def check(d, label):
+        assert pair_rows(d) == expected, label
         assert (
             spark.read.parquet(os.path.join(d, SUMMARY_USER_COUNTS_DIRNAME))
             .count() == 5
-        ), f"totals wrong after op-{k} tear"
-        assert rows(hh_event_users(spark, d)) == raw_hh, f"hh serve, op {k}"
+        ), label
+        assert _sorted_rows(hh_event_users(spark, d)) == raw_hh, label
+
+    tear_sweep(
+        lambda tag: _sweep_data_dir(
+            spark, tmp_path, tag, update_keycount_summaries, b1, ev
+        ),
+        lambda d: update_keycount_summaries(spark, d, b2, batch_id="b2"),
+        check,
+        min_ops=8,
+    )
 
 
 @pytest.mark.slow
-def test_staged_commit_tear_sweep_funnel(spark, tmp_path, monkeypatch):
-    """Third commit shape under the exhaustive tear sweep: the funnel
-    fold writes its stage-binding meta sidecar between the partition
-    swap and the ledger record, and its result cache after the
-    finalize — tears around the meta must leave a same-stages binding
-    (recovery records the ledger; the previous fold's meta still
-    matches), and result-cache tears must heal through the skip path."""
-    import pytest
-
+def test_staged_commit_tear_sweep_funnel(spark, tmp_path, tear_sweep):
+    """The funnel fold under the tear sweep: its stage-binding meta
+    sidecar lands between the partition swap and the ledger record,
+    and its result cache after the finalize — tears around the meta
+    must leave a same-stages binding (recovery records the ledger; the
+    previous fold's meta still matches), and result-cache tears must
+    heal through the skip path."""
     from nerd_spark.queries.analytics import funnel_stages
-    from nerd_spark.sources import fsutil as fsu
     from nerd_spark.sources.layout import update_funnel_summary
 
-    ev = spark.range(300).select(
-        F.col("id").alias("event_id"),
-        (
-            F.to_timestamp(F.lit("2024-03-01 00:00:00"))
-            + F.make_interval(hours=(F.col("id") * 5 % 72).cast("int"))
-        ).alias("ts"),
-        F.pmod("id", F.lit(6)).alias("user_id"),
-        F.element_at(
-            F.array(F.lit("view"), F.lit("click"), F.lit("purchase")),
-            (F.col("id") % 3 + 1).cast("int"),
-        ).alias("event_type"),
-        (F.col("id") % 17 / 3.0).alias("value"),
+    b1, b2, ev = _sweep_events(
+        spark, 300, 5, 72, 6, ("view", "click", "purchase"), 17
     )
-    b1 = ev.filter(F.col("event_id") % 2 == 0)
-    b2 = ev.filter(F.col("event_id") % 2 == 1)
-
-    class Torn(Exception):
-        pass
-
-    state = {"budget": None, "ops": 0}
-    real = {
-        n: getattr(fsu, n)
-        for n in ("delete", "rename", "touch", "write_text", "mkdirs")
-    }
-
-    def wrap(name):
-        fn = real[name]
-
-        def inner(*a, **kw):
-            if state["budget"] is not None:
-                state["ops"] += 1
-                if state["ops"] > state["budget"]:
-                    raise Torn(f"op {state['ops']} ({name})")
-            return fn(*a, **kw)
-
-        return inner
-
-    for n in real:
-        monkeypatch.setattr(fsu, n, wrap(n))
-
-    def budgeted_swap(spark_, staging_, table_, prefix_):
-        moved = []
-        for nm in sorted(fsu.list_names(spark_, staging_)):
-            if not nm.startswith(prefix_):
-                continue
-            dest = os.path.join(table_, nm)
-            fsu.delete(spark_, dest, recursive=True)
-            assert fsu.rename(spark_, os.path.join(staging_, nm), dest)
-            moved.append(nm)
-        return moved
-
-    monkeypatch.setattr(fsu, "swap_partition_dirs", budgeted_swap)
-
-    def rows(df):
-        return sorted(map(repr, (tuple(r) for r in df.collect())))
-
-    def mk(ddir, events):
-        events.write.mode("overwrite").parquet(
-            os.path.join(ddir, "events.parquet")
-        )
-
     raw = str(tmp_path / "raw")
-    mk(raw, ev)
-    expected = rows(funnel_stages(spark, raw))
+    ev.write.mode("overwrite").parquet(os.path.join(raw, "events.parquet"))
+    expected = _sorted_rows(funnel_stages(spark, raw))
 
-    probe = str(tmp_path / "probe")
-    mk(probe, b1)
-    update_funnel_summary(spark, probe, b1, batch_id="b1")
-    mk(probe, ev)
-    state.update(budget=10**9, ops=0)
-    update_funnel_summary(spark, probe, b2, batch_id="b2")
-    total_ops = state["ops"]
-    state["budget"] = None
-    assert total_ops >= 8
-    assert rows(funnel_stages(spark, probe)) == expected
+    def check(d, label):
+        assert _sorted_rows(funnel_stages(spark, d)) == expected, label
 
-    for k in range(1, total_ops):
-        d = str(tmp_path / f"tear{k}")
-        mk(d, b1)
-        update_funnel_summary(spark, d, b1, batch_id="b1")
-        mk(d, ev)
-        state.update(budget=k, ops=0)
-        with pytest.raises(Torn):
-            update_funnel_summary(spark, d, b2, batch_id="b2")
-        state["budget"] = None
-        update_funnel_summary(spark, d, b2, batch_id="b2")  # replay
-        assert rows(funnel_stages(spark, d)) == expected, f"tear at op {k}"
+    tear_sweep(
+        lambda tag: _sweep_data_dir(
+            spark, tmp_path, tag, update_funnel_summary, b1, ev
+        ),
+        lambda d: update_funnel_summary(spark, d, b2, batch_id="b2"),
+        check,
+        min_ops=8,
+    )
+
+
+@pytest.mark.slow
+def test_staged_commit_tear_sweep_cohort(spark, tmp_path, tear_sweep):
+    """The cohort fold under the tear sweep: per-user state whose
+    meta-less form rebuilds from the fact table, with a result cache
+    written after the finalize. At every terminal state the state is
+    gated, the result cache is fresh (a tear before it was rewritten
+    heals through the ledger-skip path) and the cohort serve equals
+    the raw recompute."""
+    from nerd_spark.queries.analytics import cohort_retention_q
+    from nerd_spark.sources.layout import (
+        SUMMARY_COHORT_DIRNAME,
+        SUMMARY_COHORT_RESULT_DIRNAME,
+        serve_table_status,
+        update_cohort_summary,
+    )
+
+    b1, b2, ev = _sweep_events(
+        spark, 300, 29, 720, 5, ("signup", "view", "click"), 17
+    )
+    raw = str(tmp_path / "raw")
+    ev.write.mode("overwrite").parquet(os.path.join(raw, "events.parquet"))
+    expected = _sorted_rows(cohort_retention_q(spark, raw))
+    assert len(expected) > 1, "the check needs several cohort rows"
+
+    def check(d, label):
+        by = {r["table"]: r for r in serve_table_status(spark, d)}
+        assert by[SUMMARY_COHORT_DIRNAME]["gated"], label
+        assert by[SUMMARY_COHORT_RESULT_DIRNAME]["fresh"], label
+        assert _sorted_rows(cohort_retention_q(spark, d)) == expected, label
+
+    tear_sweep(
+        lambda tag: _sweep_data_dir(
+            spark, tmp_path, tag, update_cohort_summary, b1, ev
+        ),
+        lambda d: update_cohort_summary(spark, d, b2, batch_id="b2"),
+        check,
+        min_ops=8,
+    )
 
 
 @pytest.mark.slow
@@ -810,6 +713,74 @@ def test_metaless_adoption_warns(spark, sf_dir, tmp_path, caplog):
     with caplog.at_level(logging.WARNING, logger="nerd_spark.sources.layout"):
         update_daily_summary(spark, dsum, ev.limit(0), batch_id="b3")
     assert not [r for r in caplog.records if "ADOPTING" in r.getMessage()]
+
+
+def test_empty_first_batch_gates_nothing(spark, sf_dir, tmp_path):
+    """An empty first batch on a fresh dir leaves no partitioned table
+    gated: a gate over a table with no partitions is unreadable (no
+    files to infer a schema from), and its ledger-skip heal re-read
+    the empty state on every replay. The fold records the batch id
+    only, replays skip cleanly, and the next real batch builds every
+    table so that each serve path equals the raw recompute."""
+    from nerd_spark.queries.analytics import (
+        a1_daily_rollup,
+        cohort_retention_q,
+        funnel_stages,
+        op_merge_snapshot,
+    )
+    from nerd_spark.queries.dataprep import hh_event_users
+    from nerd_spark.sources.layout import (
+        SUMMARY_COHORT_DIRNAME,
+        SUMMARY_DAILY_DIRNAME,
+        SUMMARY_FUNNEL_DIRNAME,
+        SUMMARY_MERGED_DIRNAME,
+        SUMMARY_TYPE_USER_DIRNAME,
+        _ledger_ids,
+        serve_table_status,
+        update_event_summaries,
+    )
+
+    ev = read_table(spark, sf_dir, "events")
+    d = str(tmp_path / "data")
+    raw = str(tmp_path / "raw")
+    ev.limit(0).write.mode("overwrite").parquet(
+        os.path.join(d, "events.parquet")
+    )
+    update_event_summaries(spark, d, ev.limit(0), batch_id="e")
+    update_event_summaries(spark, d, ev.limit(0), batch_id="e")  # replay
+    partitioned = (
+        SUMMARY_DAILY_DIRNAME,
+        SUMMARY_MERGED_DIRNAME,
+        SUMMARY_FUNNEL_DIRNAME,
+        SUMMARY_COHORT_DIRNAME,
+        SUMMARY_TYPE_USER_DIRNAME,
+    )
+    by = {r["table"]: r for r in serve_table_status(spark, d)}
+    for name in partitioned:
+        assert not by[name]["gated"], name
+        assert "e" in _ledger_ids(spark, os.path.join(d, name)), name
+    for r in by.values():
+        if r["gated"]:  # whatever is gated must be readable
+            spark.read.parquet(os.path.join(d, r["table"])).collect()
+
+    ev.write.mode("append").parquet(os.path.join(d, "events.parquet"))
+    update_event_summaries(spark, d, ev, batch_id="b1")
+    ev.write.mode("overwrite").parquet(os.path.join(raw, "events.parquet"))
+    by = {r["table"]: r for r in serve_table_status(spark, d)}
+    for name in partitioned:
+        assert by[name]["gated"] and by[name]["fresh"], name
+
+    def rows(df):
+        return sorted(map(repr, (tuple(r) for r in df.collect())))
+
+    for q in (
+        a1_daily_rollup,
+        op_merge_snapshot,
+        funnel_stages,
+        cohort_retention_q,
+        hh_event_users,
+    ):
+        assert rows(q(spark, d)) == rows(q(spark, raw)), q.__name__
 
 
 def test_corrupt_manifest_discarded_not_resumed(spark, sf_dir, tmp_path,

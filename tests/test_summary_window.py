@@ -509,7 +509,7 @@ def test_null_category_corpus_serves_equal_raw(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_staged_commit_tear_sweep_window_dayroll(spark, tmp_path, monkeypatch):
+def test_staged_commit_tear_sweep_window_dayroll(spark, tmp_path, tear_sweep):
     """Tear sweep over the window summary's DAY-ROLL commit — the one
     full-table rewrite shape (full=True: stale buckets deleted, all
     buckets swapped) with the discard-only recovery (a torn window
@@ -517,11 +517,8 @@ def test_staged_commit_tear_sweep_window_dayroll(spark, tmp_path, monkeypatch):
     everything from the daily summary without reading the mixed live
     state). Crash at every mutating-op boundary, replay, and require
     the window table to equal the one-shot rebuild."""
-    import pytest
-
     from pyspark.sql import functions as F2
 
-    from nerd_spark.sources import fsutil as fsu
     from nerd_spark.sources.layout import (
         SUMMARY_DAILY_DIRNAME,
         SUMMARY_WINDOW_DIRNAME,
@@ -551,82 +548,31 @@ def test_staged_commit_tear_sweep_window_dayroll(spark, tmp_path, monkeypatch):
     b1 = ev.filter(F2.to_date("ts") <= F2.lit("2024-03-02"))
     b2 = ev.filter(F2.to_date("ts") > F2.lit("2024-03-02"))  # day-roll
 
-    class Torn(Exception):
-        pass
+    odp = str(tmp_path / "oneshot" / SUMMARY_DAILY_DIRNAME)
+    owp = str(tmp_path / "oneshot" / SUMMARY_WINDOW_DIRNAME)
+    update_daily_summary(spark, odp, ev, batch_id="b0")
+    update_window_summary(spark, owp, odp, ev, batch_id="b0")
+    expected = _win_rows(spark.read.parquet(owp))
 
-    state = {"budget": None, "ops": 0}
-    real = {
-        n: getattr(fsu, n)
-        for n in ("delete", "rename", "touch", "write_text", "mkdirs")
-    }
-
-    def wrap(name):
-        fn = real[name]
-
-        def inner(*a, **kw):
-            if state["budget"] is not None:
-                state["ops"] += 1
-                if state["ops"] > state["budget"]:
-                    raise Torn(f"op {state['ops']} ({name})")
-            return fn(*a, **kw)
-
-        return inner
-
-    for n in real:
-        monkeypatch.setattr(fsu, n, wrap(n))
-
-    def budgeted_swap(spark_, staging_, table_, prefix_):
-        moved = []
-        for nm in sorted(fsu.list_names(spark_, staging_)):
-            if not nm.startswith(prefix_):
-                continue
-            dest = os.path.join(table_, nm)
-            fsu.delete(spark_, dest, recursive=True)
-            assert fsu.rename(spark_, os.path.join(staging_, nm), dest)
-            moved.append(nm)
-        return moved
-
-    monkeypatch.setattr(fsu, "swap_partition_dirs", budgeted_swap)
-
-    def build(base, batches):
-        dp = os.path.join(base, SUMMARY_DAILY_DIRNAME)
-        wp = os.path.join(base, SUMMARY_WINDOW_DIRNAME)
-        for i, b in enumerate(batches):
-            update_daily_summary(spark, dp, b, batch_id=f"b{i}")
-            update_window_summary(spark, wp, dp, b, batch_id=f"b{i}")
-        return wp
-
-    oneshot = build(str(tmp_path / "oneshot"), [ev])
-    expected = _win_rows(spark.read.parquet(oneshot))
-
-    # probe: count the day-roll fold's mutating ops
-    probe = str(tmp_path / "probe")
-    pd_, pw = (
-        os.path.join(probe, SUMMARY_DAILY_DIRNAME),
-        os.path.join(probe, SUMMARY_WINDOW_DIRNAME),
-    )
-    update_daily_summary(spark, pd_, b1, batch_id="b1")
-    update_window_summary(spark, pw, pd_, b1, batch_id="b1")
-    update_daily_summary(spark, pd_, b2, batch_id="b2")
-    state.update(budget=10**9, ops=0)
-    update_window_summary(spark, pw, pd_, b2, batch_id="b2")
-    total_ops = state["ops"]
-    state["budget"] = None
-    assert total_ops >= 6
-    assert _win_rows(spark.read.parquet(pw)) == expected
-
-    for k in range(1, total_ops):
-        base = str(tmp_path / f"tear{k}")
+    def setup(tag):
+        # daily and window hold b1, daily holds b2: the window's b2
+        # fold is the day-roll commit under test
+        base = str(tmp_path / tag)
         dp = os.path.join(base, SUMMARY_DAILY_DIRNAME)
         wp = os.path.join(base, SUMMARY_WINDOW_DIRNAME)
         update_daily_summary(spark, dp, b1, batch_id="b1")
         update_window_summary(spark, wp, dp, b1, batch_id="b1")
         update_daily_summary(spark, dp, b2, batch_id="b2")
-        state.update(budget=k, ops=0)
-        with pytest.raises(Torn):
-            update_window_summary(spark, wp, dp, b2, batch_id="b2")
-        state["budget"] = None
-        update_window_summary(spark, wp, dp, b2, batch_id="b2")  # replay
-        assert _win_rows(spark.read.parquet(wp)) == expected, (
-            f"tear at op {k}"
-        )
+        return dp, wp
+
+    def check(paths, label):
+        assert _win_rows(spark.read.parquet(paths[1])) == expected, label
+
+    tear_sweep(
+        setup,
+        lambda paths: update_window_summary(
+            spark, paths[1], paths[0], b2, batch_id="b2"
+        ),
+        check,
+        min_ops=6,
+    )
