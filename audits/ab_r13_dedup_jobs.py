@@ -74,7 +74,7 @@ def main():
     from nerd_spark.sources.layout import (
         MINHASH_BANDS_DIRNAME,
         optimize_layout,
-        read_summary_cached,
+        serve_table,
     )
 
     old = load_old_dedup(rev)
@@ -93,7 +93,9 @@ def main():
         noop(REGISTRY["dedup_incremental"](spark, d))
 
     def run_incr_old():
-        bands = read_summary_cached(spark, d, MINHASH_BANDS_DIRNAME)
+        bands = serve_table(
+            spark, d, MINHASH_BANDS_DIRNAME, sources=("documents.parquet",)
+        )
         noop(old.incremental_minhash_pairs_indexed(docs, bands, batch))
 
     def run_csc_new():

@@ -48,6 +48,9 @@ exact brute-force baseline is pinned in tests/test_pq.py.
 
 from __future__ import annotations
 
+import json
+import os
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -667,6 +670,13 @@ def ivfpq_delete(spark, path: str, ids) -> None:
     )
 
 
+# Commit point of a list compaction, written atomically into the
+# aside after its write job: the touched lists, and those of them that
+# still hold rows (staged in the aside). From the moment it exists the
+# aside is the only complete copy of the touched lists' live rows.
+_COMPACT_MANIFEST = "_nerd_compact.json"
+
+
 def ivfpq_compact(spark, path: str) -> int:
     """Physically drop tombstoned rows — O(touched lists), never a
     full rebuild: only the ``cid=`` partitions that actually hold a
@@ -675,9 +685,18 @@ def ivfpq_compact(spark, path: str) -> int:
     read past their id column, not rewritten, byte-identical after
     (tested). Clears the tombstone sidecar on success. Returns the
     number of lists rewritten.
+
+    Crash-safe: on entry a complete aside (one holding the manifest)
+    is landed (:func:`_land_compaction`) and an incomplete one, whose
+    touched lists are still live, is discarded.
     """
     from nerd_spark.sources import fsutil
 
+    aside = path + ".compact"
+    txt = fsutil.read_text(spark, os.path.join(aside, _COMPACT_MANIFEST))
+    if txt is not None:
+        return _land_compaction(spark, path, json.loads(txt))
+    fsutil.delete(spark, aside, recursive=True)
     tomb = _read_tombstones(spark, path)
     if tomb is None:
         return 0
@@ -699,20 +718,43 @@ def ivfpq_compact(spark, path: str) -> int:
         .filter(F.col("cid").isin(touched))
         .join(F.broadcast(tomb), "id", "left_anti")
     )
-    aside = path + ".compact"
-    fsutil.delete(spark, aside, recursive=True)
     keep.repartition(len(touched), F.col("cid")).write.mode(
         "overwrite"
     ).partitionBy("cid").parquet(aside)
-    for cid in touched:
-        old = f"{path}/cid={cid}"
-        new = f"{aside}/cid={cid}"
-        fsutil.delete(spark, old, recursive=True)
-        if fsutil.exists(spark, new):  # a fully-deleted list has no dir
-            fsutil.rename(spark, new, old)
+    manifest = {
+        "touched": [f"cid={c}" for c in touched],
+        # a fully-deleted list has no dir in the aside
+        "staged": [
+            n for n in fsutil.list_names(spark, aside) if n.startswith("cid=")
+        ],
+    }
+    fsutil.write_text_atomic(
+        spark, os.path.join(aside, _COMPACT_MANIFEST), json.dumps(manifest)
+    )
+    return _land_compaction(spark, path, manifest)
+
+
+def _land_compaction(spark, path: str, manifest: dict) -> int:
+    """Finish a compaction whose aside is complete: swap its staged
+    lists in (a false rename raises), delete the fully-tombstoned
+    lists, drop the aside, then clear the tombstones. Each step is
+    idempotent, so a tear anywhere before the aside is gone re-runs
+    this from the manifest; a tear after it leaves tombstones whose
+    rows are gone, which the next call clears without a rewrite."""
+    from nerd_spark.sources import fsutil
+
+    aside = path + ".compact"
+    fsutil.swap_partition_dirs(spark, aside, path, "cid=")
+    for name in sorted(set(manifest["touched"]) - set(manifest["staged"])):
+        dead = os.path.join(path, name)
+        # the tombstones go next: a list left behind would resurface
+        if not fsutil.delete(spark, dead, recursive=True) and (
+            fsutil.exists(spark, dead)
+        ):
+            raise IOError(f"ivfpq_compact: failed to remove {dead}")
     fsutil.delete(spark, aside, recursive=True)
     fsutil.delete(spark, path + ".tombstones", recursive=True)
-    return len(touched)
+    return len(manifest["touched"])
 
 
 def ivfpq_maintenance_due(

@@ -26,44 +26,6 @@ _DAILY = """
 """
 
 
-def _summary_fresh(spark, sf_dir, dirname):
-    """True iff the derived summary under `dirname` exists, committed
-    (_SUCCESS), and is no older than the raw events it summarizes.
-    The mtime probe is the cheap staleness guard the advisor asked
-    for: rewriting/appending files under events.parquet bumps the
-    directory mtime past the summary's commit marker, so a summary
-    that was not re-maintained after an events change is ignored and
-    the query falls back to the raw scan (exact, just slower). A
-    production deployment records a source fingerprint in the commit
-    instead; same seam. Probes go through the Hadoop FS layer
-    (sources/fsutil.py) so a DFS data dir (hdfs://, s3a://) SERVES
-    from its summaries instead of silently always falling back — the
-    same portability rule as the streaming state listings."""
-    import os
-
-    from nerd_spark.sources import fsutil
-
-    from nerd_spark.sources.layout import SUMMARY_WINDOW_DIRNAME, WINDOW_GATE
-
-    # the window table commits through its own gate marker (see
-    # layout.WINDOW_GATE: _SUCCESS is auto-recreated mid-commit on
-    # the full-overwrite path and cannot order against the sidecar
-    # anchor write); the other summaries gate on _SUCCESS
-    marker = WINDOW_GATE if dirname == SUMMARY_WINDOW_DIRNAME else "_SUCCESS"
-    success = os.path.join(sf_dir, dirname, marker)
-    if not fsutil.exists(spark, success):
-        return False
-    events = os.path.join(sf_dir, "events.parquet")
-    # returns the marker mtime (truthy) rather than True: the serve
-    # gate uses it as a self-invalidating memo key (any rewrite bumps
-    # the marker) without paying a second mtime probe
-    try:
-        smtime = fsutil.mtime(spark, success)
-        return smtime if fsutil.mtime(spark, events) <= smtime else False
-    except Exception:  # events table absent (pure derived-state dir)
-        return fsutil.mtime(spark, success)
-
-
 def _daily(spark, sf_dir):
     """The A1 base rollup. When the data dir carries the ingest-written
     summary table (sources/layout.py writes it during the layout pass —
@@ -75,24 +37,21 @@ def _daily(spark, sf_dir):
     summary read is normalized to the raw path's column order (the
     partitioned store puts d last) so positional consumers can't
     diverge between the two paths."""
-    import os
+    from nerd_spark.sources.layout import SUMMARY_DAILY_DIRNAME, serve_table
 
-    from nerd_spark.sources.layout import SUMMARY_DAILY_DIRNAME
-
-    p = os.path.join(sf_dir, SUMMARY_DAILY_DIRNAME)
-    if _summary_fresh(spark, sf_dir, SUMMARY_DAILY_DIRNAME):
-        return spark.read.parquet(p).select("entity", "d", "cat", "n", "val_dec")
+    cols = ("entity", "d", "cat", "n", "val_dec")
+    s = serve_table(spark, sf_dir, SUMMARY_DAILY_DIRNAME, expect_cols=cols)
+    if s is not None:
+        return s.select(*cols)
     return D.daily_rollup(t(spark, sf_dir, "events"), "user_id")
 
 
 def _as_of(spark, sf_dir):
-    import os
+    from nerd_spark.sources.layout import SUMMARY_ASOF_DIRNAME, serve_table
 
-    from nerd_spark.sources.layout import SUMMARY_ASOF_DIRNAME
-
-    p = os.path.join(sf_dir, SUMMARY_ASOF_DIRNAME)
-    if _summary_fresh(spark, sf_dir, SUMMARY_ASOF_DIRNAME):
-        return spark.read.parquet(p)
+    s = serve_table(spark, sf_dir, SUMMARY_ASOF_DIRNAME)
+    if s is not None:
+        return s
     return t(spark, sf_dir, "events").agg(F.max("ts").alias("as_of"))
 
 
@@ -114,24 +73,20 @@ def _daily_with_asof(spark, sf_dir, max_age: int | None = None):
     # dirs keep the original full-scan crossJoin plan.
     import datetime as _dt
 
-    from nerd_spark.sources.layout import SUMMARY_ASOF_DIRNAME
+    from nerd_spark.sources import layout as L
 
-    if (
-        max_age is not None
-        and _summary_fresh(spark, sf_dir, "summary_daily.parquet")
-        and _summary_fresh(spark, sf_dir, SUMMARY_ASOF_DIRNAME)
+    if max_age is not None and L.summary_fresh(
+        spark, sf_dir, L.SUMMARY_DAILY_DIRNAME
     ):
-        import os
-
-        as_of_val = spark.read.parquet(
-            os.path.join(sf_dir, SUMMARY_ASOF_DIRNAME)
-        ).first()[0]
-        cutoff = as_of_val.date() - _dt.timedelta(days=max_age)
-        return (
-            _daily(spark, sf_dir)
-            .filter(F.col("d") >= F.lit(cutoff))
-            .withColumn("as_of", F.lit(as_of_val))
-        )
+        asof = L.serve_table(spark, sf_dir, L.SUMMARY_ASOF_DIRNAME)
+        if asof is not None:
+            as_of_val = asof.first()[0]
+            cutoff = as_of_val.date() - _dt.timedelta(days=max_age)
+            return (
+                _daily(spark, sf_dir)
+                .filter(F.col("d") >= F.lit(cutoff))
+                .withColumn("as_of", F.lit(as_of_val))
+            )
     return D.with_as_of(_daily(spark, sf_dir), _as_of(spark, sf_dir))
 
 
@@ -235,15 +190,15 @@ def _window_table(spark, sf_dir):
     time; the (entities x days x cats) work happened once at ingest
     (sources/layout.py::window_rollup / update_window_summary).
 
-    Routed through the memoized serve gate (_event_serve_table): the
+    Routed through the memoized serve gate (layout.serve_table): the
     schema probe doubles as the older-engine-version column gate (a
     pre-daily-vectors table FALLS BACK to the raw recompute instead
     of failing), and a repeat query pays only the freshness FS stats —
     the per-call footer read was the dominant piece of this family's
     sub-second floor (r12 verdict #6 piece timings in PLANS.md)."""
-    from nerd_spark.sources.layout import SUMMARY_WINDOW_DIRNAME
+    from nerd_spark.sources.layout import SUMMARY_WINDOW_DIRNAME, serve_table
 
-    return _event_serve_table(
+    return serve_table(
         spark,
         sf_dir,
         SUMMARY_WINDOW_DIRNAME,
@@ -761,28 +716,25 @@ def a16_rollup_revenue(spark, sf_dir):
     # two longs and is broadcast EXPLICITLY (good to ~1e8 customers;
     # auto-broadcast gave up past the 10 MB threshold at the 80x
     # point, planning the shuffle the r7 verdict flagged).
-    import os
-
     from nerd_spark.queries.base import exact_sum_u4
     from nerd_spark.sources.layout import (
         SUMMARY_A16_DIRNAME,
         bucketed_pair,
-        read_summary_cached,
-        summary_fresh,
+        serve_table,
     )
 
     # Serve path (r8): the ingest-maintained (r_name, n_name) revenue
     # partials — additive u4 longs, so re-deriving the rollup margins
     # from the 25-row base is bit-identical to the 4-way join
     # (tests/test_q1_a16_serve.py); gate falls back to the join.
-    if summary_fresh(
+    s = serve_table(
         spark,
         sf_dir,
         SUMMARY_A16_DIRNAME,
-        sources=("orders.parquet", "customer.parquet"),
         expect_cols=("r_name", "n_name", "rev_u4"),
-    ):
-        s = read_summary_cached(spark, sf_dir, SUMMARY_A16_DIRNAME)
+        sources=("orders.parquet", "customer.parquet"),
+    )
+    if s is not None:
         return (
             s.rollup("r_name", "n_name")
             .agg(F.round(F.sum("rev_u4") / F.lit(1e4), 2).alias("revenue"))
@@ -829,25 +781,15 @@ def _merged_table(spark, sf_dir):
     absent/stale/older-schema. One mergeable row per entity
     (sources/layout.py::update_merged_summary), so serving is a
     projection — the full-history fold happened at ingest."""
-    import os
+    from nerd_spark.sources.layout import SUMMARY_MERGED_DIRNAME, serve_table
 
-    from nerd_spark.sources.layout import SUMMARY_MERGED_DIRNAME
-
-    if _summary_fresh(spark, sf_dir, SUMMARY_MERGED_DIRNAME):
-        st = spark.read.parquet(
-            os.path.join(sf_dir, SUMMARY_MERGED_DIRNAME)
-        )
-        required = {
-            "user_id",
-            "total",
-            "first_seen",
-            "types_arr",
-            "last_arrival",
-            "last_value",
-        }
-        if required.issubset(set(st.columns)):
-            return st
-    return None
+    return serve_table(
+        spark,
+        sf_dir,
+        SUMMARY_MERGED_DIRNAME,
+        expect_cols=("user_id", "total", "first_seen", "types_arr",
+                     "last_arrival", "last_value"),
+    )
 
 
 
@@ -950,60 +892,6 @@ def sessionize_stats(spark, sf_dir):
     return session_stats(ev, "user_id", order_tiebreak="event_id", gap_minutes=30)
 
 
-_SERVE_TABLE_CACHE: dict = {}
-
-
-def _event_serve_table(spark, sf_dir, dirname, meta_want, expect_cols):
-    """Shared serve gate for the ingest-maintained event-analytics
-    tables: committed + no older than events (_summary_fresh), meta
-    sidecar matches the requested parameter binding, schema carries
-    the expected columns. Returns the DataFrame or None (fall back to
-    the raw operator — exact, just slower).
-
-    The meta read and the parquet schema probe (~0.1 s of footer I/O —
-    the dominant repeat-gate cost, r11 verdict #6) are memoized by the
-    (commit marker, meta sidecar) mtime pair: any rewrite goes through
-    the drop/touch gate discipline and bumps the marker, and a bare
-    meta edit (manual surgery) bumps the sidecar — either way the key
-    self-invalidates and a repeat query pays exactly the freshness
-    probes plus its one job."""
-    import os
-
-    from nerd_spark.sources import fsutil
-    from nerd_spark.sources.layout import SUMMARY_META_NAME, read_summary_meta
-
-    smtime = _summary_fresh(spark, sf_dir, dirname)
-    if not smtime:
-        return None
-    path = os.path.join(sf_dir, dirname)
-    try:
-        mmtime = fsutil.mtime(spark, os.path.join(path, SUMMARY_META_NAME))
-    except Exception:  # meta-less table (plain count projections)
-        mmtime = 0.0
-    key = (path, smtime, mmtime)
-    cached = _SERVE_TABLE_CACHE.get(key)
-    if cached is None:
-        meta = read_summary_meta(spark, path)
-        try:
-            schema = spark.read.parquet(path).schema
-        except Exception:
-            return None
-        if len(_SERVE_TABLE_CACHE) > 256:  # bound the session cache
-            _SERVE_TABLE_CACHE.clear()
-        _SERVE_TABLE_CACHE[key] = (meta, schema)
-    else:
-        meta, schema = cached
-    if meta_want:  # parameter-bound table: sidecar must match
-        if meta is None or any(
-            meta.get(k) != v for k, v in meta_want.items()
-        ):
-            return None
-    if not set(expect_cols) <= {f.name for f in schema.fields}:
-        return None
-    return spark.read.schema(schema).parquet(path)
-
-
-
 # Shared by funnel_stages (raw/serve-gated) and funnel_stages_served
 # (in-query fold+serve) — identical semantics, one oracle text.
 _FUNNEL_SQL = """
@@ -1058,10 +946,11 @@ def funnel_stages(spark, sf_dir):
     from nerd_spark.sources.layout import (
         SUMMARY_FUNNEL_DIRNAME,
         SUMMARY_FUNNEL_RESULT_DIRNAME,
+        serve_table,
     )
 
     stages = ["view", "click", "purchase"]
-    res = _event_serve_table(
+    res = serve_table(
         spark,
         sf_dir,
         SUMMARY_FUNNEL_RESULT_DIRNAME,
@@ -1071,7 +960,7 @@ def funnel_stages(spark, sf_dir):
     if res is not None:
         return res.select("stage_idx", "stage", "users", "rate")
     tcols = tuple(f"t{i}" for i in range(1, len(stages) + 1))
-    st = _event_serve_table(
+    st = serve_table(
         spark, sf_dir, SUMMARY_FUNNEL_DIRNAME, {"stages": stages}, tcols
     )
     if st is not None:
@@ -1177,18 +1066,19 @@ def cohort_retention_q(spark, sf_dir):
         COHORT_DEFAULTS,
         SUMMARY_COHORT_DIRNAME,
         SUMMARY_COHORT_RESULT_DIRNAME,
+        serve_table,
     )
 
     out_cols = (
         "cohort_date", "period", "cohort_size", "active_users", "retention",
     )
-    res = _event_serve_table(
+    res = serve_table(
         spark, sf_dir, SUMMARY_COHORT_RESULT_DIRNAME, COHORT_DEFAULTS,
         out_cols,
     )
     if res is not None:
         return res.select(*out_cols)
-    st = _event_serve_table(
+    st = serve_table(
         spark, sf_dir, SUMMARY_COHORT_DIRNAME, {}, ("u", "days", "anchors")
     )
     if st is not None:

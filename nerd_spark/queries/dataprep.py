@@ -547,13 +547,13 @@ def hh_event_users(spark, sf_dir):
     # exact and the query is one O(keys) scan; raw dirs (every oracle)
     # recompute from events.
     from nerd_spark.operators import sketches as SK
-    from nerd_spark.queries.analytics import _event_serve_table
     from nerd_spark.sources.layout import (
         HH_USERS_MIN_FRAC,
         SUMMARY_HH_USERS_RESULT_DIRNAME,
+        serve_table,
     )
 
-    res = _event_serve_table(
+    res = serve_table(
         spark,
         sf_dir,
         SUMMARY_HH_USERS_RESULT_DIRNAME,
@@ -595,13 +595,13 @@ def hh_users_min_count(spark, sf_dir):
     # the ingest-maintained per-entity count table, then one plain
     # map-side-combined count over raw events.
     from nerd_spark.operators import sketches as SK
-    from nerd_spark.queries.analytics import _event_serve_table
     from nerd_spark.sources.layout import (
         HH_USERS_MIN_COUNT,
         SUMMARY_HH_MINCOUNT_RESULT_DIRNAME,
+        serve_table,
     )
 
-    res = _event_serve_table(
+    res = serve_table(
         spark,
         sf_dir,
         SUMMARY_HH_MINCOUNT_RESULT_DIRNAME,
@@ -642,13 +642,13 @@ def hh_by_type_min_count(spark, sf_dir):
     # binding is the scale-stable one). Serve tiers: resolved answer,
     # then the (type, entity) count table, then one pair count.
     from nerd_spark.operators import sketches as SK
-    from nerd_spark.queries.analytics import _event_serve_table
     from nerd_spark.sources.layout import (
         HH_BY_TYPE_MIN_COUNT,
         SUMMARY_HH_BY_MINCOUNT_RESULT_DIRNAME,
+        serve_table,
     )
 
-    res = _event_serve_table(
+    res = serve_table(
         spark,
         sf_dir,
         SUMMARY_HH_BY_MINCOUNT_RESULT_DIRNAME,
@@ -715,38 +715,34 @@ def hh_users_served(spark, sf_dir):
 
 
 def _user_counts(spark, sf_dir):
-    from nerd_spark.queries.analytics import _event_serve_table
-    from nerd_spark.sources.layout import SUMMARY_USER_COUNTS_DIRNAME
+    from nerd_spark.sources import layout as L
 
-    return _event_serve_table(
-        spark, sf_dir, SUMMARY_USER_COUNTS_DIRNAME, {}, ("u", "cnt")
+    return L.serve_table(
+        spark, sf_dir, L.SUMMARY_USER_COUNTS_DIRNAME, {}, ("u", "cnt")
     )
 
 
 def _type_user_counts(spark, sf_dir):
-    from nerd_spark.queries.analytics import _event_serve_table
-    from nerd_spark.sources.layout import SUMMARY_TYPE_USER_DIRNAME
+    from nerd_spark.sources import layout as L
 
-    return _event_serve_table(
-        spark, sf_dir, SUMMARY_TYPE_USER_DIRNAME, {}, ("et", "u", "cnt")
+    return L.serve_table(
+        spark, sf_dir, L.SUMMARY_TYPE_USER_DIRNAME, {}, ("et", "u", "cnt")
     )
 
 
 def _value_counts(spark, sf_dir):
-    from nerd_spark.queries.analytics import _event_serve_table
-    from nerd_spark.sources.layout import SUMMARY_VALUE_COUNTS_DIRNAME
+    from nerd_spark.sources import layout as L
 
-    return _event_serve_table(
-        spark, sf_dir, SUMMARY_VALUE_COUNTS_DIRNAME, {}, ("v", "cnt")
+    return L.serve_table(
+        spark, sf_dir, L.SUMMARY_VALUE_COUNTS_DIRNAME, {}, ("v", "cnt")
     )
 
 
 def _value_hist(spark, sf_dir):
-    from nerd_spark.queries.analytics import _event_serve_table
-    from nerd_spark.sources.layout import SUMMARY_VALUE_HIST_DIRNAME
+    from nerd_spark.sources import layout as L
 
-    return _event_serve_table(
-        spark, sf_dir, SUMMARY_VALUE_HIST_DIRNAME, {}, ("et", "v", "cnt")
+    return L.serve_table(
+        spark, sf_dir, L.SUMMARY_VALUE_HIST_DIRNAME, {}, ("et", "v", "cnt")
     )
 
 
@@ -798,13 +794,13 @@ def hh_by_event_type(spark, sf_dir):
     # aggregation's grain, so the query is an O(pairs) scan + the
     # per-group totals join.
     from nerd_spark.operators import sketches as SK
-    from nerd_spark.queries.analytics import _event_serve_table
     from nerd_spark.sources.layout import (
         HH_BY_TYPE_MIN_FRAC,
         SUMMARY_HH_BY_TYPE_RESULT_DIRNAME,
+        serve_table,
     )
 
-    res = _event_serve_table(
+    res = serve_table(
         spark,
         sf_dir,
         SUMMARY_HH_BY_TYPE_RESULT_DIRNAME,
@@ -858,14 +854,14 @@ def top_frequent_users(spark, sf_dir):
     # per-entity count table — one O(keys) scan +
     # TakeOrderedAndProject, no corpus pass, no screen.
     from nerd_spark.operators import sketches as SK
-    from nerd_spark.queries.analytics import _event_serve_table
     from nerd_spark.sources.layout import (
         HH_USERS_MIN_FRAC,
         SUMMARY_TOPFREQ_RESULT_DIRNAME,
         TOPFREQ_K,
+        serve_table,
     )
 
-    res = _event_serve_table(
+    res = serve_table(
         spark,
         sf_dir,
         SUMMARY_TOPFREQ_RESULT_DIRNAME,
@@ -914,14 +910,14 @@ def quantile_event_values(spark, sf_dir):
     # over distinct values, exact for ANY probs. served==raw pinned
     # by tests/test_quantile_serve.py; oracles stay on raw.
     from nerd_spark.operators import sketches as SK
-    from nerd_spark.queries.analytics import _event_serve_table
     from nerd_spark.sources.layout import (
         QUANTILE_PROBS_DEFAULT,
         SUMMARY_QUANTILE_RESULT_DIRNAME,
+        serve_table,
     )
 
     probs = list(QUANTILE_PROBS_DEFAULT)
-    res = _event_serve_table(
+    res = serve_table(
         spark,
         sf_dir,
         SUMMARY_QUANTILE_RESULT_DIRNAME,
@@ -999,14 +995,14 @@ def quantile_by_event_type(spark, sf_dir):
     # sum lookup over distinct (type, value) pairs, exact for ANY
     # probs — then the raw exact operator.
     from nerd_spark.operators import sketches as SK
-    from nerd_spark.queries.analytics import _event_serve_table
     from nerd_spark.sources.layout import (
         QUANTILE_BY_PROBS_DEFAULT,
         SUMMARY_QUANTILE_BY_RESULT_DIRNAME,
+        serve_table,
     )
 
     probs = list(QUANTILE_BY_PROBS_DEFAULT)
-    res = _event_serve_table(
+    res = serve_table(
         spark,
         sf_dir,
         SUMMARY_QUANTILE_BY_RESULT_DIRNAME,
@@ -1050,12 +1046,8 @@ def corpus_stats_card(spark, sf_dir):
         DOC_CARD_PROBS,
         SUMMARY_DOC_CARD_RESULT_DIRNAME,
         SUMMARY_DOC_TOKEN_HIST_DIRNAME,
-        read_summary_cached,
-        read_summary_meta,
-        summary_fresh,
+        serve_table,
     )
-
-    import os as _os
 
     # Serve tiers: the |sources|-row resolved card first (meta-bound
     # to the prob list — a file read), then the layout-built
@@ -1063,32 +1055,27 @@ def corpus_stats_card(spark, sf_dir):
     # quantiles derive from it, so a fresh layout dir answers the
     # card without a corpus scan. Both gated on documents freshness
     # + schema.
-    if summary_fresh(
+    card_cols = (
+        "source", "n_docs", "total_tokens", "p50_tokens", "p95_tokens",
+    )
+    card = serve_table(
         spark,
         sf_dir,
         SUMMARY_DOC_CARD_RESULT_DIRNAME,
-        ("documents.parquet",),
-        ("source", "n_docs", "total_tokens", "p50_tokens", "p95_tokens"),
-    ):
-        cpath = _os.path.join(sf_dir, SUMMARY_DOC_CARD_RESULT_DIRNAME)
-        meta = read_summary_meta(spark, cpath)
-        if meta is not None and meta.get("probs") == list(DOC_CARD_PROBS):
-            return read_summary_cached(
-                spark, sf_dir, SUMMARY_DOC_CARD_RESULT_DIRNAME
-            ).select(
-                "source", "n_docs", "total_tokens",
-                "p50_tokens", "p95_tokens",
-            )
-    if summary_fresh(
+        {"probs": list(DOC_CARD_PROBS)},
+        card_cols,
+        sources=("documents.parquet",),
+    )
+    if card is not None:
+        return card.select(*card_cols)
+    h = serve_table(
         spark,
         sf_dir,
         SUMMARY_DOC_TOKEN_HIST_DIRNAME,
-        ("documents.parquet",),
-        ("src", "ntok", "cnt"),
-    ):
-        h = read_summary_cached(
-            spark, sf_dir, SUMMARY_DOC_TOKEN_HIST_DIRNAME
-        )
+        expect_cols=("src", "ntok", "cnt"),
+        sources=("documents.parquet",),
+    )
+    if h is not None:
         vols = h.groupBy(F.col("src").alias("source")).agg(
             F.sum("cnt").alias("n_docs"),
             F.sum(F.col("ntok") * F.col("cnt")).alias("total_tokens"),
@@ -1191,24 +1178,23 @@ def dedup_incremental(spark, sf_dir):
     from nerd_spark.sources.fsutil import estimate_input_bytes
     from nerd_spark.sources.layout import (
         MINHASH_BANDS_DIRNAME,
-        read_summary_cached,
-        summary_fresh,
+        serve_table,
     )
 
     docs = t(spark, sf_dir, "documents")
     batch = lambda c: c % 5 == 4  # noqa: E731
     min_bytes = _bytes_conf(spark, "spark.nerd.dedupIndexMinBytes", 8 << 20)
     est = estimate_input_bytes(docs)
-    if (est is None or est >= min_bytes) and summary_fresh(
-        spark,
-        sf_dir,
-        MINHASH_BANDS_DIRNAME,
-        sources=("documents.parquet",),
-        expect_cols=("id", "b", "h"),
-    ):
-        import os
-
-        bands = read_summary_cached(spark, sf_dir, MINHASH_BANDS_DIRNAME)
+    bands = None
+    if est is None or est >= min_bytes:
+        bands = serve_table(
+            spark,
+            sf_dir,
+            MINHASH_BANDS_DIRNAME,
+            expect_cols=("id", "b", "h"),
+            sources=("documents.parquet",),
+        )
+    if bands is not None:
         return DD.incremental_minhash_pairs_indexed(docs, bands, batch)
     return DD.incremental_minhash_pairs(docs, batch)
 

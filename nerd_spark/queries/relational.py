@@ -51,26 +51,23 @@ def q1_pricing_summary(spark, sf_dir):
     # partial rows is BIT-IDENTICAL to the raw scan (pinned in
     # tests/test_layout_u4_bucketed.py); freshness/schema gate falls back
     # to the raw path (the driver's sf0.01 correctness runs).
-    import os
-
     from nerd_spark.sources.layout import (
         SUMMARY_Q1_DIRNAME,
-        read_summary_cached,
-        summary_fresh,
+        serve_table,
     )
 
-    if summary_fresh(
+    s = serve_table(
         spark,
         sf_dir,
         SUMMARY_Q1_DIRNAME,
-        sources=("lineitem.parquet",),
         expect_cols=(
             "l_shipdate", "l_returnflag", "l_linestatus", "qty_sum",
             "ep_u4", "dp_u4", "ch_u4", "disc_u4", "n_ep", "n_disc",
             "n_qty", "cnt",
         ),
-    ):
-        s = read_summary_cached(spark, sf_dir, SUMMARY_Q1_DIRNAME)
+        sources=("lineitem.parquet",),
+    )
+    if s is not None:
         return (
             s.filter(
                 F.col("l_shipdate")
@@ -630,13 +627,13 @@ def w1_topk(spark, sf_dir):
     # (sources/layout.py::update_topk_summary) and the query becomes
     # a 100-row file read; staleness / meta mismatch / raw dirs take
     # the TakeOrderedAndProject scan (every oracle does).
-    from nerd_spark.queries.analytics import _event_serve_table
     from nerd_spark.sources.layout import (
         SUMMARY_TOPK_VALUE_DIRNAME,
         TOPK_VALUE_K,
+        serve_table,
     )
 
-    res = _event_serve_table(
+    res = serve_table(
         spark,
         sf_dir,
         SUMMARY_TOPK_VALUE_DIRNAME,

@@ -130,13 +130,14 @@ MINHASH_BANDS_DIRNAME = "minhash_bands.parquet"
 
 
 # Reader gate for the window table. A CUSTOM marker, not _SUCCESS:
-# the day-roll path is a plain (non-dynamic) overwrite whose job
-# commit auto-recreates root _SUCCESS BEFORE the sidecar meta anchor
-# is written — gating on _SUCCESS could serve a new-anchor table
-# against a stale anchor after a crash in that window. Spark never
-# creates this file, so deleting it first and touching it only after
-# BOTH the table and the meta commit makes the gate ordering real on
-# every write path (torn state -> no gate -> raw-recompute fallback).
+# the layout seed writes the table with a plain overwrite whose job
+# commit creates root _SUCCESS BEFORE the sidecar meta anchor is
+# written — gating on _SUCCESS could serve a new-anchor table against
+# a stale anchor after a crash in that window. (The fold commits
+# through _staged_partition_commit, whose swap never recreates a root
+# marker.) Spark never creates this file, so touching it only after
+# BOTH the table and the meta commit keeps the gate ordered on every
+# write path (torn state -> no gate -> raw-recompute fallback).
 WINDOW_GATE = "_NERD_GATE"
 
 
@@ -570,8 +571,7 @@ def optimize_layout(
                     .agg(F.count("*").alias("cnt"))
                 )
                 dhpath = os.path.join(out_dir, SUMMARY_DOC_TOKEN_HIST_DIRNAME)
-                dh.coalesce(1).write.mode("overwrite").parquet(dhpath)
-                fsutil.touch(spark, os.path.join(dhpath, "_SUCCESS"))
+                _commit_dir(spark, dh, dhpath)
                 # resolved card rows (|sources|): volumes + exact token
                 # quantiles from the committed histogram — the registered
                 # corpus_stats_card becomes a file read (meta-bound to the
@@ -600,13 +600,12 @@ def optimize_layout(
                         F.when(F.col("p") == DOC_CARD_PROBS[1], F.col("value"))
                     ).alias("p95_tokens"),
                 )
-                cpath = os.path.join(out_dir, SUMMARY_DOC_CARD_RESULT_DIRNAME)
-                card = vols.join(wide, "source").localCheckpoint()
-                card.coalesce(1).write.mode("overwrite").parquet(cpath)
-                write_summary_meta(
-                    spark, cpath, {"probs": list(DOC_CARD_PROBS)}
+                _commit_dir(
+                    spark,
+                    vols.join(wide, "source"),
+                    os.path.join(out_dir, SUMMARY_DOC_CARD_RESULT_DIRNAME),
+                    {"probs": list(DOC_CARD_PROBS)},
                 )
-                fsutil.touch(spark, os.path.join(cpath, "_SUCCESS"))
             (
                 minhash_band_table(shingle_arrays(_spread(dd), "doc_id", "text", 3))
                 .coalesce(max(1, min(scale, 16)))
@@ -629,8 +628,8 @@ def optimize_layout(
             )
             _seed(spark, daily, daily.state(ev))
             as_of = ev.agg(F.max("ts").alias("as_of"))
-            as_of.write.mode("overwrite").parquet(
-                os.path.join(out_dir, SUMMARY_ASOF_DIRNAME)
+            _commit_dir(
+                spark, as_of, os.path.join(out_dir, SUMMARY_ASOF_DIRNAME)
             )
             # Second-level window rollup (the A2 answer table): reading
             # the just-committed daily summary (compact) rather than
@@ -1115,10 +1114,12 @@ def _merged_spec(path: str, entity: str = "user_id"):
 
 
 def write_summary_meta(spark: SparkSession, dirpath: str, meta: dict) -> None:
-    """Parameter-binding sidecar for a derived table, written BEFORE
-    the _SUCCESS gate is (re)touched so a reader that sees the gate
-    also sees the binding; a gate-passing dir with missing/mismatched
-    meta falls back instead of serving wrong parameters."""
+    """Parameter-binding sidecar for a derived table; a gate-passing
+    dir with missing/mismatched meta falls back instead of serving
+    wrong parameters. The commit owns the ordering (a reader that sees
+    the gate must also see the binding): :func:`_commit_dir` writes
+    the sidecar inside its staging dir before the marker, and the
+    partitioned folds write it before re-touching their gate."""
     fsutil.write_text(
         spark, os.path.join(dirpath, SUMMARY_META_NAME), json.dumps(meta)
     )
@@ -1183,17 +1184,22 @@ def _fold_ledger_skip(
 
 
 def _fold_ledger_record(
-    spark: SparkSession, dirpath: str, batch_id: str | None
+    spark: SparkSession, dirpath: str, batch_id: str | None, into=None
 ) -> None:
-    if batch_id is None:
+    """Append ``batch_id`` to the ledger of ``dirpath``, written to
+    ``into`` (default: the same dir). A ledger that is absent and
+    gains no id is not written."""
+    if batch_id is None and into is None:
         return
     ids = [i for i in _ledger_ids(spark, dirpath) if i != batch_id]
-    ids.append(batch_id)
-    fsutil.write_text(
-        spark,
-        os.path.join(dirpath, SUMMARY_LEDGER_NAME),
-        json.dumps(ids[-_LEDGER_KEEP:]),
-    )
+    if batch_id is not None:
+        ids.append(batch_id)
+    if ids:
+        fsutil.write_text(
+            spark,
+            os.path.join(into or dirpath, SUMMARY_LEDGER_NAME),
+            json.dumps(ids[-_LEDGER_KEEP:]),
+        )
 
 
 # Written into the staging dir AFTER its write job completes and
@@ -1306,15 +1312,6 @@ def _staged_partition_commit(
     stores without atomic rename (raw S3) want an ACID table format
     (Delta/Iceberg) here instead — same note as merge_facts. Returns
     the staged partition names."""
-
-    def must(ok: bool, what: str, path: str) -> None:
-        # Hadoop rename/delete report failures by returning false —
-        # unchecked, a false here silently drops a live partition
-        if not ok:
-            raise IOError(
-                f"_staged_partition_commit: failed to {what}: {path}"
-            )
-
     staging = table_path.rstrip("/") + ".staging"
     fsutil.delete(spark, staging, recursive=True)
     # one file per touched partition, as the dynamic overwrite kept it
@@ -1343,13 +1340,14 @@ def _staged_partition_commit(
     fsutil.delete(spark, os.path.join(table_path, gate_name))
     if full:
         for name in fsutil.list_names(spark, table_path):
-            if name.startswith(prefix) and name not in staged:
-                must(
-                    fsutil.delete(
-                        spark, os.path.join(table_path, name), recursive=True
-                    ),
-                    "remove stale partition",
-                    os.path.join(table_path, name),
+            stale = os.path.join(table_path, name)
+            # Hadoop reports a failed delete by returning false —
+            # unchecked, the stale partition would stay live
+            if name.startswith(prefix) and name not in staged and not (
+                fsutil.delete(spark, stale, recursive=True)
+            ):
+                raise IOError(
+                    f"_staged_partition_commit: failed to remove {stale}"
                 )
     fsutil.swap_partition_dirs(spark, staging, table_path, prefix)
     # staging (and its manifest) deliberately SURVIVES the swap: the
@@ -1438,6 +1436,49 @@ def _staged_commit_finalize(spark: SparkSession, table_path: str) -> None:
     )
 
 
+def _commit_dir(
+    spark: SparkSession,
+    rows,
+    path: str,
+    meta: dict | None = None,
+    batch_id: str | None = None,
+    one_file: bool = True,
+) -> None:
+    """Write-aside commit of a whole unpartitioned serve table — the
+    only writer of those dirs. ``rows`` land in ``<path>.staging``
+    (Spark's own ``_SUCCESS`` suppressed), then the meta sidecar and
+    the live dir's batch ledger (plus ``batch_id``) go inside it, then
+    ``_SUCCESS`` is touched LAST, then :func:`_recover_dir` replaces
+    the live dir. A reader sees the old dir with its old meta, or no
+    gated dir, or the new one complete: never a marker without its
+    binding. The staging write reads nothing it replaces, so plans
+    over the live dir (top-k, the as-of anchor) need no lineage cut."""
+    staging = path.rstrip("/") + ".staging"
+    (rows.coalesce(1) if one_file else rows).write.mode("overwrite").option(
+        "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+    ).parquet(staging)
+    if meta is not None:
+        write_summary_meta(spark, staging, meta)
+    _fold_ledger_record(spark, path, batch_id, into=staging)
+    fsutil.touch(spark, os.path.join(staging, "_SUCCESS"))
+    _recover_dir(spark, path)
+
+
+def _recover_dir(spark: SparkSession, path: str) -> None:
+    """Finish or discard a whole-dir commit (:func:`_commit_dir`) —
+    the rule of streaming/epochs._resume_pending: a staging dir
+    holding ``_SUCCESS`` is complete and replaces the live dir
+    (delete, then rename); one without it is discarded. Run it before
+    reading a dir whose torn commit may have deleted the live copy."""
+    staging = path.rstrip("/") + ".staging"
+    if not fsutil.exists(spark, os.path.join(staging, "_SUCCESS")):
+        fsutil.delete(spark, staging, recursive=True)
+        return
+    fsutil.delete(spark, path, recursive=True)
+    if not fsutil.rename(spark, staging, path):
+        raise IOError(f"_recover_dir: failed to swap in {staging}")
+
+
 @dataclass(frozen=True)
 class _FoldSpec:
     """One partitioned serve table as the fold driver sees it: what
@@ -1505,7 +1546,10 @@ def _fold(spark: SparkSession, spec: _FoldSpec, new_events, batch_id) -> None:
        partitions) plus the staging copy for step 1;
     7. meta sidecar, ledger record, gate touch, staging finalize;
     8. dependents (result caches, projections) from the committed
-       state.
+       state, each a whole-dir :func:`_commit_dir`; ``deps_marker`` is
+       the marker of the LAST one written, so a tear anywhere among
+       them leaves it absent or older than the gate and step 2 re-runs
+       them all.
 
     A table with no partitions never gets a gate: readers cannot infer
     a schema from it. With no state and an empty batch the fold only
@@ -1604,40 +1648,6 @@ def _seed(spark: SparkSession, spec: _FoldSpec, rows, partitioned=True) -> None:
         spec.deps()
 
 
-def _write_funnel_result(
-    spark: SparkSession, data_dir: str, state, stages: list[str]
-) -> None:
-    """Materialize the tiny resolved funnel rows (|stages| rows) from
-    the per-user state — the q1-partials discipline taken to its
-    limit: the registered query becomes a 3-row file read."""
-    from nerd_spark.operators.funnels import funnel_rows_from_times
-
-    out = os.path.join(data_dir, SUMMARY_FUNNEL_RESULT_DIRNAME)
-    res = funnel_rows_from_times(state, stages).localCheckpoint()
-    res.coalesce(1).write.mode("overwrite").parquet(out)
-    write_summary_meta(spark, out, {"stages": list(stages)})
-    fsutil.touch(spark, os.path.join(out, "_SUCCESS"))
-
-
-def _write_cohort_result(spark: SparkSession, data_dir: str, state) -> None:
-    """Materialize the resolved (cohort_date, period, ...) retention
-    rows for the default binding — |cohorts| x |periods| rows."""
-    from nerd_spark.operators.funnels import (
-        cohort_state_to_per_user,
-        retention_from_per_user,
-    )
-
-    out = os.path.join(data_dir, SUMMARY_COHORT_RESULT_DIRNAME)
-    res = retention_from_per_user(
-        cohort_state_to_per_user(state, COHORT_DEFAULTS["anchor_type"]),
-        COHORT_DEFAULTS["period_days"],
-        COHORT_DEFAULTS["n_periods"],
-    ).localCheckpoint()
-    res.coalesce(1).write.mode("overwrite").parquet(out)
-    write_summary_meta(spark, out, dict(COHORT_DEFAULTS))
-    fsutil.touch(spark, os.path.join(out, "_SUCCESS"))
-
-
 def update_keycount_summaries(
     spark: SparkSession,
     data_dir: str,
@@ -1672,10 +1682,14 @@ def _keycount_spec(
     tot_path = os.path.join(data_dir, SUMMARY_USER_COUNTS_DIRNAME)
 
     def deps():
-        spark.read.parquet(pair_path).groupBy("u").agg(
-            F.sum("cnt").alias("cnt")
-        ).write.mode("overwrite").parquet(tot_path)
-        fsutil.touch(spark, os.path.join(tot_path, "_SUCCESS"))
+        _commit_dir(
+            spark,
+            spark.read.parquet(pair_path)
+            .groupBy("u")
+            .agg(F.sum("cnt").alias("cnt")),
+            tot_path,
+            one_file=False,
+        )
         # resolved hh/top-k answers for the registered bindings
         _write_keycount_results(spark, data_dir, entity, type_col)
 
@@ -1692,7 +1706,9 @@ def _keycount_spec(
         binding={"entity": entity, "type_col": type_col},
         events_dir=data_dir,
         deps=deps,
-        deps_marker=os.path.join(tot_path, "_SUCCESS"),
+        deps_marker=os.path.join(
+            data_dir, SUMMARY_HH_BY_MINCOUNT_RESULT_DIRNAME, "_SUCCESS"
+        ),
     )
 
 
@@ -1710,72 +1726,54 @@ def _write_keycount_results(
     Meta records the grain columns AND the threshold — a fold run at
     a different entity/type binding, or a query at different
     parameters, falls through to the count-table tier (exact for any
-    binding)."""
+    binding). The by-type min-count answer is written LAST: its marker
+    is the fold's dependents marker."""
     from nerd_spark.operators import sketches as SK
 
     tot = spark.read.parquet(
         os.path.join(data_dir, SUMMARY_USER_COUNTS_DIRNAME)
     ).withColumnRenamed("u", entity)
-    hh = SK.heavy_hitters_from_counts(
-        tot, entity, HH_USERS_MIN_FRAC
-    ).localCheckpoint()
-    out = os.path.join(data_dir, SUMMARY_HH_USERS_RESULT_DIRNAME)
-    hh.coalesce(1).write.mode("overwrite").parquet(out)
-    write_summary_meta(
-        spark, out, {"entity": entity, "min_frac": HH_USERS_MIN_FRAC}
-    )
-    fsutil.touch(spark, os.path.join(out, "_SUCCESS"))
-    tf = SK.top_frequent_from_counts(tot, entity, k=TOPFREQ_K).localCheckpoint()
-    out = os.path.join(data_dir, SUMMARY_TOPFREQ_RESULT_DIRNAME)
-    tf.coalesce(1).write.mode("overwrite").parquet(out)
-    write_summary_meta(spark, out, {"entity": entity, "k": TOPFREQ_K})
-    fsutil.touch(spark, os.path.join(out, "_SUCCESS"))
-    hm = SK.heavy_keys_min_count_from_counts(
-        tot, entity, HH_USERS_MIN_COUNT
-    ).localCheckpoint()
-    out = os.path.join(data_dir, SUMMARY_HH_MINCOUNT_RESULT_DIRNAME)
-    hm.coalesce(1).write.mode("overwrite").parquet(out)
-    write_summary_meta(
-        spark, out, {"entity": entity, "min_count": HH_USERS_MIN_COUNT}
-    )
-    fsutil.touch(spark, os.path.join(out, "_SUCCESS"))
     pair = (
-        spark.read.parquet(
-            os.path.join(data_dir, SUMMARY_TYPE_USER_DIRNAME)
-        )
+        spark.read.parquet(os.path.join(data_dir, SUMMARY_TYPE_USER_DIRNAME))
         .withColumnRenamed("et", type_col)
         .withColumnRenamed("u", entity)
     )
-    hb = SK.heavy_hitters_by_from_counts(
-        pair, type_col, entity, HH_BY_TYPE_MIN_FRAC
-    ).localCheckpoint()
-    out = os.path.join(data_dir, SUMMARY_HH_BY_TYPE_RESULT_DIRNAME)
-    hb.coalesce(1).write.mode("overwrite").parquet(out)
-    write_summary_meta(
-        spark,
-        out,
-        {
-            "group": type_col,
-            "entity": entity,
-            "min_frac": HH_BY_TYPE_MIN_FRAC,
-        },
-    )
-    fsutil.touch(spark, os.path.join(out, "_SUCCESS"))
-    hbm = SK.heavy_keys_min_count_by_from_counts(
-        pair, type_col, entity, HH_BY_TYPE_MIN_COUNT
-    ).localCheckpoint()
-    out = os.path.join(data_dir, SUMMARY_HH_BY_MINCOUNT_RESULT_DIRNAME)
-    hbm.coalesce(1).write.mode("overwrite").parquet(out)
-    write_summary_meta(
-        spark,
-        out,
-        {
-            "group": type_col,
-            "entity": entity,
-            "min_count": HH_BY_TYPE_MIN_COUNT,
-        },
-    )
-    fsutil.touch(spark, os.path.join(out, "_SUCCESS"))
+    ent = {"entity": entity}
+    grp = {"group": type_col, "entity": entity}
+    for dirname, rows, meta in (
+        (
+            SUMMARY_HH_USERS_RESULT_DIRNAME,
+            SK.heavy_hitters_from_counts(tot, entity, HH_USERS_MIN_FRAC),
+            {**ent, "min_frac": HH_USERS_MIN_FRAC},
+        ),
+        (
+            SUMMARY_TOPFREQ_RESULT_DIRNAME,
+            SK.top_frequent_from_counts(tot, entity, k=TOPFREQ_K),
+            {**ent, "k": TOPFREQ_K},
+        ),
+        (
+            SUMMARY_HH_MINCOUNT_RESULT_DIRNAME,
+            SK.heavy_keys_min_count_from_counts(
+                tot, entity, HH_USERS_MIN_COUNT
+            ),
+            {**ent, "min_count": HH_USERS_MIN_COUNT},
+        ),
+        (
+            SUMMARY_HH_BY_TYPE_RESULT_DIRNAME,
+            SK.heavy_hitters_by_from_counts(
+                pair, type_col, entity, HH_BY_TYPE_MIN_FRAC
+            ),
+            {**grp, "min_frac": HH_BY_TYPE_MIN_FRAC},
+        ),
+        (
+            SUMMARY_HH_BY_MINCOUNT_RESULT_DIRNAME,
+            SK.heavy_keys_min_count_by_from_counts(
+                pair, type_col, entity, HH_BY_TYPE_MIN_COUNT
+            ),
+            {**grp, "min_count": HH_BY_TYPE_MIN_COUNT},
+        ),
+    ):
+        _commit_dir(spark, rows, os.path.join(data_dir, dirname), meta)
 
 
 def _write_quantile_results(spark: SparkSession, data_dir: str) -> None:
@@ -1784,33 +1782,30 @@ def _write_quantile_results(spark: SparkSession, data_dir: str) -> None:
     |groups|x|probs| rows) — the funnel-result discipline: even the
     histogram window's one small job moves to ingest and the queries
     read files. Non-default probs fall through to the histogram tier,
-    which resolves ANY binding exactly."""
+    which resolves ANY binding exactly. The per-type answer is written
+    LAST: its marker is the fold's dependents marker."""
     from nerd_spark.operators import sketches as SK
 
     counts = spark.read.parquet(
         os.path.join(data_dir, SUMMARY_VALUE_COUNTS_DIRNAME)
     )
-    out_g = os.path.join(data_dir, SUMMARY_QUANTILE_RESULT_DIRNAME)
-    res_g = SK.quantiles_from_counts(
-        counts, list(QUANTILE_PROBS_DEFAULT)
-    ).localCheckpoint()
-    res_g.coalesce(1).write.mode("overwrite").parquet(out_g)
-    write_summary_meta(
-        spark, out_g, {"probs": list(QUANTILE_PROBS_DEFAULT)}
-    )
-    fsutil.touch(spark, os.path.join(out_g, "_SUCCESS"))
     hist = spark.read.parquet(
         os.path.join(data_dir, SUMMARY_VALUE_HIST_DIRNAME)
     )
-    out_by = os.path.join(data_dir, SUMMARY_QUANTILE_BY_RESULT_DIRNAME)
-    res_by = SK.quantiles_by_from_counts(
-        hist, "event_type", list(QUANTILE_BY_PROBS_DEFAULT)
-    ).localCheckpoint()
-    res_by.coalesce(1).write.mode("overwrite").parquet(out_by)
-    write_summary_meta(
-        spark, out_by, {"probs": list(QUANTILE_BY_PROBS_DEFAULT)}
+    probs = list(QUANTILE_PROBS_DEFAULT)
+    by_probs = list(QUANTILE_BY_PROBS_DEFAULT)
+    _commit_dir(
+        spark,
+        SK.quantiles_from_counts(counts, probs),
+        os.path.join(data_dir, SUMMARY_QUANTILE_RESULT_DIRNAME),
+        {"probs": probs},
     )
-    fsutil.touch(spark, os.path.join(out_by, "_SUCCESS"))
+    _commit_dir(
+        spark,
+        SK.quantiles_by_from_counts(hist, "event_type", by_probs),
+        os.path.join(data_dir, SUMMARY_QUANTILE_BY_RESULT_DIRNAME),
+        {"probs": by_probs},
+    )
 
 
 def _value_hist_spec(
@@ -1836,10 +1831,14 @@ def _value_hist_spec(
             ):
                 fsutil.delete(spark, p, recursive=True)
             return
-        spark.read.parquet(hist_path).groupBy("v").agg(
-            F.sum("cnt").alias("cnt")
-        ).write.mode("overwrite").parquet(counts_path)
-        fsutil.touch(spark, os.path.join(counts_path, "_SUCCESS"))
+        _commit_dir(
+            spark,
+            spark.read.parquet(hist_path)
+            .groupBy("v")
+            .agg(F.sum("cnt").alias("cnt")),
+            counts_path,
+            one_file=False,
+        )
         _write_quantile_results(spark, data_dir)
 
     return _FoldSpec(
@@ -1854,7 +1853,9 @@ def _value_hist_spec(
         binding={"type_col": type_col, "value_col": value_col},
         events_dir=data_dir,
         deps=deps,
-        deps_marker=os.path.join(counts_path, "_SUCCESS"),
+        deps_marker=os.path.join(
+            data_dir, SUMMARY_QUANTILE_BY_RESULT_DIRNAME, "_SUCCESS"
+        ),
         seeded_only=True,
     )
 
@@ -1949,8 +1950,10 @@ def update_topk_summary(
     displaces a legitimate event from the served k rows (r11 advisor).
     Deletions/retention rewrites bump the events dir mtime past the
     commit and the gate falls back to the raw TakeOrderedAndProject
-    (exact, just a corpus scan)."""
+    (exact, just a corpus scan). The answer, its meta and the carried
+    batch ledger commit as one dir (:func:`_commit_dir`)."""
     out = os.path.join(data_dir, SUMMARY_TOPK_VALUE_DIRNAME)
+    _recover_dir(spark, out)
     if _fold_ledger_skip(spark, out, batch_id):
         return
     bt = _topk_value(new_events, k)
@@ -1970,12 +1973,12 @@ def update_topk_summary(
 
             bt = _topk_value(read_table(spark, data_dir, "events"), k)
     elif fsutil.exists(spark, out):
-        # state lost: the dir exists without its gate — a crash inside
-        # the previous overwrite destroyed the k-row answer AND the
-        # in-dir ledger, and unlike the partitioned folds this state
-        # is NOT recoverable from what survives. Without this branch
-        # the fold would commit topk(batch) as the global answer under
-        # a fresh gate (served wrong). The exact answer IS recoverable
+        # state lost: the dir exists without its gate — left by a
+        # crash inside an in-place overwrite (legacy dirs; the
+        # write-aside commit never exposes one), which destroyed the
+        # k-row answer AND the in-dir ledger. Without this branch the
+        # fold would commit topk(batch) as the global answer under a
+        # fresh gate (served wrong). The exact answer IS recoverable
         # from the fact table (append-first contract: events holds
         # every folded batch), so rebuild from it; a later replay of
         # an old batch re-merges harmlessly — the event_id dedupe
@@ -1983,11 +1986,7 @@ def update_topk_summary(
         from nerd_spark.session import read_table
 
         bt = _topk_value(read_table(spark, data_dir, "events"), k)
-    bt = bt.localCheckpoint()
-    bt.coalesce(1).write.mode("overwrite").parquet(out)
-    write_summary_meta(spark, out, {"k": k, "order": "value_desc"})
-    _fold_ledger_record(spark, out, batch_id)
-    fsutil.touch(spark, os.path.join(out, "_SUCCESS"))
+    _commit_dir(spark, bt, out, {"k": k, "order": "value_desc"}, batch_id)
 
 
 def update_funnel_summary(
@@ -2023,12 +2022,14 @@ def _funnel_spec(
     spark: SparkSession, data_dir: str, stages: list[str], entity="user_id"
 ):
     from nerd_spark.operators.funnels import (
+        funnel_rows_from_times,
         funnel_user_state,
         merge_funnel_state,
         resolve_funnel_times,
     )
 
     path = os.path.join(data_dir, SUMMARY_FUNNEL_DIRNAME)
+    res_path = os.path.join(data_dir, SUMMARY_FUNNEL_RESULT_DIRNAME)
 
     def merge(old, new):
         return resolve_funnel_times(
@@ -2039,12 +2040,13 @@ def _funnel_spec(
         )
 
     def deps():
-        # the state's own binding: a ledger-skip heal may be called
-        # with other stages than the ones the state holds
+        # the resolved |stages| rows (the registered query becomes a
+        # 3-row file read), at the state's own binding: a ledger-skip
+        # heal may be called with other stages than the state holds
         bound = (read_summary_meta(spark, path) or {}).get("stages")
-        _write_funnel_result(
-            spark, data_dir, spark.read.parquet(path), list(bound or stages)
-        )
+        bound = list(bound or stages)
+        rows = funnel_rows_from_times(spark.read.parquet(path), bound)
+        _commit_dir(spark, rows, res_path, {"stages": bound})
 
     return _FoldSpec(
         "update_funnel_summary",
@@ -2057,9 +2059,7 @@ def _funnel_spec(
         binding={"stages": stages, "entity": entity},
         events_dir=data_dir,
         deps=deps,
-        deps_marker=os.path.join(
-            data_dir, SUMMARY_FUNNEL_RESULT_DIRNAME, "_SUCCESS"
-        ),
+        deps_marker=os.path.join(res_path, "_SUCCESS"),
         lenient=("entity",),
     )
 
@@ -2080,11 +2080,27 @@ def update_cohort_summary(
 
 def _cohort_spec(spark: SparkSession, data_dir: str, entity="user_id"):
     from nerd_spark.operators.funnels import (
+        cohort_state_to_per_user,
         cohort_user_state,
         merge_cohort_state,
+        retention_from_per_user,
     )
 
     path = os.path.join(data_dir, SUMMARY_COHORT_DIRNAME)
+    res_path = os.path.join(data_dir, SUMMARY_COHORT_RESULT_DIRNAME)
+    c = COHORT_DEFAULTS
+
+    def deps():
+        # the resolved (cohort_date, period, ...) retention rows of the
+        # default binding: |cohorts| x |periods| rows
+        per_user = cohort_state_to_per_user(
+            spark.read.parquet(path), c["anchor_type"]
+        )
+        rows = retention_from_per_user(
+            per_user, c["period_days"], c["n_periods"]
+        )
+        _commit_dir(spark, rows, res_path, dict(c))
+
     return _FoldSpec(
         "update_cohort_summary",
         path,
@@ -2095,19 +2111,17 @@ def _cohort_spec(spark: SparkSession, data_dir: str, entity="user_id"):
         merge=_bucketed(merge_cohort_state, "u"),
         binding={"entity": entity},
         events_dir=data_dir,
-        deps=lambda: _write_cohort_result(
-            spark, data_dir, spark.read.parquet(path)
-        ),
-        deps_marker=os.path.join(
-            data_dir, SUMMARY_COHORT_RESULT_DIRNAME, "_SUCCESS"
-        ),
+        deps=deps,
+        deps_marker=os.path.join(res_path, "_SUCCESS"),
     )
 
 
 # (dirname, reader-gate file) for every ingest-maintained serve table
 # an events data dir can carry — the introspection registry behind
-# serve_table_status. Document-side tables (token hist, doc card) are
-# keyed on documents rather than events; status still reports them.
+# serve_table_status, and where the one reader gate (_gate) looks up
+# each table's commit marker. Document-side tables (token hist, doc
+# card) are keyed on documents rather than events; status still
+# reports them.
 _SERVE_TABLES: tuple[tuple[str, str], ...] = (
     (SUMMARY_DAILY_DIRNAME, "_SUCCESS"),
     (SUMMARY_ASOF_DIRNAME, "_SUCCESS"),
@@ -2141,9 +2155,9 @@ def serve_table_status(spark: SparkSession, data_dir: str) -> list[dict]:
 
     - ``present``: the directory exists;
     - ``gated``: its reader gate file is up (a committed table);
-    - ``fresh``: gate mtime >= the events dir mtime — the exact test
-      every serve gate applies; False means queries are on the raw
-      fallback for this table;
+    - ``fresh``: gate mtime >= the events dir mtime — the freshness
+      test of the one serve gate (:func:`summary_fresh`); False means
+      queries are on the raw fallback for this table;
     - ``ledger_batches``: applied-batch count in the fold ledger
       (0 for seed-only or lederless tables);
     - ``staging``: a ``.staging`` sibling exists — either a commit in
@@ -2153,30 +2167,17 @@ def serve_table_status(spark: SparkSession, data_dir: str) -> list[dict]:
     Pure driver-side metadata through the Hadoop FS layer (a handful
     of stats per table, no Spark jobs) — safe to poll from a
     monitoring loop at any frequency."""
-    try:
-        ev_mtime = fsutil.mtime(
-            spark, os.path.join(data_dir, "events.parquet")
-        )
-    except Exception:
-        ev_mtime = None
     out = []
     for dirname, gate_name in _SERVE_TABLES:
         path = os.path.join(data_dir, dirname)
-        gate = os.path.join(path, gate_name)
         present = fsutil.exists(spark, path)
-        gated = present and fsutil.exists(spark, gate)
-        if not gated:
-            fresh = False
-        elif ev_mtime is None:
-            fresh = True  # pure derived-state dir: nothing to outdate
-        else:
-            fresh = fsutil.mtime(spark, gate) >= ev_mtime
+        gate = os.path.join(path, gate_name)
         out.append(
             {
                 "table": dirname,
                 "present": present,
-                "gated": gated,
-                "fresh": fresh,
+                "gated": present and fsutil.exists(spark, gate),
+                "fresh": present and summary_fresh(spark, data_dir, dirname),
                 "ledger_batches": len(_ledger_ids(spark, path))
                 if present
                 else 0,
@@ -2227,6 +2228,7 @@ def update_event_summaries(
     update_daily_summary(
         spark, daily_p, new_events, entity=entity, batch_id=batch_id
     )
+    _recover_dir(spark, asof_p)
     b_asof = new_events.agg(F.max("ts").alias("as_of"))
     if fsutil.exists(spark, os.path.join(asof_p, "_SUCCESS")):
         b_asof = (
@@ -2235,8 +2237,9 @@ def update_event_summaries(
             .agg(F.max("as_of").alias("as_of"))
         )
     elif fsutil.exists(spark, asof_p):
-        # anchor lost: dir exists without its gate (crash inside the
-        # previous overwrite). Re-seeding from the batch alone can
+        # anchor lost: dir exists without its gate (a crash inside an
+        # in-place overwrite — legacy dirs; the write-aside commit
+        # never exposes one). Re-seeding from the batch alone can
         # REGRESS the anchor on an out-of-order batch (its max ts can
         # trail history's) and the A-family would then serve window
         # ages against the stale anchor under a fresh gate — recompute
@@ -2247,8 +2250,7 @@ def update_event_summaries(
         b_asof = read_table(spark, data_dir, "events").agg(
             F.max("ts").alias("as_of")
         )
-    b_asof = b_asof.localCheckpoint()
-    b_asof.write.mode("overwrite").parquet(asof_p)
+    _commit_dir(spark, b_asof, asof_p)
     folds = [
         lambda: update_window_summary(
             spark,
@@ -2327,6 +2329,35 @@ def prune_summary(
     return dropped
 
 
+def serve_table(
+    spark: SparkSession,
+    data_dir: str,
+    dirname: str,
+    binding: dict | None = None,
+    expect_cols: tuple[str, ...] = (),
+    sources: tuple[str, ...] = ("events.parquet",),
+):
+    """The one reader gate of every derived dir: the table, or None
+    (the caller falls back to its raw path — exact, just slower). A
+    dir is served iff its commit marker (from ``_SERVE_TABLES``;
+    ``_SUCCESS`` for dirs not listed there) exists and is no older
+    than any of its ``sources`` (mtime probes through the Hadoop FS
+    layer — rewrites/appends under a source bump its dir mtime past
+    the commit; an absent source outdates nothing), its meta sidecar
+    matches ``binding``, and its schema carries ``expect_cols`` (an
+    older-schema table falls back instead of failing). A memo miss
+    serves the frame its schema probe built; a hit plans the read with
+    the memoized schema. Either way the dir is listed once, with no
+    second footer pass."""
+    got = _gate(spark, data_dir, dirname, sources, binding, expect_cols)
+    if got is None:
+        return None
+    schema, df = got
+    if df is None:
+        df = spark.read.schema(schema).parquet(os.path.join(data_dir, dirname))
+    return df
+
+
 def summary_fresh(
     spark: SparkSession,
     data_dir: str,
@@ -2334,65 +2365,60 @@ def summary_fresh(
     sources: tuple[str, ...] = ("events.parquet",),
     expect_cols: tuple[str, ...] = (),
 ) -> bool:
-    """True iff the derived summary exists, committed, no older than
-    any of its source tables (mtime probe through the Hadoop FS
-    layer — rewrites/appends under a source bump its dir mtime past
-    the summary's commit), and carries the expected columns (an
-    older-schema table falls back instead of failing). The general
-    form of analytics._summary_fresh for non-events sources."""
-    success = os.path.join(data_dir, dirname, "_SUCCESS")
-    if not fsutil.exists(spark, success):
-        return False
-    smtime = fsutil.mtime(spark, success)
+    """:func:`serve_table`'s verdict without the read; the schema is
+    probed only when ``expect_cols`` asks for columns."""
+    return (
+        _gate(spark, data_dir, dirname, sources, None, expect_cols,
+              probe=bool(expect_cols))
+        is not None
+    )
+
+
+# (path, marker mtime, meta mtime) -> (meta, schema). The meta read and
+# the schema probe (~0.1 s of footer I/O, the dominant repeat-gate
+# cost) run once per commit: every commit bumps the marker, and a bare
+# meta edit bumps the sidecar, so the key self-invalidates.
+_GATE_MEMO: dict = {}
+
+
+def _gate(
+    spark, data_dir, dirname, sources, binding, expect_cols, probe=True
+):
+    path = os.path.join(data_dir, dirname)
+    marker = os.path.join(path, dict(_SERVE_TABLES).get(dirname, "_SUCCESS"))
+    if not fsutil.exists(spark, marker):
+        return None
+    smtime = fsutil.mtime(spark, marker)
     for src in sources:
         try:
             if fsutil.mtime(spark, os.path.join(data_dir, src)) > smtime:
-                return False
+                return None
         except Exception:  # source absent (pure derived-state dir)
             continue
-    if expect_cols:
-        # schema probe memoized by the commit marker's mtime: the
-        # footer read costs ~0.1 s per call (the dominant gate cost —
-        # r10 verdict #4's suspect class) and any rewrite bumps the
-        # marker, so the key self-invalidates. The FULL schema is
-        # cached (not just column names) so read_summary_cached can
-        # supply it to the read and skip the second footer pass the
-        # serve body used to pay per call (r12 verdict #6).
-        key = (os.path.join(data_dir, dirname), smtime)
-        schema = _SCHEMA_COLS_CACHE.get(key)
-        if schema is None:
-            try:
-                schema = spark.read.parquet(
-                    os.path.join(data_dir, dirname)
-                ).schema
-            except Exception:
-                return False
-            if len(_SCHEMA_COLS_CACHE) > 256:  # bound the session cache
-                _SCHEMA_COLS_CACHE.clear()
-            _SCHEMA_COLS_CACHE[key] = schema
-        if not set(expect_cols) <= {f.name for f in schema.fields}:
-            return False
-    return True
-
-
-_SCHEMA_COLS_CACHE: dict = {}
-
-
-def read_summary_cached(spark: SparkSession, data_dir: str, dirname: str):
-    """Read a summary table whose schema summary_fresh just verified,
-    supplying the cached schema so the read plans WITHOUT a second
-    footer pass. Call only after a truthy summary_fresh with
-    expect_cols (which populates the cache); falls back to a plain
-    read when the cache was since evicted."""
-    path = os.path.join(data_dir, dirname)
-    try:
-        smtime = fsutil.mtime(spark, os.path.join(path, "_SUCCESS"))
-    except Exception:
-        smtime = None
-    schema = _SCHEMA_COLS_CACHE.get((path, smtime))
-    if schema is not None:
-        return spark.read.schema(schema).parquet(path)
-    return spark.read.parquet(path)
+    if not probe:
+        return True
+    # exists() first: a raised FileNotFound costs more than the stat
+    # (py4j converts it), and meta-less dirs are read on every call
+    meta_p = os.path.join(path, SUMMARY_META_NAME)
+    mmtime = fsutil.exists(spark, meta_p) and fsutil.mtime(spark, meta_p)
+    key = (path, smtime, mmtime)
+    memo = _GATE_MEMO.get(key)  # one lookup: the fold pool also reads
+    df = None
+    if memo is None:
+        try:
+            df = spark.read.parquet(path)
+        except Exception:
+            return None
+        memo = (read_summary_meta(spark, path) or {}, df.schema)
+        if len(_GATE_MEMO) > 256:  # bound the session memo
+            _GATE_MEMO.clear()
+        _GATE_MEMO[key] = memo
+    meta, schema = memo
+    if any(meta.get(k) != v for k, v in (binding or {}).items()):
+        return None
+    if not set(expect_cols) <= set(schema.fieldNames()):
+        return None
+    return schema, df
 
 
 def bucketed_pair_names(data_dir: str) -> tuple[str, str]:

@@ -197,10 +197,16 @@ def test_topk_value_fold_and_serve(spark, tmp_path):
 
 
 def test_summary_fresh_schema_cache_invalidates(spark, tmp_path):
-    """The expect_cols schema probe is memoized by the commit marker's
-    mtime: a rewrite (new marker mtime) re-probes, so a schema-breaking
-    rewrite is never served from the cached verdict."""
-    from nerd_spark.sources.layout import summary_fresh
+    """The serve gate's schema/meta memo is keyed by the commit
+    marker's AND the meta sidecar's mtime: a rewrite (new marker
+    mtime) re-probes, so a schema-breaking rewrite is never served
+    from the cached verdict, and a bare meta rewrite (marker left
+    alone) re-reads the binding."""
+    from nerd_spark.sources.layout import (
+        serve_table,
+        summary_fresh,
+        write_summary_meta,
+    )
 
     d = str(tmp_path / "data")
     ev = _mk_events(spark, n=50)
@@ -223,6 +229,17 @@ def test_summary_fresh_schema_cache_invalidates(spark, tmp_path):
     )
     fsutil.touch(spark, os.path.join(d, "derived.parquet", "_SUCCESS"))
     assert not summary_fresh(*args, **kw)
+    # meta-only rewrite: same marker, new sidecar -> the binding is
+    # re-read, never answered from the memo of the old one
+    p = os.path.join(d, "derived.parquet")
+    marker_mtime = os.path.getmtime(os.path.join(p, "_SUCCESS"))
+    write_summary_meta(spark, p, {"k": 1})
+    assert serve_table(spark, d, "derived.parquet", {"k": 1}) is not None
+    _t.sleep(0.01)
+    write_summary_meta(spark, p, {"k": 2})
+    assert os.path.getmtime(os.path.join(p, "_SUCCESS")) == marker_mtime
+    assert serve_table(spark, d, "derived.parquet", {"k": 1}) is None
+    assert serve_table(spark, d, "derived.parquet", {"k": 2}) is not None
 
 
 def test_topk_fold_replay_and_relayout_idempotent(spark, tmp_path):

@@ -15,6 +15,8 @@ Key properties pinned here:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from nerd_spark.operators import pq as PQ
@@ -286,3 +288,64 @@ def test_ivfpq_maintenance_due_flips_on_append_drift(spark, sf_dir):
     assert PQ.ivfpq_maintenance_due(spark, base + "/idx", 0.25)
     # a wider bound tolerates the same append volume
     assert not PQ.ivfpq_maintenance_due(spark, base + "/idx", 0.60)
+
+
+@pytest.mark.slow
+def test_ivfpq_compact_tear_sweep(spark, sf_dir, tear_sweep):
+    """Crash-safe compaction: tear ``ivfpq_compact`` at every mutating
+    FS op (aside cleanup, manifest write, each list delete/rename of
+    the swap, tombstone clear), then compact again without injection.
+    Every terminal state probes bit-equal to the index REBUILT without
+    the deleted rows — a list torn between its delete and its rename
+    must come back from the aside, never be lost."""
+    import shutil
+    import tempfile
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    books = PQ.train_pq_codebooks(emb, m=8, k=8, n_iter=1)
+    cents = [
+        list(r.v)
+        for r in emb.orderBy("vec_id")
+        .limit(4)
+        .select(F.col("embedding").cast("array<double>").alias("v"))
+        .collect()
+    ]
+    base = tempfile.mkdtemp(prefix="nerd_ivfpq_tear_")
+    tmpl, p_ref = base + "/tmpl", base + "/ref"
+    PQ.build_ivfpq_index(emb, tmpl, codebooks=books, centroids=cents)
+    dead_pred = (F.col("vec_id") % 7 == 0) & (F.col("vec_id") >= 5)
+    PQ.build_ivfpq_index(
+        emb.filter(~dead_pred), p_ref, codebooks=books, centroids=cents
+    )
+    PQ.ivfpq_delete(
+        spark, tmpl, emb.filter(dead_pred).select(F.col("vec_id").alias("id"))
+    )
+    q = emb.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    )
+
+    def probe(p):
+        return {
+            tuple(r)
+            for r in PQ.ivfpq_probe(spark, p, q, k=10, n_probe=2).collect()
+        }
+
+    want = probe(p_ref)
+    assert len(want) > 0
+
+    def setup(tag):
+        p = os.path.join(base, tag)
+        for suffix in ("", ".centroids", ".codebooks", ".meta",
+                       ".tombstones"):
+            shutil.copytree(tmpl + suffix, p + suffix)
+        return p
+
+    def check(p, label):
+        assert probe(p) == want, label
+        assert not os.path.exists(p + ".compact"), label
+        assert not os.path.exists(p + ".tombstones"), label
+
+    try:
+        tear_sweep(setup, lambda p: PQ.ivfpq_compact(spark, p), check, 8)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)

@@ -436,20 +436,49 @@ def _sweep_data_dir(spark, tmp_path, tag, fold, b1, ev):
     return d
 
 
+def _assert_results_served(spark, d, bound, label):
+    """Each result cache a fold maintains passes the one serve gate
+    under the binding its registered query asks for: committed, no
+    older than events, meta present and matching (a gated cache that
+    lost its meta is skipped by the query until the next fold)."""
+    from nerd_spark.sources.layout import serve_table
+
+    for dirname, binding in bound.items():
+        assert serve_table(spark, d, dirname, binding) is not None, (
+            f"{label}: {dirname} not served"
+        )
+
+
 @pytest.mark.slow
 def test_staged_commit_tear_sweep_keycount(spark, tmp_path, tear_sweep):
     """Same exhaustive tear sweep over the keycount fold — the
     wb-bucketed shape with DEPENDENT projections (entity totals,
     hh/top-k result caches) committed after the pair table: tears
     after the finalize must heal through the ledger-skip staleness
-    rederives, and the hh serve must equal the raw recompute at every
-    terminal state."""
+    rederives, the hh serve must equal the raw recompute, and all five
+    hh/top-k result caches must pass the serve gate under their
+    registered bindings at every terminal state."""
     from nerd_spark.queries.dataprep import hh_event_users
+    from nerd_spark.sources import layout as L
     from nerd_spark.sources.layout import (
         SUMMARY_TYPE_USER_DIRNAME,
         SUMMARY_USER_COUNTS_DIRNAME,
         update_keycount_summaries,
     )
+
+    ent = {"entity": "user_id"}
+    grp = {"group": "event_type", "entity": "user_id"}
+    bound = {
+        L.SUMMARY_HH_USERS_RESULT_DIRNAME: {
+            **ent, "min_frac": L.HH_USERS_MIN_FRAC},
+        L.SUMMARY_TOPFREQ_RESULT_DIRNAME: {**ent, "k": L.TOPFREQ_K},
+        L.SUMMARY_HH_MINCOUNT_RESULT_DIRNAME: {
+            **ent, "min_count": L.HH_USERS_MIN_COUNT},
+        L.SUMMARY_HH_BY_TYPE_RESULT_DIRNAME: {
+            **grp, "min_frac": L.HH_BY_TYPE_MIN_FRAC},
+        L.SUMMARY_HH_BY_MINCOUNT_RESULT_DIRNAME: {
+            **grp, "min_count": L.HH_BY_TYPE_MIN_COUNT},
+    }
 
     b1, b2, ev = _sweep_events(spark, 300, 5, 72, 5, ("view", "click"), 17)
 
@@ -476,6 +505,7 @@ def test_staged_commit_tear_sweep_keycount(spark, tmp_path, tear_sweep):
             .count() == 5
         ), label
         assert _sorted_rows(hh_event_users(spark, d)) == raw_hh, label
+        _assert_results_served(spark, d, bound, label)
 
     tear_sweep(
         lambda tag: _sweep_data_dir(
@@ -494,9 +524,13 @@ def test_staged_commit_tear_sweep_funnel(spark, tmp_path, tear_sweep):
     and its result cache after the finalize — tears around the meta
     must leave a same-stages binding (recovery records the ledger; the
     previous fold's meta still matches), and result-cache tears must
-    heal through the skip path."""
+    heal through the skip path to a cache the serve gate passes under
+    the registered stages."""
     from nerd_spark.queries.analytics import funnel_stages
-    from nerd_spark.sources.layout import update_funnel_summary
+    from nerd_spark.sources.layout import (
+        SUMMARY_FUNNEL_RESULT_DIRNAME,
+        update_funnel_summary,
+    )
 
     b1, b2, ev = _sweep_events(
         spark, 300, 5, 72, 6, ("view", "click", "purchase"), 17
@@ -507,6 +541,13 @@ def test_staged_commit_tear_sweep_funnel(spark, tmp_path, tear_sweep):
 
     def check(d, label):
         assert _sorted_rows(funnel_stages(spark, d)) == expected, label
+        _assert_results_served(
+            spark,
+            d,
+            {SUMMARY_FUNNEL_RESULT_DIRNAME: {
+                "stages": ["view", "click", "purchase"]}},
+            label,
+        )
 
     tear_sweep(
         lambda tag: _sweep_data_dir(
@@ -523,11 +564,13 @@ def test_staged_commit_tear_sweep_cohort(spark, tmp_path, tear_sweep):
     """The cohort fold under the tear sweep: per-user state whose
     meta-less form rebuilds from the fact table, with a result cache
     written after the finalize. At every terminal state the state is
-    gated, the result cache is fresh (a tear before it was rewritten
+    gated, the result cache is fresh and passes the serve gate under
+    COHORT_DEFAULTS with its meta (a tear before it was rewritten
     heals through the ledger-skip path) and the cohort serve equals
     the raw recompute."""
     from nerd_spark.queries.analytics import cohort_retention_q
     from nerd_spark.sources.layout import (
+        COHORT_DEFAULTS,
         SUMMARY_COHORT_DIRNAME,
         SUMMARY_COHORT_RESULT_DIRNAME,
         serve_table_status,
@@ -547,6 +590,9 @@ def test_staged_commit_tear_sweep_cohort(spark, tmp_path, tear_sweep):
         assert by[SUMMARY_COHORT_DIRNAME]["gated"], label
         assert by[SUMMARY_COHORT_RESULT_DIRNAME]["fresh"], label
         assert _sorted_rows(cohort_retention_q(spark, d)) == expected, label
+        _assert_results_served(
+            spark, d, {SUMMARY_COHORT_RESULT_DIRNAME: COHORT_DEFAULTS}, label
+        )
 
     tear_sweep(
         lambda tag: _sweep_data_dir(
