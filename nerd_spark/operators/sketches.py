@@ -1006,7 +1006,21 @@ def exact_quantiles(
         v = _pick_rank(sel, r, accuracy, _REFINE_CAP)
         out.append((float(p), v))
     bracket.unpersist()
-    return spark.createDataFrame(out, f"p double, value {kt}")
+    # the |probs| answer rows as literals over a one-row inline table
+    # (a LocalRelation): built in the JVM, no Python-worker round trip
+    return spark.sql("VALUES (0)").select(
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(p).cast("double").alias("p"),
+                        F.lit(v).cast(kt).alias("value"),
+                    )
+                    for p, v in out
+                ]
+            )
+        )
+    )
 
 
 def exact_quantiles_by(

@@ -22,7 +22,7 @@ from dataclasses import dataclass
 from typing import Callable
 
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession, functions as F, types as T
 
 from nerd_spark.sources import fsutil
 
@@ -278,6 +278,31 @@ def window_rollup(daily, as_of_d_df):
         main.join(cat_maps, "entity", "left")
         .withColumn("cat_counts30", F.coalesce("cat_counts30", empty_map))
         .crossJoin(F.broadcast(as_of_d_df))
+    )
+
+
+def _window_schema(entity):
+    """The stored window columns the fold's merges read, typed as
+    :func:`window_rollup` types them (``entity``: the entity field).
+    Spelled out: analysing window_rollup's plan for its schema costs
+    the driver about as much as the footer probe it replaces."""
+    return T.StructType(
+        [
+            entity,
+            T.StructField("total", T.LongType()),
+            *[
+                f
+                for w in _WINDOWS
+                for f in (
+                    T.StructField(f"total{w}", T.LongType()),
+                    T.StructField(f"cats{w}", T.ArrayType(T.StringType())),
+                )
+            ],
+            T.StructField(
+                "cat_counts30", T.MapType(T.StringType(), T.LongType())
+            ),
+            T.StructField("wb", T.IntegerType()),
+        ]
     )
 
 
@@ -829,6 +854,13 @@ def update_window_summary(
     change on day-roll and unbound the rewrite. Tables written by the
     earlier per-row-as_of_d format migrate via one full rewrite.
 
+    Reads plan from what the fold knows: daily's ``d >= lo`` date
+    partitions by path and the window's own rows with the schema
+    window_rollup gives them (no footer-probe job, and no parallel
+    listing of daily's root past 32 date dirs); the anchor frame is
+    built in the JVM. Only the first build reads all of daily, for
+    the all-history totals.
+
     Either way the result is bit-identical to a full
     :func:`window_rollup` over the merged summary (pinned by
     tests/test_summary_window.py, including across a day boundary).
@@ -863,13 +895,24 @@ def update_window_summary(
             == "rebuild"
         ):
             have_old = False
-    old = spark.read.parquet(window_path) if have_old else None
+    # the current format is wb-bucketed with the anchor in the sidecar
+    # and reads with its known schema; only a legacy (unbucketed) table
+    # infers its schema from the files
+    bucketed = have_old and any(
+        n.startswith("wb=") for n in fsutil.list_names(spark, window_path)
+    )
+    if bucketed:
+        old = spark.read.schema(_window_schema(bd.schema["entity"])).parquet(
+            window_path
+        )
+    else:
+        old = spark.read.parquet(window_path) if have_old else None
     meta_p = _window_meta_path(window_path)
     legacy = old is not None and "as_of_d" in old.columns
     if old is None:
         old_as_of_d = None
     elif fsutil.exists(spark, os.path.join(meta_p, "_SUCCESS")):
-        old_as_of_d = spark.read.parquet(meta_p).first()[0]
+        old_as_of_d = spark.read.schema("as_of_d date").parquet(meta_p).first()[0]
     elif legacy:
         old_as_of_d = old.select(F.max("as_of_d")).first()[0]
     else:
@@ -877,7 +920,17 @@ def update_window_summary(
         # windows from the summary; totals stay additive
         old_as_of_d = None
     new_as_of_d = max(filter(None, [old_as_of_d, batch_max_d]))
-    asof_df = spark.createDataFrame([(new_as_of_d,)], "as_of_d date")
+    # the one-row anchor over a one-row inline table (a LocalRelation):
+    # built in the JVM, no Python-worker round trip
+    asof_df = spark.sql("VALUES (0)").select(
+        F.lit(new_as_of_d).alias("as_of_d")
+    )
+    days = _date_parts(spark, daily_summary_path)
+
+    def daily_since(lo):
+        # daily's d >= lo partitions, by path, with daily's schema
+        names = [n for d, n in sorted(days.items()) if d >= lo]
+        return _read_parts(spark, daily_summary_path, names, bd)
 
     zero = F.lit(0).cast("long")
     empty = F.array().cast("array<string>")
@@ -889,20 +942,15 @@ def update_window_summary(
     # per-row as_of_d (partition files must share one schema). Legacy
     # tables migrate via one full rewrite.
     day_roll = old is None or old_as_of_d is None or new_as_of_d > old_as_of_d
-    scoped_ok = old is not None and not legacy and "wb" in old.columns
     touched: list[int] | None = None
 
     if day_roll:
         # day-roll (or first build): windowed parts from the merged
         # daily summary, PRUNED to the partitions that can matter
         lo = new_as_of_d - _dt.timedelta(days=max_window)
-        recent = (
-            spark.read.parquet(daily_summary_path)
-            .filter(F.col("d") >= F.lit(lo))
-            .select("entity", "d", "cat", "n")
-        )
+        recent = daily_since(lo)
         winpart = window_rollup(recent, asof_df).drop("total", "as_of_d")
-        if scoped_ok and old_as_of_d is not None:
+        if bucketed and old_as_of_d is not None:
             # Bound the rewrite to buckets holding entities ACTIVE in
             # the trailing window of either anchor (covers both rows
             # whose windows gain days and rows whose windows age out),
@@ -915,8 +963,7 @@ def update_window_summary(
                 days=max_window
             )
             active = (
-                spark.read.parquet(daily_summary_path)
-                .filter(F.col("d") >= F.lit(lo_active))
+                daily_since(lo_active)
                 .select(_wbucket().alias("wb"))
                 .unionByName(bd.select(_wbucket().alias("wb")))
                 .distinct()
@@ -994,12 +1041,8 @@ def update_window_summary(
         # batch). Caught by the out-of-order streamed-batches test.
         bagg = window_rollup(bd, asof_df).drop("as_of_d")
         lo_v = new_as_of_d - _dt.timedelta(days=_VEC_DAYS - 1)
-        recent_v = (
-            spark.read.parquet(daily_summary_path)
-            .filter(F.col("d") >= F.lit(lo_v))
-            .select("entity", "d", "cat", "n")
-        )
-        if scoped_ok:
+        recent_v = daily_since(lo_v)
+        if bucketed:
             # restrict the merge to the buckets the batch touches: only
             # those partition dirs are rewritten below; every other
             # bucket's files stay byte-identical on disk. The touched
@@ -1479,6 +1522,44 @@ def _recover_dir(spark: SparkSession, path: str) -> None:
         raise IOError(f"_recover_dir: failed to swap in {staging}")
 
 
+# Spark's directory name for a NULL partition value
+_NULL_PART = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _part_name(part: str, v) -> str:
+    """The dir Spark writes partition value ``v`` of column ``part``
+    into. The partition columns here are dates and bucket ints, whose
+    names need no escaping."""
+    return f"{part}={_NULL_PART if v is None else v}"
+
+
+def _date_parts(spark: SparkSession, path: str) -> dict:
+    """{date: dir name} of the dated ``d=`` partitions of the table at
+    ``path`` (the null day has no date): one driver-side listing."""
+    import datetime as _dt
+
+    return {
+        _dt.date.fromisoformat(n[2:]): n
+        for n in fsutil.list_names(spark, path)
+        if n.startswith("d=") and n != _part_name("d", None)
+    }
+
+
+def _read_parts(spark: SparkSession, path: str, names, like):
+    """Rows of the partition dirs ``names`` of the table at ``path``,
+    read by path with the schema of ``like`` — a frame whose schema the
+    caller already has, so no footer-probe job runs — in ``like``'s
+    column order; ``like.limit(0)`` when ``names`` is empty."""
+    if not names:
+        return like.limit(0)
+    return (
+        spark.read.schema(like.schema)
+        .option("basePath", path)
+        .parquet(*(os.path.join(path, n) for n in names))
+        .select(like.columns)
+    )
+
+
 @dataclass(frozen=True)
 class _FoldSpec:
     """One partitioned serve table as the fold driver sees it: what
@@ -1497,7 +1578,9 @@ class _FoldSpec:
     # meta-less state: rebuild from this dir's events; None = adopt it
     # under the caller's binding, with a warning
     events_dir: str | None = None
-    deps: Callable | None = None  # rewrites tables derived from state
+    # rewrites tables derived from state; called with a frame of the
+    # state's schema, so its reads need no footer probe
+    deps: Callable | None = None
     deps_marker: str | None = None  # a dependent's commit marker
     lenient: tuple[str, ...] = ()
     # the table exists only where a seed certified it: an absent dir
@@ -1536,7 +1619,13 @@ def _fold(spark: SparkSession, spec: _FoldSpec, new_events, batch_id) -> None:
     4. binding check (:func:`_fold_binding`): meta-less state is
        rebuilt from the dir's events, or adopted with a warning when
        the table has no route back to them;
-    5. merge the batch into ONLY the touched live partitions;
+    5. merge the batch into ONLY the touched live partitions. The read
+       plans from what the fold already knows, never from the whole
+       table: the touched partitions that exist, by path (the null
+       value's default partition included), with the schema
+       ``state()`` produces (analysis only: no footer-probe job). Past
+       32 dirs Spark lists a table root in a parallel job; this read
+       lists only the touched dirs;
     6. staged commit (:func:`_staged_partition_commit`): the merged
        rows are fully written to a staging dir BEFORE any live
        partition moves — the merge plan reads the very partitions the
@@ -1557,19 +1646,19 @@ def _fold(spark: SparkSession, spec: _FoldSpec, new_events, batch_id) -> None:
     path, part = spec.path, spec.part_col
     gate = os.path.join(path, "_SUCCESS")
 
-    def has_parts() -> bool:
+    def parts() -> set[str]:
         # state presence = any partition dir, NOT the gate: the gate is
         # down during every commit window, and a merge that missed the
         # existing rows would drop them on overlapping partitions
-        return any(
-            n.startswith(part + "=") for n in fsutil.list_names(spark, path)
-        )
+        return {
+            n for n in fsutil.list_names(spark, path) if n.startswith(part + "=")
+        }
 
     _staged_swap_recover(spark, path, part)
     if spec.seeded_only and not fsutil.exists(spark, path):
         return
     if batch_id is not None and batch_id in _ledger_ids(spark, path):
-        if has_parts():
+        if parts():
             if not fsutil.exists(spark, gate):
                 fsutil.touch(spark, gate)
             if spec.deps is not None:
@@ -1581,7 +1670,7 @@ def _fold(spark: SparkSession, spec: _FoldSpec, new_events, batch_id) -> None:
                 except Py4JJavaError:  # a marker deleted meanwhile
                     stale = True
                 if stale:
-                    spec.deps()
+                    spec.deps(spec.state(new_events))
         return
     bs = spec.state(new_events)
     touched = [r[0] for r in bs.select(part).distinct().collect()]
@@ -1591,7 +1680,8 @@ def _fold(spark: SparkSession, spec: _FoldSpec, new_events, batch_id) -> None:
             f"partitions (> {spec.max_touched}); filter to the "
             "acceptance window first (P10)"
         )
-    have = has_parts()
+    live = parts()
+    have = bool(live)
     verdict = _fold_binding(
         spark,
         path,
@@ -1617,11 +1707,10 @@ def _fold(spark: SparkSession, spec: _FoldSpec, new_events, batch_id) -> None:
         # empty batches) before the first partitioned build
         fsutil.delete(spark, path, recursive=True)
     else:
-        old = (
-            spark.read.parquet(path)
-            .filter(F.col(part).isin(touched))  # partition-pruned scan
-            .select(bs.columns)
-        )
+        # the touched live partitions, by path and with the state's
+        # schema; a null value's dir (Spark's default partition) too
+        names = [_part_name(part, v) for v in touched]
+        old = _read_parts(spark, path, [n for n in names if n in live], bs)
         merged = spec.merge(old, bs)
     staged = _staged_partition_commit(
         spark, merged, path, part, batch_id=batch_id
@@ -1632,7 +1721,7 @@ def _fold(spark: SparkSession, spec: _FoldSpec, new_events, batch_id) -> None:
         fsutil.touch(spark, gate)
     _staged_commit_finalize(spark, path)
     if (have or staged) and spec.deps is not None:
-        spec.deps()
+        spec.deps(bs)
 
 
 def _seed(spark: SparkSession, spec: _FoldSpec, rows, partitioned=True) -> None:
@@ -1645,7 +1734,7 @@ def _seed(spark: SparkSession, spec: _FoldSpec, rows, partitioned=True) -> None:
     write_summary_meta(spark, spec.path, spec.binding)
     fsutil.touch(spark, os.path.join(spec.path, "_SUCCESS"))
     if spec.deps is not None:
-        spec.deps()
+        spec.deps(rows)
 
 
 def update_keycount_summaries(
@@ -1681,17 +1770,19 @@ def _keycount_spec(
     pair_path = os.path.join(data_dir, SUMMARY_TYPE_USER_DIRNAME)
     tot_path = os.path.join(data_dir, SUMMARY_USER_COUNTS_DIRNAME)
 
-    def deps():
-        _commit_dir(
-            spark,
-            spark.read.parquet(pair_path)
-            .groupBy("u")
-            .agg(F.sum("cnt").alias("cnt")),
-            tot_path,
-            one_file=False,
-        )
+    def deps(like):
+        pair = spark.read.schema(like.schema).parquet(pair_path)
+        tot = pair.groupBy("u").agg(F.sum("cnt").alias("cnt"))
+        _commit_dir(spark, tot, tot_path, one_file=False)
         # resolved hh/top-k answers for the registered bindings
-        _write_keycount_results(spark, data_dir, entity, type_col)
+        _write_keycount_results(
+            spark,
+            data_dir,
+            pair,
+            spark.read.schema(tot.schema).parquet(tot_path),
+            entity,
+            type_col,
+        )
 
     return _FoldSpec(
         "update_keycount_summaries",
@@ -1715,6 +1806,8 @@ def _keycount_spec(
 def _write_keycount_results(
     spark: SparkSession,
     data_dir: str,
+    pair,
+    tot,
     entity: str = "user_id",
     type_col: str = "event_type",
 ) -> None:
@@ -1727,16 +1820,13 @@ def _write_keycount_results(
     a different entity/type binding, or a query at different
     parameters, falls through to the count-table tier (exact for any
     binding). The by-type min-count answer is written LAST: its marker
-    is the fold's dependents marker."""
+    is the fold's dependents marker. ``pair`` and ``tot`` are the
+    committed count and totals tables as read."""
     from nerd_spark.operators import sketches as SK
 
-    tot = spark.read.parquet(
-        os.path.join(data_dir, SUMMARY_USER_COUNTS_DIRNAME)
-    ).withColumnRenamed("u", entity)
-    pair = (
-        spark.read.parquet(os.path.join(data_dir, SUMMARY_TYPE_USER_DIRNAME))
-        .withColumnRenamed("et", type_col)
-        .withColumnRenamed("u", entity)
+    tot = tot.withColumnRenamed("u", entity)
+    pair = pair.withColumnRenamed("et", type_col).withColumnRenamed(
+        "u", entity
     )
     ent = {"entity": entity}
     grp = {"group": type_col, "entity": entity}
@@ -1776,22 +1866,19 @@ def _write_keycount_results(
         _commit_dir(spark, rows, os.path.join(data_dir, dirname), meta)
 
 
-def _write_quantile_results(spark: SparkSession, data_dir: str) -> None:
+def _write_quantile_results(
+    spark: SparkSession, data_dir: str, hist, counts
+) -> None:
     """Resolve the registered quantile bindings from the committed
     histogram tables into meta-bound result caches (|probs| rows and
     |groups|x|probs| rows) — the funnel-result discipline: even the
     histogram window's one small job moves to ingest and the queries
     read files. Non-default probs fall through to the histogram tier,
     which resolves ANY binding exactly. The per-type answer is written
-    LAST: its marker is the fold's dependents marker."""
+    LAST: its marker is the fold's dependents marker. ``hist`` and
+    ``counts`` are the committed tables as read."""
     from nerd_spark.operators import sketches as SK
 
-    counts = spark.read.parquet(
-        os.path.join(data_dir, SUMMARY_VALUE_COUNTS_DIRNAME)
-    )
-    hist = spark.read.parquet(
-        os.path.join(data_dir, SUMMARY_VALUE_HIST_DIRNAME)
-    )
     probs = list(QUANTILE_PROBS_DEFAULT)
     by_probs = list(QUANTILE_BY_PROBS_DEFAULT)
     _commit_dir(
@@ -1818,11 +1905,10 @@ def _value_hist_spec(
     hist_path = os.path.join(data_dir, SUMMARY_VALUE_HIST_DIRNAME)
     counts_path = os.path.join(data_dir, SUMMARY_VALUE_COUNTS_DIRNAME)
 
-    def deps():
+    def deps(like):
+        hist = spark.read.schema(like.schema).parquet(hist_path)
         # growth guard (folds only): parquet count(*) is footer-only
-        if max_rows is not None and (
-            spark.read.parquet(hist_path).count() > max_rows
-        ):
+        if max_rows is not None and hist.count() > max_rows:
             for p in (
                 hist_path,
                 counts_path,
@@ -1831,15 +1917,14 @@ def _value_hist_spec(
             ):
                 fsutil.delete(spark, p, recursive=True)
             return
-        _commit_dir(
+        counts = hist.groupBy("v").agg(F.sum("cnt").alias("cnt"))
+        _commit_dir(spark, counts, counts_path, one_file=False)
+        _write_quantile_results(
             spark,
-            spark.read.parquet(hist_path)
-            .groupBy("v")
-            .agg(F.sum("cnt").alias("cnt")),
-            counts_path,
-            one_file=False,
+            data_dir,
+            hist,
+            spark.read.schema(counts.schema).parquet(counts_path),
         )
-        _write_quantile_results(spark, data_dir)
 
     return _FoldSpec(
         "update_value_hist_summary",
@@ -1960,7 +2045,7 @@ def update_topk_summary(
     if fsutil.exists(spark, os.path.join(out, "_SUCCESS")):
         prev = read_summary_meta(spark, out)
         if prev is not None and int(prev.get("k") or 0) == int(k):
-            old = spark.read.parquet(out).select("event_id", "value")
+            old = spark.read.schema(bt.schema).parquet(out)
             bt = _topk_value(
                 old.unionByName(bt).dropDuplicates(["event_id"]), k
             )
@@ -2039,13 +2124,17 @@ def _funnel_spec(
             stages,
         )
 
-    def deps():
+    def deps(like):
         # the resolved |stages| rows (the registered query becomes a
         # 3-row file read), at the state's own binding: a ledger-skip
         # heal may be called with other stages than the state holds
         bound = (read_summary_meta(spark, path) or {}).get("stages")
         bound = list(bound or stages)
-        rows = funnel_rows_from_times(spark.read.parquet(path), bound)
+        if bound != stages:  # the stored t1..tk are the bound stages'
+            like = resolve_funnel_times(like.select("u", "st_arr", "wb"), bound)
+        rows = funnel_rows_from_times(
+            spark.read.schema(like.schema).parquet(path), bound
+        )
         _commit_dir(spark, rows, res_path, {"stages": bound})
 
     return _FoldSpec(
@@ -2090,11 +2179,11 @@ def _cohort_spec(spark: SparkSession, data_dir: str, entity="user_id"):
     res_path = os.path.join(data_dir, SUMMARY_COHORT_RESULT_DIRNAME)
     c = COHORT_DEFAULTS
 
-    def deps():
+    def deps(like):
         # the resolved (cohort_date, period, ...) retention rows of the
         # default binding: |cohorts| x |periods| rows
         per_user = cohort_state_to_per_user(
-            spark.read.parquet(path), c["anchor_type"]
+            spark.read.schema(like.schema).parquet(path), c["anchor_type"]
         )
         rows = retention_from_per_user(
             per_user, c["period_days"], c["n_periods"]
@@ -2232,7 +2321,8 @@ def update_event_summaries(
     b_asof = new_events.agg(F.max("ts").alias("as_of"))
     if fsutil.exists(spark, os.path.join(asof_p, "_SUCCESS")):
         b_asof = (
-            spark.read.parquet(asof_p)
+            spark.read.schema(b_asof.schema)
+            .parquet(asof_p)
             .unionByName(b_asof)
             .agg(F.max("as_of").alias("as_of"))
         )
@@ -2313,19 +2403,15 @@ def prune_summary(
     reference: modules/cleaner.py:64-202 max_event_history) — no
     rewrite, no scan of surviving data. Returns the dropped
     partition names. ``as_of`` defaults to the newest partition."""
-    import datetime as _dt
-
-    days = sorted(
-        d for d in fsutil.list_names(spark, summary_path) if d.startswith("d=")
-    )
+    days = _date_parts(spark, summary_path)  # the null day never expires
     if not days:
         return []
-    anchor = as_of or _dt.date.fromisoformat(days[-1][2:])
+    anchor = as_of or max(days)
     dropped = []
-    for d in days:
-        if (anchor - _dt.date.fromisoformat(d[2:])).days > keep_days:
-            fsutil.delete(spark, os.path.join(summary_path, d), recursive=True)
-            dropped.append(d)
+    for d, name in sorted(days.items()):
+        if (anchor - d).days > keep_days:
+            fsutil.delete(spark, os.path.join(summary_path, name), recursive=True)
+            dropped.append(name)
     return dropped
 
 

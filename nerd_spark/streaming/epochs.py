@@ -73,11 +73,9 @@ def _land(spark, state_dir: str, base: int) -> None:
             fsutil.delete(
                 spark, os.path.join(state_dir, name), recursive=True
             )
-    fsutil.rename(
-        spark,
-        os.path.join(state_dir, f"epoch={base}.new"),
-        os.path.join(state_dir, f"epoch={base}"),
-    )
+    src = os.path.join(state_dir, f"epoch={base}.new")
+    if not fsutil.rename(spark, src, os.path.join(state_dir, f"epoch={base}")):
+        raise IOError(f"_land: failed to swap in {src}")
 
 
 def _resume_pending(spark, state_dir: str) -> None:

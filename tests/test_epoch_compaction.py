@@ -121,6 +121,36 @@ def test_crash_window_resume(spark, sf_dir):
     assert _hh_serve(spark, state2) == b2
 
 
+def test_failed_land_rename_raises_then_resumes(spark, sf_dir, monkeypatch):
+    """Hadoop reports a failed rename by returning false. The landing
+    step must raise, not report a fold whose aside never landed (the
+    sources are gone, so serves undercount); the next compaction lands
+    the complete aside and the serves are back unchanged."""
+    from nerd_spark.sources import fsutil
+
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    state = os.path.join(tempfile.mkdtemp(prefix="nerd_epoch_rename_"), "hh")
+    for i in range(3):
+        hh_stream.process_batch(
+            spark, docs.filter(F.col("doc_id") % 3 == i), state, epoch_id=i
+        )
+    before = _hh_serve(spark, state)
+    rename = fsutil.rename
+    calls = []
+
+    def refuse_once(*a, **kw):
+        calls.append(a)
+        return False if len(calls) == 1 else rename(*a, **kw)
+
+    monkeypatch.setattr(fsutil, "rename", refuse_once)
+    with pytest.raises(IOError):
+        compact_epochs(spark, state, "tf")
+    assert os.path.exists(os.path.join(state, "epoch=2.new"))
+    assert compact_epochs(spark, state, "tf") == 0  # resume only
+    assert _epochs(spark, state) == [2]
+    assert _hh_serve(spark, state) == before
+
+
 def test_crash_mid_delete_base_still_present(spark, sf_dir):
     """The r9-advice hole: crash inside the delete loop BEFORE the
     base epoch dir itself is removed. The old resume skipped (target

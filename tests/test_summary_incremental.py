@@ -923,3 +923,142 @@ def test_manifest_mid_write_tear_leaves_no_manifest(spark, sf_dir, tmp_path,
     assert _rows(spark.read.parquet(dsum)) == _rows(
         spark.read.parquet(oneshot)
     )
+
+
+def test_null_day_counts_accumulate_across_folds(spark, sf_dir, tmp_path):
+    """A null-ts event rolls up into the daily summary's null-day
+    partition (Spark's default partition dir). Every fold must merge
+    into the rows that partition already holds: three batches with one
+    null-ts event each leave n=3 there, and a1_daily_rollup serves the
+    raw answer."""
+    from nerd_spark.queries.analytics import a1_daily_rollup
+    from nerd_spark.sources.layout import SUMMARY_DAILY_DIRNAME, summary_fresh
+
+    ev = read_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
+    one = ev.orderBy("event_id").limit(1)
+    d = str(tmp_path / "data")
+    raw = str(tmp_path / "raw")
+    dsum = os.path.join(d, SUMMARY_DAILY_DIRNAME)
+    batches = [
+        ev.filter(F.col("event_id") % 3 == i).unionByName(
+            one.withColumn("ts", F.lit(None).cast("timestamp")).withColumn(
+                "event_id", F.col("event_id") + 10**9 + i
+            )
+        )
+        for i in range(3)
+    ]
+    for i, b in enumerate(batches):
+        b.write.mode("append").parquet(os.path.join(d, "events.parquet"))
+        update_daily_summary(spark, dsum, b, batch_id=f"b{i}")
+    everything = read_table(spark, d, "events")
+    everything.write.parquet(os.path.join(raw, "events.parquet"))
+
+    got = _rows(spark.read.parquet(dsum))
+    assert got == _rows(D.daily_rollup(everything, "user_id"))
+    u, cat = one.select("user_id", "event_type").first()
+    assert (u, "None", cat) in {(e, dd, c) for e, dd, c, _n, _v in got}
+    assert [r for r in got if r[1] == "None" and r[0] == u and r[2] == cat][0][
+        3
+    ] == 3
+    assert summary_fresh(spark, d, SUMMARY_DAILY_DIRNAME)
+
+    def rows(df):
+        return sorted(map(repr, (tuple(r) for r in df.collect())))
+
+    assert rows(a1_daily_rollup(spark, d)) == rows(a1_daily_rollup(spark, raw))
+    # retention skips the null day: it has no date to expire by
+    from nerd_spark.sources.layout import prune_summary
+
+    assert prune_summary(spark, dsum, keep_days=10_000) == []
+    assert "d=__HIVE_DEFAULT_PARTITION__" in os.listdir(dsum)
+
+
+def _many_days(spark, tmp_path):
+    """41 days of four users' events: a 40-day history plus a batch
+    that rolls the day (and re-touches some history days)."""
+    import datetime as dt
+
+    base = dt.datetime(2024, 1, 1, 6)
+    rows = [
+        (k * 4 + u, u, base + dt.timedelta(days=k, hours=u), t, float(k + u))
+        for k in range(41)
+        for u, t in enumerate(("view", "click", "view", "error"))
+    ]
+    ev = spark.createDataFrame(
+        rows,
+        "event_id long, user_id long, ts timestamp, event_type string,"
+        " value double",
+    )
+    last = (base + dt.timedelta(days=40)).date()
+    hist = ev.filter(F.to_date("ts") < F.lit(last))
+    batch = ev.filter(
+        (F.to_date("ts") == F.lit(last)) | (F.col("event_id") % 7 == 0)
+    ).withColumn("event_id", F.col("event_id") + 1000)
+    dsum = str(tmp_path / "daily")
+    update_daily_summary(spark, dsum, hist)
+    assert len([n for n in os.listdir(dsum) if n.startswith("d=")]) == 40
+    return hist, batch, dsum
+
+
+def _reads_paths(monkeypatch, fn):
+    """The paths every DataFrameReader.parquet call made during fn()."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    seen = []
+    parquet = DataFrameReader.parquet
+
+    def recording(self, *paths, **kw):
+        seen.extend(os.path.normpath(p) for p in paths)
+        return parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", recording)
+    try:
+        fn()
+    finally:
+        monkeypatch.undo()
+    return seen
+
+
+def test_fold_over_many_days_reads_touched_dirs_only(spark, tmp_path,
+                                                     monkeypatch):
+    """Past 32 date partitions Spark lists a table root in a parallel
+    job. With 40 days of history the daily fold reads the batch's
+    touched partitions by path, never daily's root, and still equals
+    the full rebuild."""
+    hist, batch, dsum = _many_days(spark, tmp_path)
+    seen = _reads_paths(
+        monkeypatch, lambda: update_daily_summary(spark, dsum, batch)
+    )
+    assert seen and os.path.normpath(dsum) not in seen
+    assert _rows(spark.read.parquet(dsum)) == _rows(
+        D.daily_rollup(hist.unionByName(batch), "user_id")
+    )
+
+
+@pytest.mark.slow
+def test_window_day_roll_reads_daily_by_path(spark, tmp_path, monkeypatch):
+    """The window day-roll over a 40-day daily summary reads daily's
+    d >= lo partitions by path (never its root) and still equals the
+    full rollup."""
+    from nerd_spark.sources.layout import update_window_summary, window_rollup
+
+    hist, batch, dsum = _many_days(spark, tmp_path)
+    wsum = str(tmp_path / "window")
+    update_window_summary(spark, wsum, dsum, hist)  # first build: whole
+    update_daily_summary(spark, dsum, batch)
+    seen = _reads_paths(
+        monkeypatch,
+        lambda: update_window_summary(spark, wsum, dsum, batch),
+    )
+    assert seen and os.path.normpath(dsum) not in seen
+    everything = hist.unionByName(batch)
+
+    def win(df):
+        cols = ["entity", "total", "total1", "total7", "total30", "nd_days"]
+        return sorted(map(repr, (tuple(r) for r in df.select(cols).collect())))
+
+    full = window_rollup(
+        D.daily_rollup(everything, "user_id").select("entity", "d", "cat", "n"),
+        everything.agg(F.to_date(F.max("ts")).alias("as_of_d")),
+    )
+    assert win(spark.read.parquet(wsum)) == win(full)
