@@ -32,6 +32,10 @@ from nerd_spark.queries import streamingq  # noqa: E402,F401
 
 # The inventory exceeds the driver's 50-entry correctness window, so
 # the window front is hand-prioritized each round.
+# 0. every query whose money rounding follows the oracles' DOUBLE
+#    round (queries/base.py::_round: q1 and every exact_sum /
+#    exact_avg caller) heads the window, so the driver checks the
+#    change against their oracles; the fill below moves down by them.
 # Round-14 rotation (implements the r13 verdict's binding #1b/#3):
 # 1. every query whose operator code changed in r13/r14 heads the
 #    window AHEAD of the rotation fill (r13 verdict binding #3):
@@ -47,12 +51,20 @@ from nerd_spark.queries import streamingq  # noqa: E402,F401
 # 2. the scheduled rotation remainder: sessionize_stats and the rest
 #    of the r11-latest rows (38 rows — the staleness obligation the
 #    r12 verdict set, completing here);
-# 3. fill to 50 with the three r12-latest rows nearest the touched
-#    paths (corpus_curation, corpus_curation_v2, dedup_best_of_cluster
-#    ride the same minhash/components/curation code family).
-# After r14: no row older than r11; the r12 remainder (45 rows) is
-# the next staleness block.
+# The three r12-latest fill rows (corpus_curation, corpus_curation_v2,
+# dedup_best_of_cluster) left the list for group 0, and the list's
+# 51st row (weighted_sample_topk) falls just past the window. After
+# r14: no row older than r11; the r12 remainder (45 rows) is the next
+# staleness block.
 _WINDOW_PRIORITY = [
+    # 0 -- money rounding changed
+    "q1_pricing_summary",
+    "j4_range_join",
+    "j4_range_join_bucketed",
+    "j8_group_stats_join_back",
+    "a10_prefix_summary",
+    "a14_feed_rollup",
+    "a16_rollup_revenue",
     # 1 -- operator code changed in r13/r14 (binding, r13 verdict #3)
     "dedup_containment",
     "dedup_incremental",
@@ -78,9 +90,7 @@ _WINDOW_PRIORITY = [
     "hh_by_event_type",
     "hh_event_users",
     "j2_enrichment_chain",
-    "j4_range_join",
     "j6_bulk_lookup",
-    "j8_group_stats_join_back",
     "mixture_temperature_free",
     "op_array_upsert_rebuild",
     "p10_validity_filter",
@@ -94,7 +104,6 @@ _WINDOW_PRIORITY = [
     "p5_multi_value_and_or",
     "p6_elem_match",
     "p8_semijoin",
-    "q1_pricing_summary",
     "sessionize_stats",
     "streaming_cohort",
     "streaming_daily_counts",
@@ -102,10 +111,6 @@ _WINDOW_PRIORITY = [
     "text_token_stats",
     "w4_last_n_per_key",
     "weighted_sample_topk",
-    # 3 -- r12-latest fill nearest the touched code family
-    "corpus_curation",
-    "corpus_curation_v2",
-    "dedup_best_of_cluster",
 ]
 
 

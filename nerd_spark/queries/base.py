@@ -123,6 +123,20 @@ def _unscaled(col):
     return F.when(near, k_exact).otherwise(F.floor(f + F.lit(0.5))).cast("long")
 
 
+def _round(x, ndigits: int):
+    """``round(x, ndigits)`` of a DOUBLE as the DuckDB oracles round
+    it: ``std::round(x * 10^n) / 10^n``, half away from zero on the
+    scaled double. Spark's ``round(x, n)`` rounds the decimal string
+    of ``x`` half-up instead, a cent off where ``x`` sits just below
+    a tie (0.285: the oracle says 0.28, Spark's round 0.29). Rounding
+    the scaled double to an integer agrees: its shortest decimal
+    string ends in ``.5`` only when the double is exactly a tie."""
+    from pyspark.sql import functions as F
+
+    scale = F.lit(10.0**ndigits)
+    return F.round(x * scale, 0) / scale
+
+
 def exact_sum(col, alias: str, ndigits: int = 2):
     """Spark: exact sum of a ~2-dp double column -> rounded double.
 
@@ -137,7 +151,7 @@ def exact_sum(col, alias: str, ndigits: int = 2):
     """
     from pyspark.sql import functions as F
 
-    return F.round(F.sum(_unscaled(col)) / F.lit(1e4), ndigits).alias(alias)
+    return _round(F.sum(_unscaled(col)) / F.lit(1e4), ndigits).alias(alias)
 
 
 def exact_sum_wide(col, alias: str, ndigits: int = 2):
@@ -146,7 +160,7 @@ def exact_sum_wide(col, alias: str, ndigits: int = 2):
     row (BigDecimal accumulator) but unbounded to 24 integer digits."""
     from pyspark.sql import functions as F
 
-    return F.round(F.sum(_dec(col)).cast("double"), ndigits).alias(alias)
+    return _round(F.sum(_dec(col)).cast("double"), ndigits).alias(alias)
 
 
 def exact_sum_u4(col, alias: str, ndigits: int = 2):
@@ -157,7 +171,7 @@ def exact_sum_u4(col, alias: str, ndigits: int = 2):
     double by construction."""
     from pyspark.sql import functions as F
 
-    return F.round(F.sum(col) / F.lit(1e4), ndigits).alias(alias)
+    return _round(F.sum(col) / F.lit(1e4), ndigits).alias(alias)
 
 
 def exact_avg_u4(col, alias: str, ndigits: int = 6):
@@ -165,7 +179,7 @@ def exact_avg_u4(col, alias: str, ndigits: int = 6):
     from pyspark.sql import functions as F
 
     c = F.col(col) if isinstance(col, str) else col
-    return F.round((F.sum(c) / F.lit(1e4)) / F.count(c), ndigits).alias(alias)
+    return _round((F.sum(c) / F.lit(1e4)) / F.count(c), ndigits).alias(alias)
 
 
 def exact_avg(col, alias: str, ndigits: int = 6):
@@ -174,7 +188,7 @@ def exact_avg(col, alias: str, ndigits: int = 6):
     from pyspark.sql import functions as F
 
     c = F.col(col) if isinstance(col, str) else col
-    return F.round(
+    return _round(
         (F.sum(_unscaled(col)) / F.lit(1e4)) / F.count(c), ndigits
     ).alias(alias)
 

@@ -67,6 +67,8 @@ def q1_pricing_summary(spark, sf_dir):
         ),
         sources=("lineitem.parquet",),
     )
+    from nerd_spark.queries.base import _round, exact_avg_u4, exact_sum_u4
+
     if s is not None:
         return (
             s.filter(
@@ -76,9 +78,9 @@ def q1_pricing_summary(spark, sf_dir):
             .groupBy("l_returnflag", "l_linestatus")
             .agg(
                 F.round(F.sum("qty_sum"), 2).alias("sum_qty"),
-                F.round(F.sum("ep_u4") / F.lit(1e4), 2).alias("sum_base_price"),
-                F.round(F.sum("dp_u4") / F.lit(1e4), 2).alias("sum_disc_price"),
-                F.round(F.sum("ch_u4") / F.lit(1e4), 2).alias("sum_charge"),
+                exact_sum_u4("ep_u4", "sum_base_price"),
+                exact_sum_u4("dp_u4", "sum_disc_price"),
+                exact_sum_u4("ch_u4", "sum_charge"),
                 (
                     F.expr(
                         "(2 * cast(sum(qty_sum) as bigint) * 1000000 + sum(cnt))"
@@ -86,10 +88,10 @@ def q1_pricing_summary(spark, sf_dir):
                     ).cast("double")
                     / 1e6
                 ).alias("avg_qty"),
-                F.round(
+                _round(
                     (F.sum("ep_u4") / F.lit(1e4)) / F.sum("n_ep"), 6
                 ).alias("avg_price"),
-                F.round(
+                _round(
                     (F.sum("disc_u4") / F.lit(1e4)) / F.sum("n_disc"), 6
                 ).alias("avg_disc"),
                 F.sum("cnt").alias("count_order"),
@@ -102,8 +104,6 @@ def q1_pricing_summary(spark, sf_dir):
     # converting doubles per row. Raw dirs (every oracle compare) run
     # the on-the-fly path — bit-identical by construction.
     pre = "l_extendedprice_u4" in li.columns
-    from nerd_spark.queries.base import exact_avg_u4, exact_sum_u4
-
     sums = (
         [
             exact_sum_u4("l_extendedprice_u4", "sum_base_price"),

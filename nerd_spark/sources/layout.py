@@ -129,26 +129,6 @@ HH_BY_TYPE_MIN_COUNT = 15
 MINHASH_BANDS_DIRNAME = "minhash_bands.parquet"
 
 
-# Reader gate for the window table. A CUSTOM marker, not _SUCCESS:
-# the layout seed writes the table with a plain overwrite whose job
-# commit creates root _SUCCESS BEFORE the sidecar meta anchor is
-# written — gating on _SUCCESS could serve a new-anchor table against
-# a stale anchor after a crash in that window. (The fold commits
-# through _staged_partition_commit, whose swap never recreates a root
-# marker.) Spark never creates this file, so touching it only after
-# BOTH the table and the meta commit keeps the gate ordered on every
-# write path (torn state -> no gate -> raw-recompute fallback).
-WINDOW_GATE = "_NERD_GATE"
-
-
-def _window_meta_path(window_path: str) -> str:
-    """Sidecar holding the window table's as-of date (one row). Kept
-    OUT of the row schema so a day-roll doesn't force rewriting rows
-    whose window values are unchanged — with a per-row as_of_d every
-    row 'changes' daily and the rewrite can never be bounded."""
-    return window_path + ".meta"
-
-
 # Reserved map key standing in for a NULL category in cat_counts30
 # (maps cannot hold null keys; a NUL byte cannot appear in a real
 # category string). Encoded in window_rollup's per-category map build,
@@ -303,6 +283,34 @@ def _window_schema(entity):
             ),
             T.StructField("wb", T.IntegerType()),
         ]
+    )
+
+
+def _anchor(spark: SparkSession, as_of_d):
+    """The one-row ``as_of_d`` frame :func:`window_rollup` ages
+    against: a literal over a one-row inline table (a LocalRelation),
+    built in the JVM with no job and no Python-worker round trip."""
+    return spark.sql("VALUES (0)").select(
+        F.lit(as_of_d).cast("date").alias("as_of_d")
+    )
+
+
+def _window_spec(path: str, entity: str = "user_id"):
+    """The window table as the fold's head and tail see it. Its state
+    of a batch is the batch's daily rollup. It has no ``merge``: its
+    two regimes key on the as-of anchor its meta carries beside the
+    binding (:func:`update_window_summary`)."""
+    from nerd_spark.plans import derivations as D
+
+    return _FoldSpec(
+        "update_window_summary",
+        path,
+        "wb",
+        state=lambda ev: D.daily_rollup(ev, entity).select(
+            "entity", "d", "cat", "n"
+        ),
+        merge=None,
+        binding={"entity": entity},
     )
 
 
@@ -658,24 +666,24 @@ def optimize_layout(
             )
             # Second-level window rollup (the A2 answer table): reading
             # the just-committed daily summary (compact) rather than
-            # re-aggregating raw events.
-            sd = spark.read.parquet(daily.path)
-            asof_d_df = as_of.select(F.to_date("as_of").alias("as_of_d"))
-            wpath = os.path.join(out_dir, SUMMARY_WINDOW_DIRNAME)
-            (
-                _with_rep_columns(
-                    window_rollup(sd.select("entity", "d", "cat", "n"), asof_d_df)
-                )
-                .drop("as_of_d")  # anchor lives in the sidecar meta
-                .withColumn("wb", _wbucket())
-                .repartition("wb")
-                .write.mode("overwrite")
-                .partitionBy("wb")
-                .parquet(wpath)
+            # re-aggregating raw events; the anchor goes in its meta.
+            sd = spark.read.parquet(daily.path).select(
+                "entity", "d", "cat", "n"
             )
-            asof_d_df.write.mode("overwrite").parquet(_window_meta_path(wpath))
-            write_summary_meta(spark, wpath, {"entity": "user_id"})
-            fsutil.touch(spark, os.path.join(wpath, WINDOW_GATE))
+            as_of_d = as_of.select(F.to_date("as_of")).first()[0]
+            window = _window_spec(
+                os.path.join(out_dir, SUMMARY_WINDOW_DIRNAME), "user_id"
+            )
+            _seed(
+                spark,
+                window,
+                _with_rep_columns(
+                    window_rollup(sd, _anchor(spark, as_of_d)).drop("as_of_d")
+                ).withColumn("wb", _wbucket()),
+                meta=dict(
+                    window.binding, as_of_d=as_of_d and as_of_d.isoformat()
+                ),
+            )
 
         def _ix_seed(spec):
             # a fold's state of ALL events, written straight into the
@@ -849,10 +857,15 @@ def update_window_summary(
       byte-identical on disk. The all-history `total` stays purely
       additive (old total + batch counts).
 
-    The as-of anchor lives in a one-row sidecar (``<path>.meta``),
-    NOT in the row schema — a per-row as_of_d would make every row
-    change on day-roll and unbound the rewrite. Tables written by the
-    earlier per-row-as_of_d format migrate via one full rewrite.
+    The as-of anchor lives in the table's meta (``as_of_d`` beside
+    the entity binding), NOT in the row schema — a per-row as_of_d
+    would make every row change on day-roll and unbound the rewrite.
+    Recovery, replay skip, binding check and commit are :func:`_fold`'s
+    (:func:`_fold_skip`, :func:`_fold_commit`); the staged commit's
+    manifest carries the meta, so a resumed swap lands the anchor with
+    the rows. Live rows whose meta holds no anchor (a crash artifact
+    or an older format) are rebuilt from the daily summary through
+    the first-build path; the dir's batch ledger is kept.
 
     Reads plan from what the fold knows: daily's ``d >= lo`` date
     partitions by path and the window's own rows with the schema
@@ -867,64 +880,26 @@ def update_window_summary(
     """
     import datetime as _dt
 
-    from nerd_spark.plans import derivations as D
-
-    # discard-only: the window's gate-down recovery is a full rebuild
-    # that never reads the (possibly mixed) live state
-    _staged_swap_recover(
-        spark, window_path, "wb", gate_name=WINDOW_GATE, resume=False
-    )
-    if _fold_ledger_skip(spark, window_path, batch_id, marker=WINDOW_GATE):
+    spec = _window_spec(window_path, entity)
+    if _fold_skip(spark, spec, new_events, batch_id):
         return
-    bd = D.daily_rollup(new_events, entity).select("entity", "d", "cat", "n")
-    batch_max_d = bd.agg(F.max("d")).first()[0]
+    bd = spec.state(new_events)
+    # the batch's buckets and its newest day, in one job
+    got = bd.groupBy(_wbucket().alias("wb")).agg(F.max("d")).collect()
+    batch_max_d = max(filter(None, (r[1] for r in got)), default=None)
     if batch_max_d is None:
         return  # empty batch
-
-    have_old = fsutil.exists(spark, os.path.join(window_path, WINDOW_GATE))
-    if have_old:
-        # entity-binding guard: meta-less (crash/legacy) falls back to
-        # the existing no-gate FULL-REBUILD path, which derives from
-        # the daily summary and never reads the live window rows;
-        # a genuine mismatch raises (_fold_binding)
-        if (
-            _fold_binding(
-                spark, window_path, {"entity": entity}, True,
-                "update_window_summary",
-            )
-            == "rebuild"
-        ):
-            have_old = False
-    # the current format is wb-bucketed with the anchor in the sidecar
-    # and reads with its known schema; only a legacy (unbucketed) table
-    # infers its schema from the files
-    bucketed = have_old and any(
-        n.startswith("wb=") for n in fsutil.list_names(spark, window_path)
-    )
-    if bucketed:
-        old = spark.read.schema(_window_schema(bd.schema["entity"])).parquet(
-            window_path
-        )
-    else:
-        old = spark.read.parquet(window_path) if have_old else None
-    meta_p = _window_meta_path(window_path)
-    legacy = old is not None and "as_of_d" in old.columns
-    if old is None:
-        old_as_of_d = None
-    elif fsutil.exists(spark, os.path.join(meta_p, "_SUCCESS")):
-        old_as_of_d = spark.read.schema("as_of_d date").parquet(meta_p).first()[0]
-    elif legacy:
-        old_as_of_d = old.select(F.max("as_of_d")).first()[0]
-    else:
-        # table without meta or column (manual surgery): recompute
-        # windows from the summary; totals stay additive
-        old_as_of_d = None
+    have = bool(_parts(spark, window_path, "wb"))
+    old_as_of_d = None
+    if have and (
+        _fold_binding(spark, window_path, spec.binding, True, spec.what)
+        == "fold"
+    ):
+        a = read_summary_meta(spark, window_path).get("as_of_d")
+        old_as_of_d = _dt.date.fromisoformat(a) if a else None
+    have = old_as_of_d is not None  # no anchor: rebuild from daily
     new_as_of_d = max(filter(None, [old_as_of_d, batch_max_d]))
-    # the one-row anchor over a one-row inline table (a LocalRelation):
-    # built in the JVM, no Python-worker round trip
-    asof_df = spark.sql("VALUES (0)").select(
-        F.lit(new_as_of_d).alias("as_of_d")
-    )
+    asof_df = _anchor(spark, new_as_of_d)
     days = _date_parts(spark, daily_summary_path)
 
     def daily_since(lo):
@@ -932,25 +907,29 @@ def update_window_summary(
         names = [n for d, n in sorted(days.items()) if d >= lo]
         return _read_parts(spark, daily_summary_path, names, bd)
 
+    def live(touched):
+        # the live rows of the touched buckets, with their known schema
+        return (
+            spark.read.schema(_window_schema(bd.schema["entity"]))
+            .parquet(window_path)
+            .filter(F.col("wb").isin(touched))
+            .drop("wb")
+        )
+
     zero = F.lit(0).cast("long")
     empty = F.array().cast("array<string>")
     zvec_l = F.array_repeat(F.lit(0).cast("long"), _VEC_DAYS)
     zvec_i = F.array_repeat(F.lit(0).cast("int"), _VEC_DAYS)
     _VECS = (("nd_days", zvec_l), ("cats_days", zvec_i), ("err_days", zvec_l))
 
-    # bucket-scoped rewrites need the CURRENT format: bucketed, no
-    # per-row as_of_d (partition files must share one schema). Legacy
-    # tables migrate via one full rewrite.
-    day_roll = old is None or old_as_of_d is None or new_as_of_d > old_as_of_d
-    touched: list[int] | None = None
-
-    if day_roll:
+    if not have or new_as_of_d > old_as_of_d:
         # day-roll (or first build): windowed parts from the merged
         # daily summary, PRUNED to the partitions that can matter
         lo = new_as_of_d - _dt.timedelta(days=max_window)
-        recent = daily_since(lo)
-        winpart = window_rollup(recent, asof_df).drop("total", "as_of_d")
-        if bucketed and old_as_of_d is not None:
+        winpart = window_rollup(daily_since(lo), asof_df).drop(
+            "total", "as_of_d"
+        )
+        if have:
             # Bound the rewrite to buckets holding entities ACTIVE in
             # the trailing window of either anchor (covers both rows
             # whose windows gain days and rows whose windows age out),
@@ -959,46 +938,13 @@ def update_window_summary(
             # their buckets are not rewritten (byte-identical,
             # tested). The active scan reads only pruned date
             # partitions of the daily summary.
-            lo_active = min(old_as_of_d, new_as_of_d) - _dt.timedelta(
-                days=max_window
-            )
             active = (
-                daily_since(lo_active)
+                daily_since(old_as_of_d - _dt.timedelta(days=max_window))
                 .select(_wbucket().alias("wb"))
                 .unionByName(bd.select(_wbucket().alias("wb")))
                 .distinct()
             )
-            touched = sorted(r.wb for r in active.collect())
-            if len(touched) >= WINDOW_BUCKETS:
-                touched = None  # every bucket active: plain overwrite
-            else:
-                old = old.filter(F.col("wb").isin(touched))
-        if old is not None and "wb" in old.columns:
-            old = old.drop("wb")
-        if old is None:
-            # FIRST build: all-history totals from the FULL daily
-            # summary — update_daily_summary has already merged this
-            # batch, and a pre-existing summary with history (window
-            # table deleted for rebuild, torn _SUCCESS) would be
-            # silently undercounted by batch-only seeding (ADVICE r6).
-            # Assumes daily history is unpruned; when retention has
-            # already dropped partitions the rebuilt total can only
-            # reflect surviving history — say so loudly.
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "window summary first build at %s: deriving all-history "
-                "totals from the daily summary; if retention pruned old "
-                "daily partitions, `total` reflects surviving history "
-                "only (the incremental path preserves pruned counts)",
-                window_path,
-            )
-            totals = (
-                spark.read.parquet(daily_summary_path)
-                .groupBy("entity")
-                .agg(F.sum("n").cast("long").alias("total"))
-            )
-        else:
+            old = live([r.wb for r in active.collect()])
             # all-history total stays additive: old total + batch counts
             b_tot = bd.groupBy("entity").agg(
                 F.sum("n").cast("long").alias("b_total")
@@ -1012,6 +958,30 @@ def update_window_summary(
                         F.coalesce("total", zero) + F.coalesce("b_total", zero)
                     ).alias("total"),
                 )
+            )
+        else:
+            # FIRST build (or rebuild): all-history totals from the
+            # FULL daily summary — update_daily_summary has already
+            # merged this batch, and a pre-existing summary with
+            # history (window table deleted for rebuild, torn meta)
+            # would be silently undercounted by batch-only seeding
+            # (ADVICE r6). Assumes daily history is unpruned; when
+            # retention has already dropped partitions the rebuilt
+            # total can only reflect surviving history — say so
+            # loudly.
+            import logging
+
+            logging.getLogger(__name__).warning(
+                "window summary first build at %s: deriving all-history "
+                "totals from the daily summary; if retention pruned old "
+                "daily partitions, `total` reflects surviving history "
+                "only (the incremental path preserves pruned counts)",
+                window_path,
+            )
+            totals = (
+                spark.read.parquet(daily_summary_path)
+                .groupBy("entity")
+                .agg(F.sum("n").cast("long").alias("total"))
             )
         merged = totals.join(winpart, "entity", "full").select(
             "entity",
@@ -1039,25 +1009,17 @@ def update_window_summary(
         # as the day-roll recompute, and update_event_summaries runs
         # the daily merge first so the summary already holds the
         # batch). Caught by the out-of-order streamed-batches test.
+        # Only the buckets the batch touches are merged and rewritten;
+        # every other bucket's files stay byte-identical on disk.
+        touched = [r.wb for r in got]
         bagg = window_rollup(bd, asof_df).drop("as_of_d")
-        lo_v = new_as_of_d - _dt.timedelta(days=_VEC_DAYS - 1)
-        recent_v = daily_since(lo_v)
-        if bucketed:
-            # restrict the merge to the buckets the batch touches: only
-            # those partition dirs are rewritten below; every other
-            # bucket's files stay byte-identical on disk. The touched
-            # set is driver-side metadata, bounded by WINDOW_BUCKETS.
-            touched = sorted(
-                r.wb for r in bd.select(_wbucket().alias("wb")).distinct().collect()
-            )
-            old = old.filter(F.col("wb").isin(touched))
-            recent_v = recent_v.filter(_wbucket().isin(touched))
-        if "wb" in old.columns:
-            old = old.drop("wb")
+        recent_v = daily_since(
+            new_as_of_d - _dt.timedelta(days=_VEC_DAYS - 1)
+        ).filter(_wbucket().isin(touched))
         vecs = window_rollup(recent_v, asof_df).select(
             "entity", *[v for v, _ in _VECS]
         )
-        o, b = old.alias("o"), bagg.alias("b")
+        o, b = live(touched).alias("o"), bagg.alias("b")
         merge_cols = [
             c
             for w in _WINDOWS
@@ -1102,28 +1064,14 @@ def update_window_summary(
             )
         )
 
-    # The reader gate (WINDOW_GATE — see its comment for why not
-    # _SUCCESS) stays down until the sidecar anchor is written, so a
-    # tear at ANY point leaves no gate and readers fall back to the
-    # raw recompute. touched=None is the day-roll whole-table rewrite:
-    # full=True also removes live buckets absent from the new state.
-    merged = _with_rep_columns(merged).withColumn("wb", _wbucket())
-    success = os.path.join(window_path, WINDOW_GATE)
-    _staged_partition_commit(
+    _fold_commit(
         spark,
-        merged,
-        window_path,
-        "wb",
-        gate_name=WINDOW_GATE,
-        full=touched is None,
+        spec,
+        _with_rep_columns(merged).withColumn("wb", _wbucket()),
+        have,
+        batch_id,
+        dict(spec.binding, as_of_d=new_as_of_d.isoformat()),
     )
-    # sidecar as-of anchor BEFORE restoring the reader gate: a tear
-    # between the two leaves no gate and the next update rebuilds
-    asof_df.write.mode("overwrite").parquet(_window_meta_path(window_path))
-    write_summary_meta(spark, window_path, {"entity": entity})
-    _fold_ledger_record(spark, window_path, batch_id)
-    fsutil.touch(spark, success)
-    _staged_commit_finalize(spark, window_path)
 
 
 def update_merged_summary(
@@ -1157,12 +1105,14 @@ def _merged_spec(path: str, entity: str = "user_id"):
 
 
 def write_summary_meta(spark: SparkSession, dirpath: str, meta: dict) -> None:
-    """Parameter-binding sidecar for a derived table; a gate-passing
+    """Parameter-binding sidecar for a derived table (the window's
+    also holds its as-of anchor); a gate-passing
     dir with missing/mismatched meta falls back instead of serving
     wrong parameters. The commit owns the ordering (a reader that sees
     the gate must also see the binding): :func:`_commit_dir` writes
-    the sidecar inside its staging dir before the marker, and the
-    partitioned folds write it before re-touching their gate."""
+    the sidecar inside its staging dir before the marker, the layout
+    seed (:func:`_seed`) and the partitioned folds before touching
+    their gate."""
     fsutil.write_text(
         spark, os.path.join(dirpath, SUMMARY_META_NAME), json.dumps(meta)
     )
@@ -1209,10 +1159,7 @@ def _ledger_ids(spark: SparkSession, dirpath: str) -> list[str]:
 
 
 def _fold_ledger_skip(
-    spark: SparkSession,
-    dirpath: str,
-    batch_id: str | None,
-    marker: str = "_SUCCESS",
+    spark: SparkSession, dirpath: str, batch_id: str | None
 ) -> bool:
     """True iff this batch is already folded into the table at
     ``dirpath`` (skip the fold). Re-touches a gate the previous run
@@ -1220,7 +1167,7 @@ def _fold_ledger_skip(
     already completed by ledger time."""
     if batch_id is None or batch_id not in _ledger_ids(spark, dirpath):
         return False
-    gate = os.path.join(dirpath, marker)
+    gate = os.path.join(dirpath, "_SUCCESS")
     if not fsutil.exists(spark, gate):
         fsutil.touch(spark, gate)
     return True
@@ -1255,16 +1202,15 @@ def _fold_ledger_record(
 # the (mixed) live table, closing the last mid-commit corruption
 # window (a replayed or subsequent batch would otherwise merge into
 # partitions that had already absorbed the torn batch and
-# double-count them once the gate came back).
+# double-count them once the gate came back). It carries the batch
+# id and the meta the commit stamps, so the recovery lands both: the
+# window's meta holds its as-of anchor, which changes on a day-roll
+# and must land with the rows it is the anchor of.
 _STAGING_MANIFEST = "_nerd_staged_commit.json"
 
 
 def _staged_swap_recover(
-    spark: SparkSession,
-    table_path: str,
-    part_col: str,
-    gate_name: str = "_SUCCESS",
-    resume: bool = True,
+    spark: SparkSession, table_path: str, part_col: str
 ) -> None:
     """Heal a staging dir left by a crashed _staged_partition_commit.
     MUST run at fold start, BEFORE the caller reads the live table —
@@ -1276,30 +1222,24 @@ def _staged_swap_recover(
       unparseable predates the commit decision), or the reader gate is
       back up (the table committed
       since: a seed/rebuild, a prune cycle, or the ledger-skip path
-      re-touching after a tear between ledger and gate), or
-      ``resume=False``: the staging copy is garbage — discard it;
+      re-touching after a tear between ledger and gate): the staging
+      copy is garbage — discard it;
     - manifest + gate down: complete the swap (the renamed-away
       partitions are exactly the ones no longer in staging, so the
-      remaining staged dirs are the not-yet-applied tail), record the
-      manifest's batch id in the fold ledger (the data state now fully
-      holds that batch; the additive fold must never re-apply it), and
-      leave the gate DOWN — post-commit sidecars/projections for the
+      remaining staged dirs are the not-yet-applied tail), write the
+      manifest's meta, record its batch id in the fold ledger (the
+      data state now fully holds that batch; the additive fold must
+      never re-apply it), and leave the gate DOWN — dependents of the
       torn batch may be missing, and the ledger-skip heal paths
-      re-touch the gate and rebuild dependents on the next call.
-
-    ``resume=False`` is for tables whose gate-down recovery is a full
-    rebuild that never reads the live state (the window summary):
-    completing the swap buys nothing, and skipping the resume keeps
-    their designed no-gate -> rebuild path authoritative. Resume also
-    assumes touched-partition commits (``full=False``) — the only
-    ``full`` caller is the window summary, which discards."""
+      re-touch the gate and rebuild dependents on the next call."""
     staging = table_path.rstrip("/") + ".staging"
     if not fsutil.exists(spark, staging):
         return
     txt = fsutil.read_text(spark, os.path.join(staging, _STAGING_MANIFEST))
-    gate_up = fsutil.exists(spark, os.path.join(table_path, gate_name))
+    gate_up = fsutil.exists(spark, os.path.join(table_path, "_SUCCESS"))
     try:
-        bid = json.loads(txt).get("batch_id") if txt is not None else None
+        manifest = json.loads(txt) if txt is not None else {}
+        bid, meta = manifest.get("batch_id"), manifest.get("meta")
     except (ValueError, AttributeError):
         # The manifest is written atomically (temp + rename), so a
         # readable-but-unparseable manifest means the commit point was
@@ -1308,11 +1248,12 @@ def _staged_swap_recover(
         # ledger entry and replay would double-count it. Discard: the
         # live table is untouched and the fold simply re-runs.
         txt = None
-        bid = None
-    if txt is None or gate_up or not resume:
+    if txt is None or gate_up:
         fsutil.delete(spark, staging, recursive=True)
         return
     fsutil.swap_partition_dirs(spark, staging, table_path, part_col + "=")
+    if meta is not None:
+        write_summary_meta(spark, table_path, meta)
     if bid is not None:
         _fold_ledger_record(spark, table_path, bid)
     fsutil.delete(spark, staging, recursive=True)
@@ -1323,13 +1264,12 @@ def _staged_partition_commit(
     merged,
     table_path: str,
     part_col: str,
-    gate_name: str = "_SUCCESS",
-    full: bool = False,
+    meta: dict,
     batch_id: str | None = None,
 ) -> list[str]:
     """Commit ``merged`` — the rewritten rows of its touched
-    ``part_col`` partitions (the WHOLE table when ``full``) — into the
-    partitioned summary at ``table_path`` with the staging-rename
+    ``part_col`` partitions — into the partitioned summary at
+    ``table_path`` with the staging-rename
     pattern of streaming/ingest.py::merge_facts, replacing the former
     in-place dynamic-partition overwrite. Two things the in-place
     overwrite could not give:
@@ -1349,9 +1289,9 @@ def _staged_partition_commit(
 
     Only ``part_col=`` children are swapped: ledger files, meta
     sidecars and the gate at the table root are never touched by the
-    swap. ``full`` additionally deletes live partitions absent from
-    staging (the whole-table-rewrite case). The caller re-touches the
-    gate after its sidecar/ledger writes, exactly as before. Object
+    swap. The manifest records ``batch_id`` and ``meta`` (the sidecar
+    the caller writes next) for the recovery. The caller re-touches
+    the gate after its sidecar/ledger writes. Object
     stores without atomic rename (raw S3) want an ACID table format
     (Delta/Iceberg) here instead — same note as merge_facts. Returns
     the staged partition names."""
@@ -1375,32 +1315,22 @@ def _staged_partition_commit(
     fsutil.write_text_atomic(
         spark,
         os.path.join(staging, _STAGING_MANIFEST),
-        json.dumps({"batch_id": batch_id, "part_col": part_col}),
+        json.dumps({"batch_id": batch_id, "part_col": part_col, "meta": meta}),
     )
     fsutil.mkdirs(spark, table_path)
     # nothing destructive has happened yet; drop the reader gate only
     # now, for the duration of the swap
-    fsutil.delete(spark, os.path.join(table_path, gate_name))
-    if full:
-        for name in fsutil.list_names(spark, table_path):
-            stale = os.path.join(table_path, name)
-            # Hadoop reports a failed delete by returning false —
-            # unchecked, the stale partition would stay live
-            if name.startswith(prefix) and name not in staged and not (
-                fsutil.delete(spark, stale, recursive=True)
-            ):
-                raise IOError(
-                    f"_staged_partition_commit: failed to remove {stale}"
-                )
+    fsutil.delete(spark, os.path.join(table_path, "_SUCCESS"))
     fsutil.swap_partition_dirs(spark, staging, table_path, prefix)
     # staging (and its manifest) deliberately SURVIVES the swap: the
-    # caller deletes it via _staged_commit_finalize only after its
+    # caller (:func:`_fold_commit`) deletes it only after its
     # sidecar writes, ledger record, and gate touch. A tear anywhere
     # in between leaves the manifest for _staged_swap_recover, which
-    # records the batch in the fold ledger — without this, a tear
-    # after the swap but before the ledger write would replay into a
-    # state that already holds the batch and double-count it (caught
-    # by the tear-point sweep test at exactly that boundary).
+    # writes its meta and records the batch in the fold ledger —
+    # without this, a tear after the swap but before the ledger write
+    # would replay into a state that already holds the batch and
+    # double-count it (caught by the tear-point sweep test at exactly
+    # that boundary).
     return staged
 
 
@@ -1470,15 +1400,6 @@ def _warn_metaless_adoption(what: str, state_path: str, binding: dict) -> None:
     )
 
 
-def _staged_commit_finalize(spark: SparkSession, table_path: str) -> None:
-    """Drop the staging dir of a fully-committed staged fold — call
-    ONLY after the ledger record and gate touch. From this point the
-    ledger alone carries the batch's applied-ness."""
-    fsutil.delete(
-        spark, table_path.rstrip("/") + ".staging", recursive=True
-    )
-
-
 def _commit_dir(
     spark: SparkSession,
     rows,
@@ -1531,6 +1452,16 @@ def _part_name(part: str, v) -> str:
     into. The partition columns here are dates and bucket ints, whose
     names need no escaping."""
     return f"{part}={_NULL_PART if v is None else v}"
+
+
+def _parts(spark: SparkSession, path: str, part: str) -> set[str]:
+    """The ``part=`` partition dirs of the table at ``path``. State
+    presence is any of them, NOT the gate: the gate is down during
+    every commit window, and a merge that missed the existing rows
+    would drop them on overlapping partitions."""
+    return {
+        n for n in fsutil.list_names(spark, path) if n.startswith(part + "=")
+    }
 
 
 def _date_parts(spark: SparkSession, path: str) -> dict:
@@ -1608,7 +1539,8 @@ def _sum_counts(key: str) -> Callable:
 
 def _fold(spark: SparkSession, spec: _FoldSpec, new_events, batch_id) -> None:
     """Fold one batch into the partitioned serve table of ``spec``.
-    The commit sequence, shared by every partitioned fold:
+    The commit sequence, shared by every partitioned fold (the window
+    fold runs steps 1-2 and 6-7 through the same helpers):
 
     1. recover a torn staged swap (:func:`_staged_swap_recover`);
     2. ledger skip: a batch already in the dir's ledger returns after
@@ -1632,7 +1564,8 @@ def _fold(spark: SparkSession, spec: _FoldSpec, new_events, batch_id) -> None:
        commit replaces — and the root ``_SUCCESS`` reader gate is down
        only around the directory swap. A tear anywhere leaves no gate
        (queries fall back to the raw-events scan, never serve corrupt
-       partitions) plus the staging copy for step 1;
+       partitions) plus the staging copy, whose manifest carries the
+       batch id and the meta, for step 1;
     7. meta sidecar, ledger record, gate touch, staging finalize;
     8. dependents (result caches, projections) from the committed
        state, each a whole-dir :func:`_commit_dir`; ``deps_marker`` is
@@ -1644,33 +1577,7 @@ def _fold(spark: SparkSession, spec: _FoldSpec, new_events, batch_id) -> None:
     a schema from it. With no state and an empty batch the fold only
     records the ledger id."""
     path, part = spec.path, spec.part_col
-    gate = os.path.join(path, "_SUCCESS")
-
-    def parts() -> set[str]:
-        # state presence = any partition dir, NOT the gate: the gate is
-        # down during every commit window, and a merge that missed the
-        # existing rows would drop them on overlapping partitions
-        return {
-            n for n in fsutil.list_names(spark, path) if n.startswith(part + "=")
-        }
-
-    _staged_swap_recover(spark, path, part)
-    if spec.seeded_only and not fsutil.exists(spark, path):
-        return
-    if batch_id is not None and batch_id in _ledger_ids(spark, path):
-        if parts():
-            if not fsutil.exists(spark, gate):
-                fsutil.touch(spark, gate)
-            if spec.deps is not None:
-                try:
-                    stale = not fsutil.exists(spark, spec.deps_marker) or (
-                        fsutil.mtime(spark, spec.deps_marker)
-                        < fsutil.mtime(spark, gate)
-                    )
-                except Py4JJavaError:  # a marker deleted meanwhile
-                    stale = True
-                if stale:
-                    spec.deps(spec.state(new_events))
+    if _fold_skip(spark, spec, new_events, batch_id):
         return
     bs = spec.state(new_events)
     touched = [r[0] for r in bs.select(part).distinct().collect()]
@@ -1680,7 +1587,7 @@ def _fold(spark: SparkSession, spec: _FoldSpec, new_events, batch_id) -> None:
             f"partitions (> {spec.max_touched}); filter to the "
             "acceptance window first (P10)"
         )
-    live = parts()
+    live = _parts(spark, path, part)
     have = bool(live)
     verdict = _fold_binding(
         spark,
@@ -1701,37 +1608,89 @@ def _fold(spark: SparkSession, spec: _FoldSpec, new_events, batch_id) -> None:
         _fold_ledger_record(spark, path, batch_id)
         return
     merged = bs
-    if not have:
-        # no partitions to merge with: clear what the dir holds (state
-        # of unknown binding, a schema-only seed marker, a ledger of
-        # empty batches) before the first partitioned build
-        fsutil.delete(spark, path, recursive=True)
-    else:
+    if have:
         # the touched live partitions, by path and with the state's
         # schema; a null value's dir (Spark's default partition) too
         names = [_part_name(part, v) for v in touched]
         old = _read_parts(spark, path, [n for n in names if n in live], bs)
         merged = spec.merge(old, bs)
-    staged = _staged_partition_commit(
-        spark, merged, path, part, batch_id=batch_id
-    )
-    write_summary_meta(spark, path, spec.binding)
-    _fold_ledger_record(spark, path, batch_id)
-    if have or staged:
-        fsutil.touch(spark, gate)
-    _staged_commit_finalize(spark, path)
-    if (have or staged) and spec.deps is not None:
+    gated = _fold_commit(spark, spec, merged, have, batch_id)
+    if gated and spec.deps is not None:
         spec.deps(bs)
 
 
-def _seed(spark: SparkSession, spec: _FoldSpec, rows, partitioned=True) -> None:
+def _fold_skip(spark: SparkSession, spec: _FoldSpec, new_events, batch_id):
+    """Steps 1-2 of :func:`_fold`: True when the fold has nothing
+    left to do."""
+    path = spec.path
+    gate = os.path.join(path, "_SUCCESS")
+    _staged_swap_recover(spark, path, spec.part_col)
+    if spec.seeded_only and not fsutil.exists(spark, path):
+        return True
+    if batch_id is None or batch_id not in _ledger_ids(spark, path):
+        return False
+    if _parts(spark, path, spec.part_col):
+        if not fsutil.exists(spark, gate):
+            fsutil.touch(spark, gate)
+        if spec.deps is not None:
+            try:
+                stale = not fsutil.exists(spark, spec.deps_marker) or (
+                    fsutil.mtime(spark, spec.deps_marker)
+                    < fsutil.mtime(spark, gate)
+                )
+            except Py4JJavaError:  # a marker deleted meanwhile
+                stale = True
+            if stale:
+                spec.deps(spec.state(new_events))
+    return True
+
+
+def _fold_commit(
+    spark: SparkSession, spec: _FoldSpec, merged, have, batch_id, meta=None
+) -> bool:
+    """Steps 6-7 of :func:`_fold`: commit ``merged`` and stamp
+    ``meta`` (default: the binding). Without live partitions
+    (``have`` false) the dir is first cleared of all but its batch
+    ledger — state of unknown binding, a schema-only seed marker,
+    rows of an older format — gate first. Returns whether the table
+    is gated."""
+    path = spec.path
+    gate = os.path.join(path, "_SUCCESS")
+    meta = spec.binding if meta is None else meta
+    if not have:
+        fsutil.delete(spark, gate)
+        for n in fsutil.list_names(spark, path):
+            if n != SUMMARY_LEDGER_NAME:
+                fsutil.delete(spark, os.path.join(path, n), recursive=True)
+    staged = _staged_partition_commit(
+        spark, merged, path, spec.part_col, meta, batch_id
+    )
+    write_summary_meta(spark, path, meta)
+    _fold_ledger_record(spark, path, batch_id)
+    gated = have or bool(staged)
+    if gated:
+        fsutil.touch(spark, gate)
+    # from here the ledger alone carries the batch's applied-ness
+    fsutil.delete(spark, path.rstrip("/") + ".staging", recursive=True)
+    return gated
+
+
+def _seed(
+    spark: SparkSession, spec: _FoldSpec, rows, partitioned=True, meta=None
+) -> None:
     """Layout-time build of ``spec``'s table from its state ``rows``,
-    written straight into the fresh dir: no staging, no ledger."""
+    written straight into the fresh dir: no staging, no ledger. The
+    rows land without Spark's ``_SUCCESS``, then the meta (default:
+    the binding), then the gate: a crash leaves no gated dir without
+    its meta."""
     w = rows.write
     if partitioned:
         w = rows.repartition(spec.part_col).write.partitionBy(spec.part_col)
-    w.mode("overwrite").parquet(spec.path)
-    write_summary_meta(spark, spec.path, spec.binding)
+    w.mode("overwrite").option(
+        "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+    ).parquet(spec.path)
+    meta = spec.binding if meta is None else meta
+    write_summary_meta(spark, spec.path, meta)
     fsutil.touch(spark, os.path.join(spec.path, "_SUCCESS"))
     if spec.deps is not None:
         spec.deps(rows)
@@ -2205,35 +2164,36 @@ def _cohort_spec(spark: SparkSession, data_dir: str, entity="user_id"):
     )
 
 
-# (dirname, reader-gate file) for every ingest-maintained serve table
-# an events data dir can carry — the introspection registry behind
-# serve_table_status, and where the one reader gate (_gate) looks up
-# each table's commit marker. Document-side tables (token hist, doc
-# card) are keyed on documents rather than events; status still
-# reports them.
-_SERVE_TABLES: tuple[tuple[str, str], ...] = (
-    (SUMMARY_DAILY_DIRNAME, "_SUCCESS"),
-    (SUMMARY_ASOF_DIRNAME, "_SUCCESS"),
-    (SUMMARY_WINDOW_DIRNAME, WINDOW_GATE),
-    (SUMMARY_MERGED_DIRNAME, "_SUCCESS"),
-    (SUMMARY_FUNNEL_DIRNAME, "_SUCCESS"),
-    (SUMMARY_FUNNEL_RESULT_DIRNAME, "_SUCCESS"),
-    (SUMMARY_COHORT_DIRNAME, "_SUCCESS"),
-    (SUMMARY_COHORT_RESULT_DIRNAME, "_SUCCESS"),
-    (SUMMARY_TYPE_USER_DIRNAME, "_SUCCESS"),
-    (SUMMARY_USER_COUNTS_DIRNAME, "_SUCCESS"),
-    (SUMMARY_HH_USERS_RESULT_DIRNAME, "_SUCCESS"),
-    (SUMMARY_HH_BY_TYPE_RESULT_DIRNAME, "_SUCCESS"),
-    (SUMMARY_TOPFREQ_RESULT_DIRNAME, "_SUCCESS"),
-    (SUMMARY_HH_MINCOUNT_RESULT_DIRNAME, "_SUCCESS"),
-    (SUMMARY_HH_BY_MINCOUNT_RESULT_DIRNAME, "_SUCCESS"),
-    (SUMMARY_TOPK_VALUE_DIRNAME, "_SUCCESS"),
-    (SUMMARY_VALUE_HIST_DIRNAME, "_SUCCESS"),
-    (SUMMARY_VALUE_COUNTS_DIRNAME, "_SUCCESS"),
-    (SUMMARY_QUANTILE_RESULT_DIRNAME, "_SUCCESS"),
-    (SUMMARY_QUANTILE_BY_RESULT_DIRNAME, "_SUCCESS"),
-    (SUMMARY_DOC_TOKEN_HIST_DIRNAME, "_SUCCESS"),
-    (SUMMARY_DOC_CARD_RESULT_DIRNAME, "_SUCCESS"),
+# Every ingest-maintained serve table an events data dir can carry —
+# the introspection registry behind serve_table_status. Each one is
+# gated on its root ``_SUCCESS``, which every writer touches last:
+# the partitioned folds through _fold_commit, the layout seeds through
+# _seed, the whole-dir tables through _commit_dir. Document-side
+# tables (token hist, doc card) are keyed on documents rather than
+# events; status still reports them.
+_SERVE_TABLES: tuple[str, ...] = (
+    SUMMARY_DAILY_DIRNAME,
+    SUMMARY_ASOF_DIRNAME,
+    SUMMARY_WINDOW_DIRNAME,
+    SUMMARY_MERGED_DIRNAME,
+    SUMMARY_FUNNEL_DIRNAME,
+    SUMMARY_FUNNEL_RESULT_DIRNAME,
+    SUMMARY_COHORT_DIRNAME,
+    SUMMARY_COHORT_RESULT_DIRNAME,
+    SUMMARY_TYPE_USER_DIRNAME,
+    SUMMARY_USER_COUNTS_DIRNAME,
+    SUMMARY_HH_USERS_RESULT_DIRNAME,
+    SUMMARY_HH_BY_TYPE_RESULT_DIRNAME,
+    SUMMARY_TOPFREQ_RESULT_DIRNAME,
+    SUMMARY_HH_MINCOUNT_RESULT_DIRNAME,
+    SUMMARY_HH_BY_MINCOUNT_RESULT_DIRNAME,
+    SUMMARY_TOPK_VALUE_DIRNAME,
+    SUMMARY_VALUE_HIST_DIRNAME,
+    SUMMARY_VALUE_COUNTS_DIRNAME,
+    SUMMARY_QUANTILE_RESULT_DIRNAME,
+    SUMMARY_QUANTILE_BY_RESULT_DIRNAME,
+    SUMMARY_DOC_TOKEN_HIST_DIRNAME,
+    SUMMARY_DOC_CARD_RESULT_DIRNAME,
 )
 
 
@@ -2257,10 +2217,10 @@ def serve_table_status(spark: SparkSession, data_dir: str) -> list[dict]:
     of stats per table, no Spark jobs) — safe to poll from a
     monitoring loop at any frequency."""
     out = []
-    for dirname, gate_name in _SERVE_TABLES:
+    for dirname in _SERVE_TABLES:
         path = os.path.join(data_dir, dirname)
         present = fsutil.exists(spark, path)
-        gate = os.path.join(path, gate_name)
+        gate = os.path.join(path, "_SUCCESS")
         out.append(
             {
                 "table": dirname,
@@ -2425,8 +2385,7 @@ def serve_table(
 ):
     """The one reader gate of every derived dir: the table, or None
     (the caller falls back to its raw path — exact, just slower). A
-    dir is served iff its commit marker (from ``_SERVE_TABLES``;
-    ``_SUCCESS`` for dirs not listed there) exists and is no older
+    dir is served iff its commit marker (``_SUCCESS``) exists and is no older
     than any of its ``sources`` (mtime probes through the Hadoop FS
     layer — rewrites/appends under a source bump its dir mtime past
     the commit; an absent source outdates nothing), its meta sidecar
@@ -2471,7 +2430,7 @@ def _gate(
     spark, data_dir, dirname, sources, binding, expect_cols, probe=True
 ):
     path = os.path.join(data_dir, dirname)
-    marker = os.path.join(path, dict(_SERVE_TABLES).get(dirname, "_SUCCESS"))
+    marker = os.path.join(path, "_SUCCESS")
     if not fsutil.exists(spark, marker):
         return None
     smtime = fsutil.mtime(spark, marker)

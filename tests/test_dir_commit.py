@@ -74,3 +74,30 @@ def test_commit_dir_tear_sweep(spark, tmp_path, tear_sweep):
             assert json.load(f) == ["b1", "b2"], label
 
     tear_sweep(setup, fold, check, min_ops=5)
+
+
+def test_seed_gates_only_after_its_meta(spark, tmp_path, monkeypatch):
+    """The layout seed's rows land without Spark's ``_SUCCESS`` and
+    the gate is touched after the meta, so a crash at the meta write
+    leaves an ungated dir, never a gated one without its binding."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from nerd_spark.sources import layout
+
+    path = str(tmp_path / NAME)
+    spec = layout._FoldSpec(
+        "seed", path, "wb", state=None, merge=None, binding={"v": 1}
+    )
+
+    def crash(*a, **kw):
+        raise RuntimeError("crash at the meta write")
+
+    monkeypatch.setattr(layout, "write_summary_meta", crash)
+    with pytest.raises(RuntimeError, match="meta write"):
+        layout._seed(
+            spark, spec, spark.range(4).withColumn("wb", F.col("id") % 2)
+        )
+    assert any(n.startswith("wb=") for n in os.listdir(path))
+    assert not os.path.exists(os.path.join(path, "_SUCCESS"))
+    assert not summary_fresh(spark, str(tmp_path), NAME, sources=())

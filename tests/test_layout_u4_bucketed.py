@@ -371,3 +371,56 @@ def test_quantile_and_card_serve_on_layout_dir(spark, sf_dir, layout_dir):
         SUMMARY_DOC_CARD_RESULT_DIRNAME in f for f in card.inputFiles()
     )
     assert rows(card) == rows(corpus_stats_card(spark, sf_dir))
+
+
+def test_q1_money_ties_round_like_the_oracle(spark, tmp_path):
+    """One lineitem priced 0.285: its double sits just below the tie,
+    so the DuckDB oracle's sums round it to 0.28. The raw and the
+    served q1 path must answer the same, to the cent."""
+    import datetime
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nerd_spark.queries import ORACLE
+    from nerd_spark.queries.compare import diff
+    from nerd_spark.sources.layout import SUMMARY_Q1_DIRNAME, summary_fresh
+
+    raw, out = str(tmp_path / "raw"), str(tmp_path / "layout")
+    os.makedirs(raw)
+    one = lambda v, t: pa.array([v], t)  # noqa: E731
+    pq.write_table(
+        pa.table(
+            {
+                "l_orderkey": one(1, pa.int64()),
+                "l_partkey": one(1, pa.int64()),
+                "l_suppkey": one(1, pa.int64()),
+                "l_linenumber": one(1, pa.int32()),
+                "l_quantity": one(1.0, pa.float64()),
+                "l_extendedprice": one(0.285, pa.float64()),
+                "l_discount": one(0.0, pa.float64()),
+                "l_tax": one(0.0, pa.float64()),
+                "l_returnflag": one("A", pa.string()),
+                "l_linestatus": one("F", pa.string()),
+                "l_shipdate": one(
+                    datetime.datetime(1995, 1, 1), pa.timestamp("us")
+                ),
+            }
+        ),
+        os.path.join(raw, "lineitem.parquet"),
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW lineitem AS SELECT * FROM '{raw}/lineitem.parquet'"
+    )
+    want = con.execute(ORACLE["q1_pricing_summary"]).df()
+    con.close()
+    assert want["sum_base_price"].tolist() == [0.28]
+    optimize_layout(spark, raw, out, tables=["lineitem"])
+    assert summary_fresh(
+        spark, out, SUMMARY_Q1_DIRNAME, sources=("lineitem.parquet",)
+    )
+    for d in (raw, out):
+        got = REGISTRY["q1_pricing_summary"](spark, d).toPandas()
+        assert diff(got, want) is None, d

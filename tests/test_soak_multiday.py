@@ -8,6 +8,7 @@ actually rolled."""
 
 from __future__ import annotations
 
+import datetime
 import os
 
 import pytest
@@ -18,8 +19,8 @@ from nerd_spark.session import read_table
 from nerd_spark.sources.layout import (
     SUMMARY_DAILY_DIRNAME,
     SUMMARY_WINDOW_DIRNAME,
-    _window_meta_path,
     prune_summary,
+    read_summary_meta,
 )
 from nerd_spark.streaming.summary_stream import stream_all_summaries
 
@@ -77,9 +78,11 @@ def test_three_day_soak_with_midday_restart(spark, sf_dir, tmp_path):
         nonlocal streamed
         streamed.write.mode("overwrite").parquet(os.path.join(raw, "events.parquet"))
         # the anchor rolled to this day
-        asof = spark.read.parquet(
-            _window_meta_path(os.path.join(state, SUMMARY_WINDOW_DIRNAME))
-        ).collect()[0].as_of_d
+        asof = datetime.date.fromisoformat(
+            read_summary_meta(
+                spark, os.path.join(state, SUMMARY_WINDOW_DIRNAME)
+            )["as_of_d"]
+        )
         assert asof == d, f"anchor {asof} != day {d}"
         for name in SERVED:
             served = REGISTRY[name](spark, state)

@@ -148,7 +148,6 @@ def test_pool_crash_replay_converges(spark, sf_dir, tmp_path, monkeypatch):
         SUMMARY_TYPE_USER_DIRNAME,
         SUMMARY_VALUE_HIST_DIRNAME,
         SUMMARY_WINDOW_DIRNAME,
-        WINDOW_GATE,
         seed_value_hist,
         update_event_summaries,
     )
@@ -181,7 +180,7 @@ def test_pool_crash_replay_converges(spark, sf_dir, tmp_path, monkeypatch):
 
     gates = {
         SUMMARY_DAILY_DIRNAME: "_SUCCESS",
-        SUMMARY_WINDOW_DIRNAME: WINDOW_GATE,
+        SUMMARY_WINDOW_DIRNAME: "_SUCCESS",
         SUMMARY_MERGED_DIRNAME: "_SUCCESS",
         SUMMARY_FUNNEL_DIRNAME: "_SUCCESS",
         SUMMARY_TYPE_USER_DIRNAME: "_SUCCESS",

@@ -20,7 +20,7 @@ from nerd_spark.sources.layout import (
 
 
 def _win_rows(df):
-    # as_of_d is NOT part of the row schema (it lives in the sidecar
+    # as_of_d is NOT part of the row schema (it lives in the table's
     # meta so day-rolls don't force full rewrites); the maintained
     # table carries the wb bucket partition column, the full rollup
     # doesn't — compare the value columns.
@@ -50,9 +50,12 @@ def _full_rollup(spark, ev):
 
 
 def _win_meta_asof(spark, wpath):
-    from nerd_spark.sources.layout import _window_meta_path
+    import datetime
 
-    return spark.read.parquet(_window_meta_path(wpath)).first()[0]
+    from nerd_spark.sources.layout import read_summary_meta
+
+    meta = read_summary_meta(spark, wpath)
+    return datetime.date.fromisoformat(meta["as_of_d"])
 
 
 @pytest.mark.slow
@@ -83,7 +86,7 @@ def test_incremental_window_equals_full_rebuild(spark, sf_dir):
     got = _win_rows(spark.read.parquet(wpath))
     want = _win_rows(_full_rollup(spark, ev))
     assert got == want and len(want) > 0
-    # the sidecar anchor tracks the maximum ingested event date
+    # the meta's anchor tracks the maximum ingested event date
     assert _win_meta_asof(spark, wpath) == days[-1]
 
 
@@ -97,9 +100,7 @@ def test_a_family_serve_paths_equal_fallback(spark, sf_dir):
 
     out = tempfile.mkdtemp(prefix="nerd_a2_layout_")
     optimize_layout(spark, sf_dir, out, tables=["events"])
-    from nerd_spark.sources.layout import WINDOW_GATE
-
-    assert os.path.exists(os.path.join(out, SUMMARY_WINDOW_DIRNAME, WINDOW_GATE))
+    assert os.path.exists(os.path.join(out, SUMMARY_WINDOW_DIRNAME, "_SUCCESS"))
 
     rows = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
     for q in (
@@ -508,15 +509,34 @@ def test_null_category_corpus_serves_equal_raw(spark, tmp_path):
         assert rows(q(spark, d)) == rows(q(spark, raw)), q.__name__
 
 
+def _mk_events(spark, days):
+    """240 synthetic events over ``days`` days from 2024-03-01, seven
+    users, three event types."""
+    return spark.range(240).select(
+        F.col("id").alias("event_id"),
+        (
+            F.to_timestamp(F.lit("2024-03-01 00:00:00"))
+            + F.make_interval(
+                days=(F.col("id") % F.lit(days)).cast("int"),
+                hours=(F.col("id") * 3 % 24).cast("int"),
+            )
+        ).alias("ts"),
+        F.pmod("id", F.lit(7)).alias("user_id"),
+        F.element_at(
+            F.array(F.lit("view"), F.lit("click"), F.lit("error")),
+            (F.col("id") % 3 + 1).cast("int"),
+        ).alias("event_type"),
+        (F.col("id") % 13 / 2.0).alias("value"),
+    )
+
+
 @pytest.mark.slow
 def test_staged_commit_tear_sweep_window_dayroll(spark, tmp_path, tear_sweep):
-    """Tear sweep over the window summary's DAY-ROLL commit — the one
-    full-table rewrite shape (full=True: stale buckets deleted, all
-    buckets swapped) with the discard-only recovery (a torn window
-    commit leaves no gate, and the next fold's rebuild path derives
-    everything from the daily summary without reading the mixed live
-    state). Crash at every mutating-op boundary, replay, and require
-    the window table to equal the one-shot rebuild."""
+    """Tear sweep over the window summary's DAY-ROLL commit, which
+    rewrites every bucket holding an active entity and moves the
+    as-of anchor in the meta. Crash at every mutating-op boundary,
+    replay, and require the window table to equal the one-shot
+    rebuild."""
     from pyspark.sql import functions as F2
 
     from nerd_spark.sources.layout import (
@@ -526,25 +546,7 @@ def test_staged_commit_tear_sweep_window_dayroll(spark, tmp_path, tear_sweep):
         update_window_summary,
     )
 
-    def mk_events(days):
-        return spark.range(240).select(
-            F2.col("id").alias("event_id"),
-            (
-                F2.to_timestamp(F2.lit("2024-03-01 00:00:00"))
-                + F2.make_interval(
-                    days=(F2.col("id") % F2.lit(days)).cast("int"),
-                    hours=(F2.col("id") * 3 % 24).cast("int"),
-                )
-            ).alias("ts"),
-            F2.pmod("id", F2.lit(7)).alias("user_id"),
-            F2.element_at(
-                F2.array(F2.lit("view"), F2.lit("click"), F2.lit("error")),
-                (F2.col("id") % 3 + 1).cast("int"),
-            ).alias("event_type"),
-            (F2.col("id") % 13 / 2.0).alias("value"),
-        )
-
-    ev = mk_events(4)
+    ev = _mk_events(spark, 4)
     b1 = ev.filter(F2.to_date("ts") <= F2.lit("2024-03-02"))
     b2 = ev.filter(F2.to_date("ts") > F2.lit("2024-03-02"))  # day-roll
 
@@ -576,3 +578,50 @@ def test_staged_commit_tear_sweep_window_dayroll(spark, tmp_path, tear_sweep):
         check,
         min_ops=6,
     )
+
+
+def test_resumed_window_swap_lands_its_anchor(spark, tmp_path, monkeypatch):
+    """A day-roll fold torn after its bucket swap, before its meta
+    write: the replay's recovery completes the swap and writes the
+    new anchor from the staged commit's manifest. A late batch dated
+    the OLD anchor's day then folds as a same-day merge against the
+    new anchor, and the window equals the one-shot rollup."""
+    import datetime
+
+    from nerd_spark.sources import layout
+    from nerd_spark.sources.layout import (
+        SUMMARY_DAILY_DIRNAME,
+        update_daily_summary,
+        update_window_summary,
+    )
+
+    ev = _mk_events(spark, 4)
+    day = F.to_date("ts")
+    late = (day == F.lit("2024-03-02")) & (F.col("event_id") % 5 == 0)
+    b1 = ev.filter((day <= F.lit("2024-03-02")) & ~late)
+    b2 = ev.filter(day > F.lit("2024-03-02"))  # day-roll to 03-04
+    b3 = ev.filter(late)
+    dp = str(tmp_path / SUMMARY_DAILY_DIRNAME)
+    wp = str(tmp_path / SUMMARY_WINDOW_DIRNAME)
+    update_daily_summary(spark, dp, b1, batch_id="b1")
+    update_window_summary(spark, wp, dp, b1, batch_id="b1")
+    update_daily_summary(spark, dp, b2, batch_id="b2")
+
+    real = layout.write_summary_meta
+
+    def torn(spark_, dirpath, meta):
+        if os.path.normpath(dirpath) == os.path.normpath(wp):
+            monkeypatch.setattr(layout, "write_summary_meta", real)
+            raise RuntimeError("torn after the swap")
+        real(spark_, dirpath, meta)
+
+    monkeypatch.setattr(layout, "write_summary_meta", torn)
+    with pytest.raises(RuntimeError, match="after the swap"):
+        update_window_summary(spark, wp, dp, b2, batch_id="b2")
+    assert _win_meta_asof(spark, wp) == datetime.date(2024, 3, 2)
+    update_window_summary(spark, wp, dp, b2, batch_id="b2")  # replay
+    assert _win_meta_asof(spark, wp) == datetime.date(2024, 3, 4)
+    update_daily_summary(spark, dp, b3, batch_id="b3")
+    update_window_summary(spark, wp, dp, b3, batch_id="b3")
+    want = _win_rows(_full_rollup(spark, ev))
+    assert _win_rows(spark.read.parquet(wp)) == want
