@@ -88,7 +88,7 @@ current_heavy_hitters(spark, os.path.join(base, "state"), 0.01).orderBy(
     "cnt", ascending=False
 ).show(5)
 
-print("== streaming exact quantiles (per-epoch value-histogram state) ==")
+print("== streaming exact quantiles (folded value-histogram state) ==")
 from nerd_spark.streaming.quantile_stream import (
     current_quantiles,
     stream_quantiles,

@@ -243,8 +243,7 @@ def cohort_user_state(
     (sources/layout.py::update_cohort_summary) equal the one-shot
     aggregation. Two aggregations, but the first ((u, et) grain)
     bounds the second at |users| x |types| rows; day granularity keeps
-    the state at the user's own distinct (type, day) activity, the
-    streaming_cohort epoch-state bound.
+    the state at the user's own distinct (type, day) activity.
     """
     e = events.select(
         F.col(user_col).alias("u"),
@@ -376,9 +375,9 @@ def retention_from_per_user(
 ) -> DataFrame:
     """Resolve (cohort_date, period, cohort_size, active_users,
     retention) from the per-user (d0, days) reduction — shared by the
-    batch operator above and the streaming epoch-state serve
-    (streaming/cohort_stream.py), which both arrive at the same
-    per-user state by different aggregations."""
+    batch operator above and the cohort fold's serves (the
+    summary table and streaming/cohort_stream.py), which arrive at
+    the same per-user state by different aggregations."""
     from nerd_spark.operators.cacheutil import tie_unpersist
 
     per_u = per_u.select(

@@ -57,6 +57,14 @@ from nerd_spark.queries import streamingq  # noqa: E402,F401
 # r14: no row older than r11; the r12 remainder (45 rows) is the next
 # staleness block.
 _WINDOW_PRIORITY = [
+    # streams whose state or commit moved onto the fold and the staged
+    # epoch commit, and the batch queries sharing their fold state
+    "streaming_cohort",
+    "streaming_quantiles",
+    "streaming_hh_terms",
+    "streaming_funnel",
+    "cohort_retention",
+    "quantile_by_event_type",
     # 0 -- money rounding changed
     "q1_pricing_summary",
     "j4_range_join",
@@ -83,7 +91,6 @@ _WINDOW_PRIORITY = [
     "ann_ivf_trained",
     "ann_ivfpq_indexed",
     "ann_pq_topk",
-    "cohort_retention",
     "dedup_simhash_pairs",
     "fmp_score",
     "fmp_score_gbt",
@@ -105,9 +112,7 @@ _WINDOW_PRIORITY = [
     "p6_elem_match",
     "p8_semijoin",
     "sessionize_stats",
-    "streaming_cohort",
     "streaming_daily_counts",
-    "streaming_funnel",
     "text_token_stats",
     "w4_last_n_per_key",
     "weighted_sample_topk",

@@ -136,12 +136,13 @@ def streaming_hh_terms(spark, sf_dir):
 def streaming_quantiles(spark, sf_dir):
     """Continuous EXACT quantile tracking
     (streaming/quantile_stream.py): the event stream drains under
-    availableNow into per-epoch value-histogram state, and the serving
-    query must equal the one-shot batch exact_quantiles_by — so it
-    shares quantile_by_event_type's SQL oracle (the
-    streaming_daily_counts discipline: a drained static set has no
-    late data, making the streamed result hash-checkable). Histograms
-    add exactly across epochs, so unlike sketch state the cumulative
+    availableNow, each micro-batch one fold of the exact value
+    histogram, and the serving query must equal the one-shot batch
+    exact_quantiles_by — so it shares quantile_by_event_type's SQL
+    oracle (the streaming_daily_counts discipline: a drained static
+    set has no late data, making the streamed result hash-checkable).
+    Histograms
+    add exactly across batches, so unlike sketch state the cumulative
     result carries no merge error at any horizon."""
     from nerd_spark.streaming.quantile_stream import (
         current_quantiles,
@@ -199,13 +200,12 @@ def streaming_quantiles(spark, sf_dir):
 )
 def streaming_cohort(spark, sf_dir):
     """Continuous cohort retention (streaming/cohort_stream.py): the
-    event stream drains under availableNow into per-epoch additive
-    day-set state — (user, day, kind, cnt) rows whose existence is
-    all serving reads, so replays and compaction cannot perturb the
-    answer — and the serving query must equal the one-shot batch
-    cohort_retention, so it shares that query's SQL oracle (the
-    streaming_quantiles discipline: a drained static set has no late
-    data, making the streamed result hash-checkable)."""
+    event stream drains under availableNow, each micro-batch one fold
+    of the per-user day-set state (set union and min, so replays
+    cannot perturb the answer), and the serving query must equal the
+    one-shot batch cohort_retention, so it shares that query's SQL
+    oracle (the streaming_quantiles discipline: a drained static set
+    has no late data, making the streamed result hash-checkable)."""
     from nerd_spark.streaming.cohort_stream import (
         current_retention,
         stream_retention,

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import Callable
 
 from py4j.protocol import Py4JJavaError
@@ -1138,7 +1138,7 @@ def read_summary_meta(spark: SparkSession, dirpath: str) -> dict | None:
 # skips folds that already hold it and re-runs only the torn ones.
 # Crash between ledger write and gate touch: the data write had
 # completed, so the skip path re-touches the gate. The data write
-# itself goes through _staged_partition_commit (merge_facts'
+# itself goes through the staged commit of _fold_commit (merge_facts'
 # staging-rename pattern): a crash during the write job leaves the
 # live table untouched and gated; a crash during the swap leaves the
 # gate dropped (readers fall back to raw) plus an intact staging
@@ -1212,7 +1212,7 @@ _STAGING_MANIFEST = "_nerd_staged_commit.json"
 def _staged_swap_recover(
     spark: SparkSession, table_path: str, part_col: str
 ) -> None:
-    """Heal a staging dir left by a crashed _staged_partition_commit.
+    """Heal a staging dir left by a crashed :func:`_fold_commit`.
     MUST run at fold start, BEFORE the caller reads the live table —
     after a torn swap the live table mixes old and new partitions and
     is not a valid merge input.
@@ -1226,7 +1226,8 @@ def _staged_swap_recover(
       copy is garbage — discard it;
     - manifest + gate down: complete the swap (the renamed-away
       partitions are exactly the ones no longer in staging, so the
-      remaining staged dirs are the not-yet-applied tail), write the
+      remaining staged dirs are the not-yet-applied tail; a whole-table
+      commit then deletes the live data it replaces), write the
       manifest's meta, record its batch id in the fold ledger (the
       data state now fully holds that batch; the additive fold must
       never re-apply it), and leave the gate DOWN — dependents of the
@@ -1240,6 +1241,7 @@ def _staged_swap_recover(
     try:
         manifest = json.loads(txt) if txt is not None else {}
         bid, meta = manifest.get("batch_id"), manifest.get("meta")
+        only = manifest.get("only")
     except (ValueError, AttributeError):
         # The manifest is written atomically (temp + rename), so a
         # readable-but-unparseable manifest means the commit point was
@@ -1251,7 +1253,7 @@ def _staged_swap_recover(
     if txt is None or gate_up:
         fsutil.delete(spark, staging, recursive=True)
         return
-    fsutil.swap_partition_dirs(spark, staging, table_path, part_col + "=")
+    _swap_in(spark, staging, table_path, part_col, only)
     if meta is not None:
         write_summary_meta(spark, table_path, meta)
     if bid is not None:
@@ -1259,79 +1261,20 @@ def _staged_swap_recover(
     fsutil.delete(spark, staging, recursive=True)
 
 
-def _staged_partition_commit(
-    spark: SparkSession,
-    merged,
-    table_path: str,
-    part_col: str,
-    meta: dict,
-    batch_id: str | None = None,
-) -> list[str]:
-    """Commit ``merged`` — the rewritten rows of its touched
-    ``part_col`` partitions — into the partitioned summary at
-    ``table_path`` with the staging-rename
-    pattern of streaming/ingest.py::merge_facts, replacing the former
-    in-place dynamic-partition overwrite. Two things the in-place
-    overwrite could not give:
-
-    - the merge plan reads the very live partitions it replaces, but
-      the staging job writes ELSEWHERE — no self-overwrite race, so
-      callers no longer pay the eager ``localCheckpoint`` lineage cut
-      that previously guarded against it;
-    - the reader gate is dropped around a handful of directory renames
-      (each atomic on HDFS/posix) instead of around a whole Spark
-      write job: the serve tier's gate-down window shrinks from the
-      job's seconds to the swap's milliseconds. A tear during the
-      write job leaves the live table untouched AND still gated; a
-      tear mid-swap leaves no gate (readers fall back to raw) plus an
-      intact staging copy for recovery, and the fold's batch ledger
-      re-runs exactly that fold on replay.
-
-    Only ``part_col=`` children are swapped: ledger files, meta
-    sidecars and the gate at the table root are never touched by the
-    swap. The manifest records ``batch_id`` and ``meta`` (the sidecar
-    the caller writes next) for the recovery. The caller re-touches
-    the gate after its sidecar/ledger writes. Object
-    stores without atomic rename (raw S3) want an ACID table format
-    (Delta/Iceberg) here instead — same note as merge_facts. Returns
-    the staged partition names."""
-    staging = table_path.rstrip("/") + ".staging"
-    fsutil.delete(spark, staging, recursive=True)
-    # one file per touched partition, as the dynamic overwrite kept it
-    merged.repartition(part_col).write.mode("overwrite").partitionBy(
-        part_col
-    ).parquet(staging)
-    prefix = part_col + "="
-    staged = [
-        n for n in fsutil.list_names(spark, staging) if n.startswith(prefix)
-    ]
-    # commit point: manifest AFTER the write job, BEFORE anything
-    # destructive — from here _staged_swap_recover can finish the job.
-    # Atomic (temp name + rename): the manifest's existence IS the
-    # commit decision, so a crash mid-write must leave it absent, not
-    # torn — a torn manifest would read as "commit reached" while its
-    # batch_id is unrecoverable, and the recovery swap would apply the
-    # batch unledgered (replay would then double-count it).
-    fsutil.write_text_atomic(
-        spark,
-        os.path.join(staging, _STAGING_MANIFEST),
-        json.dumps({"batch_id": batch_id, "part_col": part_col, "meta": meta}),
-    )
-    fsutil.mkdirs(spark, table_path)
-    # nothing destructive has happened yet; drop the reader gate only
-    # now, for the duration of the swap
-    fsutil.delete(spark, os.path.join(table_path, "_SUCCESS"))
-    fsutil.swap_partition_dirs(spark, staging, table_path, prefix)
-    # staging (and its manifest) deliberately SURVIVES the swap: the
-    # caller (:func:`_fold_commit`) deletes it only after its
-    # sidecar writes, ledger record, and gate touch. A tear anywhere
-    # in between leaves the manifest for _staged_swap_recover, which
-    # writes its meta and records the batch in the fold ledger —
-    # without this, a tear after the swap but before the ledger write
-    # would replay into a state that already holds the batch and
-    # double-count it (caught by the tear-point sweep test at exactly
-    # that boundary).
-    return staged
+def _swap_in(
+    spark: SparkSession, staging: str, table_path: str, part_col: str, only
+) -> None:
+    """Move the staged ``part_col`` partitions into the live table. A
+    commit that replaces the whole table (``only``: the staged
+    partition names, from its manifest) then deletes every other data
+    child of it — partitions of state it rebuilt, a schema-only seed
+    marker's files; the ``_``-named ledger, meta and gate stay."""
+    fsutil.swap_partition_dirs(spark, staging, table_path, part_col + "=")
+    if only is None:
+        return
+    for n in fsutil.list_names(spark, table_path):
+        if n not in only and not n.startswith("_"):
+            fsutil.delete(spark, os.path.join(table_path, n), recursive=True)
 
 
 def _fold_binding(
@@ -1408,15 +1351,30 @@ def _commit_dir(
     batch_id: str | None = None,
     one_file: bool = True,
 ) -> None:
-    """Write-aside commit of a whole unpartitioned serve table — the
-    only writer of those dirs. ``rows`` land in ``<path>.staging``
-    (Spark's own ``_SUCCESS`` suppressed), then the meta sidecar and
-    the live dir's batch ledger (plus ``batch_id``) go inside it, then
-    ``_SUCCESS`` is touched LAST, then :func:`_recover_dir` replaces
-    the live dir. A reader sees the old dir with its old meta, or no
-    gated dir, or the new one complete: never a marker without its
-    binding. The staging write reads nothing it replaces, so plans
-    over the live dir (top-k, the as-of anchor) need no lineage cut."""
+    """Write-aside commit of a whole unpartitioned dir — the only
+    writer of the unpartitioned serve tables and of the streams' epoch
+    dirs: :func:`_stage_dir`, then :func:`_recover_dir`. A reader sees
+    the old dir with its old meta, or no gated dir, or the new one
+    complete: never a marker without its binding. The staging write
+    reads nothing it replaces, so plans over the live dir (top-k, the
+    as-of anchor) need no lineage cut, and a write that fails leaves
+    the live dir as it was."""
+    _stage_dir(spark, rows, path, meta, batch_id, one_file)
+    _recover_dir(spark, path)
+
+
+def _stage_dir(
+    spark: SparkSession,
+    rows,
+    path: str,
+    meta: dict | None = None,
+    batch_id: str | None = None,
+    one_file: bool = True,
+) -> None:
+    """The staging half of :func:`_commit_dir`: ``rows`` land in
+    ``<path>.staging`` (Spark's own ``_SUCCESS`` suppressed), then the
+    meta sidecar and the live dir's batch ledger (plus ``batch_id``)
+    go inside it, then ``_SUCCESS`` is touched LAST."""
     staging = path.rstrip("/") + ".staging"
     (rows.coalesce(1) if one_file else rows).write.mode("overwrite").option(
         "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
@@ -1425,15 +1383,15 @@ def _commit_dir(
         write_summary_meta(spark, staging, meta)
     _fold_ledger_record(spark, path, batch_id, into=staging)
     fsutil.touch(spark, os.path.join(staging, "_SUCCESS"))
-    _recover_dir(spark, path)
 
 
 def _recover_dir(spark: SparkSession, path: str) -> None:
-    """Finish or discard a whole-dir commit (:func:`_commit_dir`) —
-    the rule of streaming/epochs._resume_pending: a staging dir
-    holding ``_SUCCESS`` is complete and replaces the live dir
-    (delete, then rename); one without it is discarded. Run it before
-    reading a dir whose torn commit may have deleted the live copy."""
+    """Finish or discard a whole-dir commit — the one landing rule of
+    every write-aside dir: a ``<path>.staging`` holding ``_SUCCESS`` is
+    complete and replaces the live dir (delete, then rename); one
+    without it is discarded. Run it before reading a dir whose torn
+    commit may have deleted the live copy; streaming/epochs.py runs it
+    for every ``epoch=N.staging`` it resumes."""
     staging = path.rstrip("/") + ".staging"
     if not fsutil.exists(spark, os.path.join(staging, "_SUCCESS")):
         fsutil.delete(spark, staging, recursive=True)
@@ -1519,6 +1477,14 @@ class _FoldSpec:
     seeded_only: bool = False
     max_touched: int | None = None
 
+    def at(self, path: str) -> "_FoldSpec":
+        """The same state and merge over a standalone state dir (a
+        stream's): no dependents, no events table to rebuild from, no
+        seed certificate."""
+        return replace(
+            self, path=path, events_dir=None, deps=None, seeded_only=False
+        )
+
 
 def _bucketed(merge: Callable, key: str) -> Callable:
     """Lift a state merge over the ``wb`` bucket column."""
@@ -1549,8 +1515,10 @@ def _fold(spark: SparkSession, spec: _FoldSpec, new_events, batch_id) -> None:
        state's (a tear between the state commit and their writes);
     3. state of the batch, and the partitions it touches;
     4. binding check (:func:`_fold_binding`): meta-less state is
-       rebuilt from the dir's events, or adopted with a warning when
-       the table has no route back to them;
+       rebuilt from the dir's events — the commit then replaces the
+       whole table, clearing the old state only past its commit point —
+       or adopted with a warning when the table has no route back to
+       them;
     5. merge the batch into ONLY the touched live partitions. The read
        plans from what the fold already knows, never from the whole
        table: the touched partitions that exist, by path (the null
@@ -1558,7 +1526,7 @@ def _fold(spark: SparkSession, spec: _FoldSpec, new_events, batch_id) -> None:
        ``state()`` produces (analysis only: no footer-probe job). Past
        32 dirs Spark lists a table root in a parallel job; this read
        lists only the touched dirs;
-    6. staged commit (:func:`_staged_partition_commit`): the merged
+    6. staged commit (:func:`_fold_commit`): the merged
        rows are fully written to a staging dir BEFORE any live
        partition moves — the merge plan reads the very partitions the
        commit replaces — and the root ``_SUCCESS`` reader gate is down
@@ -1648,30 +1616,68 @@ def _fold_skip(spark: SparkSession, spec: _FoldSpec, new_events, batch_id):
 def _fold_commit(
     spark: SparkSession, spec: _FoldSpec, merged, have, batch_id, meta=None
 ) -> bool:
-    """Steps 6-7 of :func:`_fold`: commit ``merged`` and stamp
-    ``meta`` (default: the binding). Without live partitions
-    (``have`` false) the dir is first cleared of all but its batch
-    ledger — state of unknown binding, a schema-only seed marker,
-    rows of an older format — gate first. Returns whether the table
-    is gated."""
-    path = spec.path
+    """Steps 6-7 of :func:`_fold`: commit ``merged`` — the rewritten
+    rows of its touched ``part_col`` partitions — with the
+    staging-rename pattern of streaming/ingest.py::merge_facts, then
+    stamp ``meta`` (default: the binding), record the batch and touch
+    the gate. Returns whether the table is gated.
+
+    - the merge plan reads the very live partitions it replaces, but
+      the staging job writes ELSEWHERE: no self-overwrite race and no
+      lineage cut;
+    - the manifest, written atomically after the write job and before
+      anything destructive, is the commit point: it records the batch
+      id and the meta for :func:`_staged_swap_recover`. A tear before
+      it leaves the live table untouched and gated;
+    - the reader gate is down only around the directory swap. Staging
+      and its manifest survive the swap until after the meta, ledger
+      and gate writes, so a tear anywhere in between is finished by
+      the recovery, which also records the batch in the ledger (a
+      replay would otherwise double-count it).
+
+    Without live partitions (``have`` false: a fresh dir, a schema-only
+    seed marker, meta-less state being rebuilt) the commit replaces
+    the whole table: its manifest lists the staged partitions and the
+    swap then deletes every other data child (:func:`_swap_in`). That
+    clear runs after the commit point, so a torn rebuild keeps the old
+    state. Object stores without atomic rename (raw S3) want an ACID
+    table format (Delta/Iceberg) here instead — same note as
+    merge_facts."""
+    path, part = spec.path, spec.part_col
     gate = os.path.join(path, "_SUCCESS")
+    staging = path.rstrip("/") + ".staging"
     meta = spec.binding if meta is None else meta
-    if not have:
-        fsutil.delete(spark, gate)
-        for n in fsutil.list_names(spark, path):
-            if n != SUMMARY_LEDGER_NAME:
-                fsutil.delete(spark, os.path.join(path, n), recursive=True)
-    staged = _staged_partition_commit(
-        spark, merged, path, spec.part_col, meta, batch_id
+    fsutil.delete(spark, staging, recursive=True)
+    # one file per touched partition, as the dynamic overwrite kept it
+    merged.repartition(part).write.mode("overwrite").partitionBy(part).parquet(
+        staging
     )
+    staged = [
+        n for n in fsutil.list_names(spark, staging) if n.startswith(part + "=")
+    ]
+    only = None if have else staged
+    # commit point. Atomic (temp name + rename): a torn manifest would
+    # read as "commit reached" with its batch id lost, and the recovery
+    # would apply the batch unledgered (a replay then double-counts it)
+    fsutil.write_text_atomic(
+        spark,
+        os.path.join(staging, _STAGING_MANIFEST),
+        json.dumps(
+            {"batch_id": batch_id, "part_col": part, "meta": meta, "only": only}
+        ),
+    )
+    fsutil.mkdirs(spark, path)
+    fsutil.delete(spark, gate)
+    _swap_in(spark, staging, path, part, only)
     write_summary_meta(spark, path, meta)
     _fold_ledger_record(spark, path, batch_id)
     gated = have or bool(staged)
     if gated:
         fsutil.touch(spark, gate)
-    # from here the ledger alone carries the batch's applied-ness
-    fsutil.delete(spark, path.rstrip("/") + ".staging", recursive=True)
+    # from here the ledger alone carries the batch's applied-ness: a
+    # tear after the swap but before the ledger write must still find
+    # the manifest, or the replay would double-count the batch
+    fsutil.delete(spark, staging, recursive=True)
     return gated
 
 

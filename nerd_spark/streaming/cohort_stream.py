@@ -1,29 +1,29 @@
-"""Continuous cohort-retention tracking: per-epoch day-set state
-over Structured Streaming.
+"""Continuous cohort-retention tracking over Structured Streaming:
+a thin shell over the cohort serve table's fold.
 
 The batch operator (operators/funnels.py::cohort_retention) reduces
 each user to (first anchor DAY, set of distinct active days) — state
 that is exactly mergeable across micro-batches: day sets union and
 the anchor is a running min, with no order sensitivity and no merge
-error at any horizon. Each epoch therefore stores its batch's
-reduction as ADDITIVE rows (u, d, kind, cnt): kind 'e' marks "user u
-had an event on day d" (one row per batch-distinct pair), kind 'a'
-the same for anchor-typed events. Counts sum across epochs and
-replays overwrite whole epoch directories (the hh/quantile/dedup
-epoch discipline: _SUCCESS-gated serving, deterministic per-batch
-kernel), so existence — the only thing serving reads — is
-replay-idempotent, and streaming/epochs.py::compact_epochs folds the
-state under its standard single-additive-column contract (cnt).
+error at any horizon. The stream keeps that state in the one
+incremental-state model the serve tables use: each micro-batch is
+one :func:`~nerd_spark.sources.layout._fold` of the cohort summary's
+state and merge (``_cohort_spec``: per-user ``cohort_user_state`` —
+day set plus every event type's first day, so the state is
+anchor-agnostic and the anchor is a serve parameter) into the
+stream's own state dir, with the staged commit, torn-commit recovery
+and batch ledger every fold has. The batch id is ``epoch=<epoch_id>``,
+so a replayed epoch is skipped by the ledger; even a batch applied
+twice under two ids cannot move the answer (set union and min are
+idempotent).
 
-Serving re-aggregates committed epochs per user and runs the SAME
-period resolution as the batch operator, so the cumulative result
-equals the one-shot batch cohort_retention over everything ingested
-(test- and oracle-pinned, the streaming_quantiles discipline).
-
-State size: epochs x per-batch distinct (user, day, kind) — bounded
-by active users x days per epoch regardless of event volume, the
-canonical "reduced state, not events" streaming shape; compaction
-bounds the epoch union at long horizons.
+Serving reads the committed state (root ``_SUCCESS``; no gate, no
+state: an empty answer, never a torn one) and runs the SAME period
+resolution as the batch operator (cohort_state_to_per_user →
+retention_from_per_user), so the cumulative result equals the
+one-shot batch cohort_retention over everything ingested (test- and
+oracle-pinned). State size is one row per user, rewritten only in
+the user buckets a batch touches.
 
 Why the FUNNEL has no UNBOUNDED streaming sibling: its state is not
 reducible under out-of-order arrival. A late stage-1 event can lower
@@ -48,80 +48,54 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from nerd_spark.streaming.hh_stream import _epochs
+from nerd_spark.sources import fsutil
+from nerd_spark.sources.layout import _cohort_spec, _fold
 
 
 def process_batch(
     spark,
     batch: DataFrame,
     state_dir: str,
-    anchor_type: str,
     epoch_id: int | None = None,
     user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> None:
-    """Absorb one arriving batch: batch-distinct (u, d, kind, cnt)
-    rows into the batch's own epoch directory."""
-    if epoch_id is None:
-        known = _epochs(spark, state_dir)
-        epoch_id = (known[-1] + 1) if known else 0
-    e = batch.select(
-        F.col(user_col).alias("u"),
-        F.to_date(ts_col).alias("d"),
-        F.col(type_col).alias("et"),
-    ).filter(F.col(ts_col).isNotNull() & F.col(user_col).isNotNull())
-    pairs = (
-        e.select("u", "d", F.lit("e").alias("kind"))
-        .unionByName(
-            e.filter(F.col("et") == anchor_type).select(
-                "u", "d", F.lit("a").alias("kind")
-            )
-        )
-        .groupBy("u", "d", "kind")
-        .agg(F.count("*").alias("cnt"))
-    )
-    pairs.write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"epoch={epoch_id}")
+    """Fold one arriving batch (``user_col``, ts, event_type) into the
+    per-user state at ``state_dir``. ``epoch_id`` keys the fold's
+    batch ledger (a replayed epoch is skipped); None folds unledgered."""
+    _fold(
+        spark,
+        _cohort_spec(spark, state_dir, user_col).at(state_dir),
+        batch,
+        None if epoch_id is None else f"epoch={epoch_id}",
     )
 
 
 def current_retention(
     spark,
     state_dir: str,
+    anchor_type: str = "signup",
     period_days: int = 7,
     n_periods: int = 4,
 ) -> DataFrame:
     """Cohort retention over everything ingested so far — the same
     (cohort_date, period, cohort_size, active_users, retention)
-    contract as the batch operator. Empty state returns the empty
+    contract as the batch operator. Without committed state the empty
     frame in that schema (user ids do not appear in the output, so
     the schema is source-type independent)."""
-    from nerd_spark.operators.funnels import retention_from_per_user
+    from nerd_spark.operators.funnels import (
+        cohort_state_to_per_user,
+        retention_from_per_user,
+    )
 
-    eps = _epochs(spark, state_dir)
-    if not eps:
+    if not fsutil.exists(spark, os.path.join(state_dir, "_SUCCESS")):
         return spark.createDataFrame(
             [],
             "cohort_date string, period long, cohort_size long, "
             "active_users long, retention double",
         )
-    paths = [os.path.join(state_dir, f"epoch={e}") for e in eps]
-    pairs = (
-        spark.read.option("basePath", state_dir).parquet(*paths).drop("epoch")
-    )
-    per_u = (
-        pairs.groupBy("u")
-        .agg(
-            F.min(F.when(F.col("kind") == "a", F.col("d"))).alias("d0"),
-            F.collect_set(
-                F.when(F.col("kind") == "e", F.col("d"))
-            ).alias("days"),
-        )
-        .filter(F.col("d0").isNotNull())
-    )
+    per_u = cohort_state_to_per_user(spark.read.parquet(state_dir), anchor_type)
     return retention_from_per_user(per_u, period_days, n_periods)
 
 
@@ -130,22 +104,11 @@ def stream_retention(
     events_stream: DataFrame,
     state_dir: str,
     checkpoint_dir: str,
-    anchor_type: str = "signup",
-    compact_after: int | None = 16,
 ):
-    """Wire :func:`process_batch` as a foreachBatch sink with the
-    automatic base-epoch roll-up past ``compact_after`` committed
-    epochs (keep_recent=2 covers the at-least-once replay window;
-    ``None`` disables)."""
-    from nerd_spark.streaming.epochs import maybe_compact
+    """Wire :func:`process_batch` as a foreachBatch sink."""
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        process_batch(
-            spark, batch_df, state_dir,
-            anchor_type=anchor_type, epoch_id=epoch_id,
-        )
-        if compact_after is not None:
-            maybe_compact(spark, state_dir, "cnt", max_epochs=compact_after)
+        process_batch(spark, batch_df, state_dir, epoch_id=epoch_id)
 
     return (
         events_stream.writeStream.foreachBatch(sink)

@@ -18,10 +18,11 @@ everything ingested so far (proven in tests/test_dedup_stream.py):
 every pair is found exactly when its second member arrives.
 
 Exactly-once under foreachBatch's at-least-once replay: every write —
-the emitted pairs AND the index absorption — targets the batch's own
-``epoch=N`` subdirectory with mode=overwrite, so a replayed epoch
-rewrites its own output instead of double-appending; the candidate
-join reads the index EXCLUDING the current epoch, so a crash that
+the emitted pairs AND the index absorption — commits the batch's own
+``epoch=N`` subdirectory by the staged rule of streaming/epochs.py, so
+a replayed epoch replaces its own output instead of double-appending
+(and a replay that fails leaves the committed one in place); the
+candidate join reads the index EXCLUDING the current epoch, so a crash that
 landed between the pairs write and the index write (or mid-index
 write) replays against exactly the pre-batch index state. Pairs are
 durable on disk before the index mutates, so no cached plan can ever
@@ -46,43 +47,17 @@ from nerd_spark.operators.dedup import (
     minhash_band_table,
     shingle_arrays,
 )
-
-
-def _epochs(spark, root: str) -> list[int]:
-    """Committed epoch ids under a state-table root (driver-side
-    directory listing — bounded by batch count, not data). Listed via
-    the Hadoop FS API (sources/fsutil.py) so non-local state roots
-    (hdfs://, s3a://) work identically — an os.listdir here would
-    silently see nothing and replay against an empty index.
-
-    "Committed" is enforced, not assumed: only epoch dirs containing
-    the parquet commit marker (_SUCCESS) are listed, so a crashed or
-    concurrently-writing batch's partial dir is invisible to readers
-    until its replay overwrites it whole (r8 advice on hh_stream; the
-    same serve-during-write hole applied here)."""
-    from nerd_spark.sources import fsutil
-
-    out = []
-    for name in fsutil.list_names(spark, root):
-        if name.startswith("epoch="):
-            try:
-                e = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if fsutil.exists(spark, os.path.join(root, name, "_SUCCESS")):
-                out.append(e)
-    return sorted(out)
+from nerd_spark.sources.layout import _commit_dir
+from nerd_spark.streaming.epochs import _epochs, read_epochs
 
 
 def _read_index(spark, root: str, exclude_epoch: int) -> DataFrame | None:
     """Read all committed epochs of a state table except `exclude_epoch`
     (the in-flight batch's own — excluded so at-least-once replay sees
     exactly the pre-batch index even after a partial absorption)."""
-    eps = [e for e in _epochs(spark, root) if e != exclude_epoch]
-    if not eps:
-        return None
-    paths = [os.path.join(root, f"epoch={e}") for e in eps]
-    return spark.read.option("basePath", root).parquet(*paths).drop("epoch")
+    return read_epochs(
+        spark, root, [e for e in _epochs(spark, root) if e != exclude_epoch]
+    )
 
 
 def process_batch(
@@ -136,27 +111,22 @@ def process_batch(
     pairs = tie_unpersist(pj.filter(F.col("jaccard") >= threshold), pj)
 
     # Durability order: pairs FIRST, then the index absorption, each
-    # into this epoch's own overwritten subdir. A crash at any point
+    # committed as this epoch's own subdir. A crash at any point
     # replays the epoch against the pre-batch index (own epoch is
     # excluded from reads) and rewrites both outputs identically.
     if pairs_dir is not None:
-        pairs.write.mode("overwrite").parquet(
-            os.path.join(pairs_dir, f"epoch={epoch_id}")
-        )
-        out = spark.read.option("basePath", pairs_dir).parquet(
-            os.path.join(pairs_dir, f"epoch={epoch_id}")
-        ).drop("epoch")
+        own = os.path.join(pairs_dir, f"epoch={epoch_id}")
+        _commit_dir(spark, pairs, own, one_file=False)
+        out = spark.read.parquet(own)
     else:
         # Direct-API path: pin the result before the index mutates.
         # localCheckpoint (not cache) — eviction would otherwise let
         # the plan recompute against the absorbed index.
         out = pairs.localCheckpoint()
-    batch_bands.write.mode("overwrite").parquet(
-        os.path.join(bands_path, f"epoch={epoch_id}")
-    )
-    batch_sets.write.mode("overwrite").parquet(
-        os.path.join(sets_path, f"epoch={epoch_id}")
-    )
+    for rows, root in ((batch_bands, bands_path), (batch_sets, sets_path)):
+        _commit_dir(
+            spark, rows, os.path.join(root, f"epoch={epoch_id}"), one_file=False
+        )
     sarr.unpersist()
     batch_bands.unpersist()
     return out

@@ -1,49 +1,43 @@
-"""Base-epoch roll-up for per-epoch additive state tables.
+"""Committed epoch dirs of the stream state tables, and their roll-up.
 
-The hh_stream / quantile_stream state layout (one parquet dir per
-micro-batch epoch) grows its serving union one directory per batch.
-Both serving queries re-SUM per key, and their state rows are
-ADDITIVE (term tf counts, value-histogram counts), so any prefix of
-epochs can be folded into one base epoch without changing any serve —
-the day-roll discipline of the window summary table, applied to
-stream state. At 100 TB horizons this bounds the union width: serve
-cost stays O(base + recent epochs), not O(all batches ever).
+The hh, dedup, funnel and nru streams keep their state as one parquet
+dir per micro-batch epoch, ``<state>/epoch=N``. Every write of one —
+a batch's own epoch and a compaction's folded base alike — commits by
+the staged rule of sources/layout.py::_commit_dir: rows into
+``epoch=N.staging``, then its meta sidecar, then ``_SUCCESS`` last;
+the live dir is replaced (delete, then rename) only after that
+(:func:`~nerd_spark.sources.layout._recover_dir`). Spark deletes an
+overwrite target when the write command starts, so an in-place
+overwrite lets a replay whose final stage fails destroy an epoch that
+was already committed; staged, the committed epoch stays until its
+replacement is complete. Readers list only ``epoch=N`` dirs holding
+``_SUCCESS`` (:func:`_epochs`).
 
-Crash-safe protocol (write-aside, self-healing commit — the
-ivfpq_compact discipline, hardened per the r9 advice):
+Base-epoch roll-up (:func:`compact_epochs`, funnel_stream.compact):
+a prefix of committed epochs folds into one base epoch, bounding the
+serve union at long horizons (the day-roll discipline of the window
+summary table, applied to stream state). The fold is staged as
+``epoch=<base>.staging`` with a meta listing the folded epoch ids,
+then landed (:func:`_land`): delete the folded epoch dirs, then
+:func:`_recover_dir`. Every crash point converges when
+:func:`_resume` lands every complete ``epoch=*.staging`` the same way
+and discards the incomplete ones:
 
-1. write the folded state to ``epoch=<base>.new`` (parquet emits
-   _SUCCESS last, so a torn write is self-identifying);
-2. COMMIT via :func:`_land`: delete every epoch dir with id <= base,
-   then rename ``epoch=<base>.new`` -> ``epoch=<base>``.
+- before the staging's ``_SUCCESS``: discarded; every source epoch is
+  intact (nothing was deleted yet);
+- mid-delete, or inside ``_recover_dir``: the complete staging is
+  authoritative for every epoch it lists, so resume deletes whatever
+  of them survives and swaps it in — a partial delete can never let
+  the next compaction recompute from the survivors (silent loss), nor
+  a stale staging be landed later over newer state (double count).
 
-The fold always covers the full prefix of committed epochs up to
-``base`` (``_epochs`` is sorted and the fold takes a prefix), so a
-COMPLETE aside is authoritative for everything <= base. That makes
-every crash point converge under :func:`_resume_pending`:
-
-- crash before the aside's _SUCCESS: the torn ``.new`` is deleted on
-  resume; all source epochs are intact (nothing was deleted yet).
-- crash anywhere inside :func:`_land` (mid-delete, including before
-  the old ``epoch=<base>`` dir itself is removed): resume re-runs
-  _land — it deletes whatever sources <= base survive (target dir
-  included) and renames the complete aside in. Unlike the pre-r10
-  protocol, resume does NOT skip when the target still exists, so a
-  partial delete can never cause the next compaction to recompute
-  from surviving epochs and clobber the aside (silent loss), nor can
-  a stale complete aside be resurrected later to double-count.
-
-Serves during the commit window transiently UNDERCOUNT (an epoch dir
-disappears before the base lands) — never double-count, because the
-base only becomes visible after everything it covers is gone. The
-base reuses the HIGHEST folded epoch id: stream epoch ids only grow
-(checkpointed), and batch ids at or below the base are by definition
-committed, so no replay can target it.
-
-Only compact epochs the stream's checkpoint has committed, from a
-SINGLE maintenance actor — i.e. run this from the maintenance side,
-not inside foreachBatch (see :func:`maybe_compact` for the cadence
-hook the streams call).
+Serves in the landing window transiently UNDERCOUNT (a folded epoch
+disappears before the base lands), never double-count. The base
+reuses the HIGHEST folded epoch id: stream epoch ids only grow
+(checkpointed), and batch ids at or below the base are committed, so
+no replay can target it. Compact only epochs the stream's checkpoint
+has committed, from a SINGLE maintenance actor (see
+:func:`maybe_compact` for the cadence hook the streams call).
 """
 
 from __future__ import annotations
@@ -52,53 +46,63 @@ import os
 
 from pyspark.sql import functions as F
 
-from nerd_spark.streaming.hh_stream import _epochs
+from nerd_spark.sources import fsutil
+from nerd_spark.sources.layout import _recover_dir, _stage_dir, read_summary_meta
 
 
-def _land(spark, state_dir: str, base: int) -> None:
-    """Commit a COMPLETE ``epoch=<base>.new``: delete every epoch dir
-    with id <= base (the fold covered that full committed prefix),
-    then rename the aside in. Idempotent — safe to re-run from any
-    crash point inside itself."""
-    from nerd_spark.sources import fsutil
+def _epochs(spark, root: str) -> list[int]:
+    """Committed epoch ids under ``root``, sorted: ``epoch=N`` dirs
+    holding ``_SUCCESS``. A staging sibling or a dir without the
+    marker is never listed. Listed through the Hadoop FS API
+    (sources/fsutil.py), so non-local roots (hdfs://, s3a://) work."""
+    out = []
+    for name in fsutil.list_names(spark, root):
+        if name.startswith("epoch="):
+            try:
+                e = int(name.split("=", 1)[1])
+            except ValueError:
+                continue
+            if fsutil.exists(spark, os.path.join(root, name, "_SUCCESS")):
+                out.append(e)
+    return sorted(out)
 
+
+def read_epochs(spark, root: str, eps: list[int] | None = None):
+    """The rows of the committed epochs ``eps`` (default: all) under
+    ``root``, or None when there are none."""
+    eps = _epochs(spark, root) if eps is None else eps
+    if not eps:
+        return None
+    paths = [os.path.join(root, f"epoch={e}") for e in eps]
+    return spark.read.option("basePath", root).parquet(*paths).drop("epoch")
+
+
+def _land(spark, staging: str) -> None:
+    """Land one ``epoch=N.staging`` dir: a complete one first deletes
+    the epoch dirs its meta lists as folded, then replaces ``epoch=N``
+    (:func:`_recover_dir`); an incomplete one is discarded."""
+    path = staging[: -len(".staging")]
+    if fsutil.exists(spark, os.path.join(staging, "_SUCCESS")):
+        root = os.path.dirname(path)
+        for e in (read_summary_meta(spark, staging) or {}).get("folded", []):
+            fsutil.delete(spark, os.path.join(root, f"epoch={e}"), recursive=True)
+    _recover_dir(spark, path)
+
+
+def _resume(spark, state_dir: str) -> None:
+    """Converge every commit a crash left under ``state_dir``."""
     for name in fsutil.list_names(spark, state_dir):
-        if not name.startswith("epoch=") or name.endswith(".new"):
-            continue
-        try:
-            e = int(name.split("=", 1)[1])
-        except ValueError:
-            continue
-        if e <= base:
-            fsutil.delete(
-                spark, os.path.join(state_dir, name), recursive=True
-            )
-    src = os.path.join(state_dir, f"epoch={base}.new")
-    if not fsutil.rename(spark, src, os.path.join(state_dir, f"epoch={base}")):
-        raise IOError(f"_land: failed to swap in {src}")
+        if name.startswith("epoch=") and name.endswith(".staging"):
+            _land(spark, os.path.join(state_dir, name))
 
 
-def _resume_pending(spark, state_dir: str) -> None:
-    """Converge any crashed compaction: a COMPLETE (_SUCCESS-bearing)
-    ``epoch=<n>.new`` is the committed state for everything <= n —
-    land it unconditionally (even if the target dir still exists: a
-    crash mid-delete leaves sources the aside supersedes). A torn
-    ``.new`` (no _SUCCESS) was never committed and its sources are
-    intact — delete it so it can never linger or be half-trusted."""
-    from nerd_spark.sources import fsutil
-
-    for name in sorted(fsutil.list_names(spark, state_dir)):
-        if not name.endswith(".new") or not name.startswith("epoch="):
-            continue
-        src = os.path.join(state_dir, name)
-        try:
-            base = int(name[len("epoch=") : -len(".new")])
-        except ValueError:
-            continue
-        if fsutil.exists(spark, os.path.join(src, "_SUCCESS")):
-            _land(spark, state_dir, base)
-        else:
-            fsutil.delete(spark, src, recursive=True)
+def commit_fold(spark, state_dir: str, folded: list[int], rows) -> None:
+    """Commit ``rows`` as the base epoch of the committed epochs
+    ``folded`` (a prefix, ascending): staged with the folded ids in
+    its meta, then landed."""
+    base = os.path.join(state_dir, f"epoch={folded[-1]}")
+    _stage_dir(spark, rows, base, {"folded": folded}, one_file=False)
+    _land(spark, base + ".staging")
 
 
 def compact_epochs(
@@ -109,39 +113,27 @@ def compact_epochs(
 ) -> int:
     """Fold committed epochs into one base epoch; returns how many
     source epochs were folded (0 = nothing to do). ``count_col`` is
-    the additive column (hh state: ``tf``; quantile state: ``cnt``);
-    every other column is part of the key. ``count_col=None`` marks
-    ROW-SET state (the dedup index's band/shingle tables — epochs are
-    disjoint row sets, replays overwrite whole epochs): the fold is a
-    pure re-layout union, shrinking directory/file counts without an
-    aggregation. ``keep_recent`` leaves the newest N epochs unfolded
-    (cheap incremental serves often touch only recent epochs; from a
+    the additive column (hh state: ``tf``); every other column is part
+    of the key. ``count_col=None`` marks ROW-SET state (the dedup
+    index's band/shingle tables — epochs are disjoint row sets,
+    replays rewrite whole epochs): the fold is a pure re-layout union,
+    shrinking directory/file counts without an aggregation.
+    ``keep_recent`` leaves the newest N epochs unfolded (from a
     foreachBatch maintenance hook it must cover the replay window —
     the in-flight epoch is the only one at-least-once can rewrite)."""
-    from nerd_spark.sources import fsutil
-
     if not fsutil.exists(spark, state_dir):
         return 0
-    _resume_pending(spark, state_dir)
+    _resume(spark, state_dir)
     eps = _epochs(spark, state_dir)
     if keep_recent:
-        eps = eps[: -keep_recent or None]
+        eps = eps[:-keep_recent]
     if len(eps) < 2:
         return 0
-    base = eps[-1]
-    paths = [os.path.join(state_dir, f"epoch={e}") for e in eps]
-    pairs = (
-        spark.read.option("basePath", state_dir).parquet(*paths).drop("epoch")
-    )
-    if count_col is None:
-        merged = pairs
-    else:
-        keys = [c for c in pairs.columns if c != count_col]
-        merged = pairs.groupBy(*keys).agg(F.sum(count_col).alias(count_col))
-    merged.write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"epoch={base}.new")
-    )
-    _land(spark, state_dir, base)
+    rows = read_epochs(spark, state_dir, eps)
+    if count_col is not None:
+        keys = [c for c in rows.columns if c != count_col]
+        rows = rows.groupBy(*keys).agg(F.sum(count_col).alias(count_col))
+    commit_fold(spark, state_dir, eps, rows)
     return len(eps)
 
 
@@ -155,14 +147,12 @@ def maybe_compact(
     """Cadence hook for automatic maintenance: fold only once the
     committed-epoch count passes ``max_epochs``, keeping the newest
     ``keep_recent`` unfolded (they cover any in-flight replay window).
-    Cheap when below the bound — one directory listing, no Spark job —
+    Cheap when below the bound — directory listings, no Spark job —
     so streams can call it every batch from their maintenance side.
     Returns the number of epochs folded (0 = below bound/no-op)."""
-    from nerd_spark.sources import fsutil
-
     if not fsutil.exists(spark, state_dir):
         return 0
-    _resume_pending(spark, state_dir)
+    _resume(spark, state_dir)
     if len(_epochs(spark, state_dir)) <= max_epochs:
         return 0
     return compact_epochs(

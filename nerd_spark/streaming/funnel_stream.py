@@ -22,13 +22,13 @@ window) — and WITHIN that contract a bounded exact state exists:
   drop), and prefix events at unresolved stages are dead weight (a
   stage-(j+1) prefix event has ts < W <= any future t_j', so it can
   never qualify). The prefix therefore reduces to k scalars.
-- Compaction folds a PREFIX of epochs (streaming/epochs.py's
-  crash-safe write-aside protocol): events below the fold watermark
-  resolve into per-user frozen scalars, events at or above it stay
-  as rows. Rows in NEWER (unfolded) epochs are always >= the fold
-  watermark — acceptance watermarks are monotone over epochs and the
-  fold is a prefix — so the freeze argument's "prefix holds ALL
-  events < W" premise is structural, not assumed.
+- Compaction folds a PREFIX of epochs (committed by the staged rule
+  of streaming/epochs.py, as every epoch write is): events below the
+  fold watermark resolve into per-user frozen scalars, events at or
+  above it stay as rows. Rows in NEWER (unfolded) epochs are always
+  >= the fold watermark — acceptance watermarks are monotone over
+  epochs and the fold is a prefix — so the freeze argument's "prefix
+  holds ALL events < W" premise is structural, not assumed.
 
 State size per user: k frozen scalars + distinct stage-typed events
 within the lateness horizon — the bounded exact state the
@@ -52,17 +52,8 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
-from nerd_spark.streaming.hh_stream import _epochs
-
-
-def _read_state(spark, state_dir: str):
-    eps = _epochs(spark, state_dir)
-    if not eps:
-        return None
-    paths = [os.path.join(state_dir, f"epoch={e}") for e in eps]
-    return (
-        spark.read.option("basePath", state_dir).parquet(*paths).drop("epoch")
-    )
+from nerd_spark.sources.layout import _commit_dir
+from nerd_spark.streaming.epochs import _epochs, _resume, commit_fold, read_epochs
 
 
 def _high_water(spark, state_dir: str, before_epoch: int | None = None):
@@ -75,12 +66,9 @@ def _high_water(spark, state_dir: str, before_epoch: int | None = None):
     eps = _epochs(spark, state_dir)
     if before_epoch is not None:
         eps = [e for e in eps if e < before_epoch]
-    if not eps:
+    st = read_epochs(spark, state_dir, eps)
+    if st is None:
         return None
-    paths = [os.path.join(state_dir, f"epoch={e}") for e in eps]
-    st = (
-        spark.read.option("basePath", state_dir).parquet(*paths).drop("epoch")
-    )
     return st.filter(F.col("kind") == "w").agg(F.max("ts")).first()[0]
 
 
@@ -136,8 +124,11 @@ def process_batch(
         F.lit(None).cast("string").alias("et"),
         F.lit(None).cast("array<timestamp>").alias("tvals"),
     )
-    rows.unionByName(wrow).write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"epoch={epoch_id}")
+    _commit_dir(
+        spark,
+        rows.unionByName(wrow),
+        os.path.join(state_dir, f"epoch={epoch_id}"),
+        one_file=False,
     )
 
 
@@ -198,7 +189,7 @@ def current_funnel(
     (stage_idx, stage, users, rate) contract as the batch operator."""
     from nerd_spark.operators.funnels import funnel_rows_from_times
 
-    st = _read_state(spark, state_dir)
+    st = read_epochs(spark, state_dir)
     if st is None:
         return spark.createDataFrame(
             [],
@@ -217,20 +208,14 @@ def compact(
     """Fold all but the ``keep_recent`` newest epochs into one base
     epoch, freezing the pre-watermark prefix into per-user scalars and
     keeping only in-horizon event rows — the funnel-shaped analog of
-    epochs.compact_epochs, committed through the same crash-safe
-    write-aside protocol (epochs._land / _resume_pending)."""
-    from nerd_spark.streaming.epochs import _land, _resume_pending
-
-    _resume_pending(spark, state_dir)
+    epochs.compact_epochs, committed the same way
+    (epochs.commit_fold)."""
+    _resume(spark, state_dir)
     eps = _epochs(spark, state_dir)
     if len(eps) <= max(keep_recent, 1):
         return False
-    fold = eps[: len(eps) - keep_recent] if keep_recent > 0 else eps
-    base = fold[-1]
-    paths = [os.path.join(state_dir, f"epoch={e}") for e in fold]
-    st = (
-        spark.read.option("basePath", state_dir).parquet(*paths).drop("epoch")
-    )
+    fold = eps[: len(eps) - keep_recent]
+    st = read_epochs(spark, state_dir, fold)
     hw = st.filter(F.col("kind") == "w").agg(F.max("ts")).first()[0]
     if hw is None:
         return False
@@ -265,11 +250,10 @@ def compact(
         F.lit(None).cast("string").alias("et"),
         F.lit(None).cast("array<timestamp>").alias("tvals"),
     )
-    folded = frozen_rows.unionByName(survivors).unionByName(wrow)
-    folded.write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"epoch={base}.new")
+    commit_fold(
+        spark, state_dir, fold,
+        frozen_rows.unionByName(survivors).unionByName(wrow),
     )
-    _land(spark, state_dir, base)
     return True
 
 

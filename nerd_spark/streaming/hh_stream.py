@@ -6,12 +6,13 @@ epoch (the streaming/dedup_stream.py pattern): each batch compacts its
 own text to per-batch exact (term, tf) pairs — the same text-level
 counting kernel the batch hh_terms query uses
 (operators/sketches.py::_terms_count_fn), so no token row is ever
-materialized — and writes them to ``<state>/epoch=N`` with
-mode=overwrite. At-least-once replay of an epoch rewrites exactly the
-same pairs into the same directory (the kernel is deterministic and
-reads nothing but the batch), so the state is idempotent with no
-read-exclusion protocol at all — simpler than the dedup index because
-batches never interact at write time.
+materialized — and commits them as ``<state>/epoch=N``. At-least-once
+replay of an epoch rewrites exactly the same pairs into the same
+directory (the kernel is deterministic and reads nothing but the
+batch), so the state is idempotent with no read-exclusion protocol
+at all — simpler than the dedup index because batches never interact
+at write time. The write commits staged (streaming/epochs.py): a
+replay that fails leaves the epoch it would have rewritten in place.
 
 The SERVING query (current_heavy_hitters) unions all committed
 epochs, sums per term, and applies the exact cnt >= phi*N filter —
@@ -19,7 +20,7 @@ cumulative results equal the one-shot batch hh_terms over everything
 ingested so far (test-pinned). State size is epochs x per-batch
 vocabulary, compacted per batch; streaming/epochs.py::compact_epochs
 is the periodic base-epoch roll-up that bounds the union width at
-long horizons (crash-safe write-aside; serve equality test-pinned).
+long horizons (serve equality test-pinned).
 """
 
 from __future__ import annotations
@@ -29,27 +30,8 @@ import os
 from pyspark.sql import DataFrame, functions as F
 
 from nerd_spark.operators.sketches import _terms_count_fn
-
-
-def _epochs(spark, root: str) -> list[int]:
-    """Committed epochs only: an epoch dir counts once its parquet
-    commit marker (_SUCCESS) exists. A crashed or concurrently-writing
-    batch leaves a partial dir with no marker; serving must not union
-    it (the idempotence argument covers full replays, not
-    serve-during-write — r8 advice). Replay of a partial epoch
-    overwrites the dir and lands the marker, at which point it serves."""
-    from nerd_spark.sources import fsutil
-
-    out = []
-    for name in fsutil.list_names(spark, root):
-        if name.startswith("epoch="):
-            try:
-                e = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if fsutil.exists(spark, os.path.join(root, name, "_SUCCESS")):
-                out.append(e)
-    return sorted(out)
+from nerd_spark.sources.layout import _commit_dir
+from nerd_spark.streaming.epochs import _epochs, read_epochs
 
 
 def process_batch(
@@ -71,8 +53,9 @@ def process_batch(
         .groupBy(F.col("k").alias("term"))
         .agg(F.sum("tf").alias("tf"))
     )
-    pairs.write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"epoch={epoch_id}")
+    _commit_dir(
+        spark, pairs, os.path.join(state_dir, f"epoch={epoch_id}"),
+        one_file=False,
     )
 
 
@@ -81,11 +64,9 @@ def current_heavy_hitters(
 ) -> DataFrame:
     """Exact heavy hitters over everything ingested so far — the same
     (term, cnt, share) contract as the batch hh_terms query."""
-    eps = _epochs(spark, state_dir)
-    if not eps:
+    pairs = read_epochs(spark, state_dir)
+    if pairs is None:
         return spark.createDataFrame([], "term string, cnt long, share double")
-    paths = [os.path.join(state_dir, f"epoch={e}") for e in eps]
-    pairs = spark.read.option("basePath", state_dir).parquet(*paths).drop("epoch")
     counts = pairs.groupBy("term").agg(F.sum("tf").alias("cnt"))
     totals = pairs.groupBy().agg(F.sum("tf").alias("n"))
     return (

@@ -26,11 +26,12 @@ batch==stream test pins):
    nru += (floor((now - nru)/step) + 1) * step.
 
 State is the schedule table itself (the entity-table pattern —
-O(entities) rows of 4 longs, no state store). Every write is keyed
-to the tick's own ``epoch=N`` subdirectory and a tick reads only
-epochs < N, so an at-least-once foreachBatch replay of tick N sees
-exactly the pre-tick state and overwrites its own output — the same
-replay-safety scheme as streaming/dedup_stream.py. At scale the
+O(entities) rows of 4 longs, no state store). Every write commits
+the tick's own ``epoch=N`` subdirectory (the staged rule of
+streaming/epochs.py) and a tick reads only committed epochs < N, so
+an at-least-once foreachBatch replay of tick N sees exactly the
+pre-tick state and replaces its own output — the same replay-safety
+scheme as streaming/dedup_stream.py. At scale the
 schedule table shuffles on entity once per tick (a broadcast-sized
 frame next to the events it schedules); the due scan is a filter +
 sort-limit on that same frame.
@@ -43,28 +44,21 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nerd_spark.sources.layout import _commit_dir
+from nerd_spark.streaming.epochs import _epochs
+
 STEP_SECS = 86400
 
 _SCHED_SCHEMA = "entity long, added long, last_act long, nru long"
 
 
-def _latest_epoch(spark, path: str, below: int) -> int | None:
-    # Hadoop-FS listing (sources/fsutil.py), not os.listdir: state
-    # paths may live on any scheme (file://, hdfs://, s3a://) and a
-    # driver-local probe would silently see an empty dir there,
-    # rewinding the schedule with no error.
-    from nerd_spark.sources import fsutil
-
-    found = []
-    for d in fsutil.list_names(spark, path):
-        if d.startswith("epoch="):
-            try:
-                e = int(d.split("=", 1)[1])
-            except ValueError:
-                continue
-            if e < below:
-                found.append(e)
-    return max(found) if found else None
+def _schedule(spark, sched_path: str, below: int | None = None) -> DataFrame:
+    """The latest committed schedule epoch (below ``below``, if
+    given), or an empty schedule."""
+    eps = [e for e in _epochs(spark, sched_path) if below is None or e < below]
+    if not eps:
+        return spark.createDataFrame([], _SCHED_SCHEMA)
+    return spark.read.parquet(os.path.join(sched_path, f"epoch={eps[-1]}"))
 
 
 def apply_nru_tick(
@@ -87,14 +81,9 @@ def apply_nru_tick(
     if now_e is None:  # empty batch: nothing due, state unchanged
         return
 
-    prev = _latest_epoch(spark, sched_path, below=epoch_id)
-    if prev is not None:
-        st = spark.read.parquet(os.path.join(sched_path, f"epoch={prev}"))
-    else:
-        st = spark.createDataFrame([], _SCHED_SCHEMA)
-
     merged = (
-        st.join(b, "entity", "full")
+        _schedule(spark, sched_path, below=epoch_id)
+        .join(b, "entity", "full")
         .select(
             "entity",
             F.coalesce(F.least("added", "b_added"), "added", "b_added").alias(
@@ -125,8 +114,10 @@ def apply_nru_tick(
         ),
     )
     # Emit THIS tick's due set before mutating state (replay order),
-    # overwriting the epoch's own subdir so a replay never doubles it.
-    due.write.mode("overwrite").parquet(os.path.join(due_path, f"epoch={epoch_id}"))
+    # committing the epoch's own subdir so a replay never doubles it.
+    _commit_dir(
+        spark, due, os.path.join(due_path, f"epoch={epoch_id}"), one_file=False
+    )
 
     advanced = merged.select(
         "entity",
@@ -140,8 +131,11 @@ def apply_nru_tick(
         .otherwise(F.col("nru"))
         .alias("nru"),
     )
-    advanced.write.mode("overwrite").parquet(
-        os.path.join(sched_path, f"epoch={epoch_id}")
+    _commit_dir(
+        spark,
+        advanced,
+        os.path.join(sched_path, f"epoch={epoch_id}"),
+        one_file=False,
     )
 
 
@@ -171,7 +165,4 @@ def stream_nru(
 
 def read_schedule(spark, sched_path: str) -> DataFrame:
     """Current schedule table = the latest committed epoch."""
-    latest = _latest_epoch(spark, sched_path, below=1 << 62)
-    if latest is None:
-        return spark.createDataFrame([], _SCHED_SCHEMA)
-    return spark.read.parquet(os.path.join(sched_path, f"epoch={latest}"))
+    return _schedule(spark, sched_path)

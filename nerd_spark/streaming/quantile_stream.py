@@ -1,30 +1,28 @@
-"""Continuous EXACT quantile tracking: per-epoch value-histogram
-state over Structured Streaming.
+"""Continuous EXACT quantile tracking over Structured Streaming: a
+thin shell over the value-histogram serve table's fold.
 
-State is one parquet table laid out as a subdirectory per micro-batch
-epoch (the hh_stream/dedup_stream pattern): each batch compacts
-itself to exact (g, v, cnt) value counts — the same histogram
-reduction the batch quantile operator's bounded-domain path runs
-(operators/sketches.py::_hist_quantiles) — and writes them to
-``<state>/epoch=N`` with mode=overwrite. The kernel is deterministic
-and reads nothing but the batch, so at-least-once replay of an epoch
-rewrites identical pairs into the same directory: idempotent state,
-and serving unions only COMMITTED epochs (_SUCCESS-gated, the r8
-serve-during-write fix shared via hh_stream._epochs).
+Each micro-batch is one :func:`~nerd_spark.sources.layout._fold` of
+the quantile family's histogram state and merge (``_value_hist_spec``:
+exact (et, v, cnt) value counts per value bucket ``wb``, summed on
+merge — the same histogram the batch quantile operator's
+bounded-domain path reduces to, operators/sketches.py::
+_hist_quantiles) into the stream's own state dir, with the staged
+commit, torn-commit recovery and batch ledger every fold has. The
+batch id is ``epoch=<epoch_id>``, so the ledger skips a replayed
+epoch: the additive fold is applied once per epoch.
 
 Unlike sketch state (GK summaries), histograms ADD exactly across
-epochs — there is no merge error at any point, so the cumulative
+batches — there is no merge error at any point, so the cumulative
 serving result equals the one-shot batch ``exact_quantiles_by`` over
 everything ingested so far (test- and oracle-pinned). State size is
-epochs x per-batch distinct values: vocabulary-like for the bounded
-value domains the histogram path targets, with streaming/epochs.py::
-compact_epochs (crash-safe base-epoch roll-up, serve equality
-test-pinned) bounding the union width at long horizons. For
-truly continuous values a per-epoch histogram approaches batch size —
-that is the price of exactness; the batch operator's GK bracket path
-is the right tool for a one-shot answer there, and a streaming serve
-would hold a GK sketch per epoch instead (documented trade, not
-implemented: every registered value domain is bounded).
+the distinct (type, value) pairs ingested, rewritten only in the
+value buckets a batch touches: vocabulary-like for the bounded value
+domains the histogram path targets. For truly continuous values the
+histogram approaches the data size — that is the price of exactness;
+the batch operator's GK bracket path is the right tool for a one-shot
+answer there, and a streaming serve would hold a GK sketch instead
+(documented trade, not implemented: every registered value domain is
+bounded).
 """
 
 from __future__ import annotations
@@ -34,7 +32,8 @@ import os
 from pyspark.sql import DataFrame, functions as F
 
 from nerd_spark.operators.sketches import _hist_quantiles
-from nerd_spark.streaming.hh_stream import _epochs
+from nerd_spark.sources import fsutil
+from nerd_spark.sources.layout import _fold, _value_hist_spec
 
 
 def process_batch(
@@ -45,19 +44,15 @@ def process_batch(
     key_col: str = "event_type",
     col: str = "value",
 ) -> None:
-    """Absorb one arriving batch: exact per-batch (g, v, cnt) counts,
-    batch-compacted, written to the batch's own epoch directory."""
-    if epoch_id is None:
-        known = _epochs(spark, state_dir)
-        epoch_id = (known[-1] + 1) if known else 0
-    pairs = (
-        batch.select(F.col(key_col).alias("g"), F.col(col).alias("v"))
-        .filter(F.col("v").isNotNull())
-        .groupBy("g", "v")
-        .agg(F.count("*").alias("cnt"))
-    )
-    pairs.write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"epoch={epoch_id}")
+    """Fold one arriving batch's exact (``key_col``, ``col``) value
+    counts into the histogram at ``state_dir``. ``epoch_id`` keys the
+    fold's batch ledger (a replayed epoch is skipped); None folds
+    unledgered."""
+    _fold(
+        spark,
+        _value_hist_spec(spark, state_dir, key_col, col).at(state_dir),
+        batch,
+        None if epoch_id is None else f"epoch={epoch_id}",
     )
 
 
@@ -70,23 +65,21 @@ def current_quantiles(
 ) -> DataFrame:
     """Exact per-group quantiles over everything ingested so far —
     the same (key, p, value) contract as the batch
-    ``exact_quantiles_by``: epoch histograms re-summed per (g, v),
-    then the cumulative-sum quantile_disc selector.
+    ``exact_quantiles_by``: the cumulative-sum quantile_disc selector
+    over the committed histogram.
 
-    The value column carries the SOURCE type (the batch contract
-    preserves it through the state parquet). With zero committed
-    epochs there is no state schema to derive it from, so the empty
-    frame uses ``value_type`` (default double) — callers tracking a
-    non-double measure should pass their type to keep the schema
-    stable across the empty boundary (r9 advice)."""
-    eps = _epochs(spark, state_dir)
-    if not eps:
+    The value column carries the SOURCE type (the histogram parquet
+    preserves it). Without committed state there is no schema to
+    derive it from, so the empty frame uses ``value_type`` (default
+    double) — callers tracking a non-double measure should pass their
+    type to keep the schema stable across the empty boundary."""
+    if not fsutil.exists(spark, os.path.join(state_dir, "_SUCCESS")):
         return spark.createDataFrame(
             [], f"{key_col} string, p double, value {value_type}"
         )
-    paths = [os.path.join(state_dir, f"epoch={e}") for e in eps]
-    pairs = spark.read.option("basePath", state_dir).parquet(*paths).drop("epoch")
-    hist = pairs.groupBy("g", "v").agg(F.sum("cnt").alias("cnt"))
+    hist = spark.read.parquet(state_dir).select(
+        F.col("et").alias("g"), "v", "cnt"
+    )
     return _hist_quantiles(hist, probs).select(
         F.col("g").alias(key_col), "p", "value"
     )
@@ -99,21 +92,14 @@ def stream_quantiles(
     checkpoint_dir: str,
     key_col: str = "event_type",
     col: str = "value",
-    compact_after: int | None = 16,
 ):
-    """Wire :func:`process_batch` as a foreachBatch sink, with the
-    automatic base-epoch roll-up past ``compact_after`` committed
-    epochs (keep_recent=2 covers the at-least-once replay window;
-    ``None`` disables)."""
-    from nerd_spark.streaming.epochs import maybe_compact
+    """Wire :func:`process_batch` as a foreachBatch sink."""
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         process_batch(
             spark, batch_df, state_dir,
             epoch_id=epoch_id, key_col=key_col, col=col,
         )
-        if compact_after is not None:
-            maybe_compact(spark, state_dir, "cnt", max_epochs=compact_after)
 
     return (
         events_stream.writeStream.foreachBatch(sink)

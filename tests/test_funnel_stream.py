@@ -10,7 +10,8 @@ Pins the contracts the module docstring's freeze argument rests on:
 - replaying an epoch (same id, same batch) is a no-op;
 - compaction (prefix freeze into scalars + in-horizon row survivors)
   never moves the serve, and the fold actually prunes;
-- a torn compaction aside never serves (epochs protocol reuse).
+- a compaction torn at any commit op converges on the next call and
+  never over-counts in between (the staged rule of streaming/epochs.py).
 """
 
 from __future__ import annotations
@@ -147,17 +148,36 @@ def test_compaction_preserves_serve_and_prunes(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_torn_compaction_aside_never_serves(spark, tmp_path):
-    d = str(tmp_path / "state")
-    _many_batches(spark, d, n=4)
-    before = _serve(spark, d)
-    # plant a torn aside (no _SUCCESS): serving ignores it and the
-    # next compact sweeps it
-    torn = os.path.join(d, "epoch=1.new")
-    os.makedirs(torn)
-    with open(os.path.join(torn, "part-0.parquet"), "w") as f:
-        f.write("garbage")
-    assert _serve(spark, d) == before
-    assert compact(spark, d, STAGES, keep_recent=2)
-    assert not os.path.exists(torn)
-    assert _serve(spark, d) == before
+def test_compact_tear_sweep(spark, tmp_path, tear_sweep):
+    """Tear compact at every mutating FS op of its commit (staging
+    meta and marker, each folded epoch's delete, the landing's live
+    delete and rename). Right after the tear no stage count exceeds the
+    committed answer (a folded epoch may be gone before the base
+    lands — an undercount — and a torn staging never serves); the
+    next compact converges: the serve unchanged, no staging left."""
+    import shutil
+
+    from nerd_spark.streaming.epochs import _epochs
+
+    seed = str(tmp_path / "seed")
+    _many_batches(spark, seed, n=4)
+    before = _serve(spark, seed)
+
+    def setup(tag):
+        d = str(tmp_path / tag)
+        shutil.copytree(seed, d)
+        return {"d": d, "calls": 0}
+
+    def fold(h):
+        h["calls"] += 1
+        if h["calls"] == 2:  # the replay after a tear
+            seen = _serve(spark, h["d"])
+            assert all(seen.get(k, 0) <= v for k, v in before.items())
+        compact(spark, h["d"], STAGES, keep_recent=2)
+
+    def check(h, label):
+        assert _serve(spark, h["d"]) == before, label
+        assert _epochs(spark, h["d"]) == [1, 2, 3], label
+        assert not [n for n in os.listdir(h["d"]) if ".staging" in n], label
+
+    tear_sweep(setup, fold, check, min_ops=6)

@@ -71,7 +71,7 @@ def test_partial_epoch_invisible_until_committed(spark, sf_dir):
     marker) makes it visible (r8 advice)."""
     import shutil
 
-    from nerd_spark.streaming.hh_stream import _epochs
+    from nerd_spark.streaming.epochs import _epochs
 
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     base = tempfile.mkdtemp(prefix="nerd_hh_partial_")

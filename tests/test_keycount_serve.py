@@ -381,3 +381,41 @@ def test_asof_anchor_loss_recomputes_from_events(spark, tmp_path):
     anchor = spark.read.parquet(asof_p).first()[0]
     true_max = ev.agg(F.max("ts")).first()[0]
     assert anchor == true_max, f"anchor regressed: {anchor} < {true_max}"
+
+
+def test_torn_metaless_rebuild_keeps_history(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A meta-less state dir is rebuilt from the events table, and the
+    rebuild's commit replaces the whole table. A tear before its
+    commit point (the manifest write) must leave the old partitions in
+    place: were they cleared first, the replay would find no state,
+    pass the binding check as a fresh table and fold the batch alone
+    — all history lost under a fresh gate."""
+    import shutil
+
+    from nerd_spark.sources.layout import SUMMARY_META_NAME
+
+    d = str(tmp_path / "data")
+    os.makedirs(d)
+    shutil.copy(os.path.join(sf_dir, "events.parquet"), d)
+    ev = spark.read.parquet(os.path.join(d, "events.parquet"))
+    n = ev.count()
+    update_keycount_summaries(spark, d, ev, batch_id="b0")
+    pair = os.path.join(d, SUMMARY_TYPE_USER_DIRNAME)
+    os.remove(os.path.join(pair, SUMMARY_META_NAME))
+
+    # the batch is already in the events table (append-first contract)
+    batch = ev.orderBy("event_id").limit(5)
+    real = fsutil.write_text_atomic
+
+    def torn(*a, **kw):
+        raise OSError("torn rebuild")
+
+    monkeypatch.setattr(fsutil, "write_text_atomic", torn)
+    with pytest.raises(OSError):
+        update_keycount_summaries(spark, d, batch, batch_id="b1")
+    monkeypatch.setattr(fsutil, "write_text_atomic", real)
+    update_keycount_summaries(spark, d, batch, batch_id="b1")
+    total = spark.read.parquet(pair).agg(F.sum("cnt")).first()[0]
+    assert total == n

@@ -1,17 +1,22 @@
 """Streaming exact quantiles == one-shot batch exact_quantiles_by.
 
-Events arrive as 3 micro-batches; each epoch writes its own exact
-value-histogram compaction. The cumulative serving query must equal
-the batch operator over the whole set, replaying an epoch
-(foreachBatch at-least-once) must change nothing, and a torn epoch
-(no _SUCCESS) must be invisible until committed."""
+Events arrive as 3 micro-batches, each one fold of the exact value
+histogram (sources/layout.py::_fold over the value-hist summary's
+state and merge). The cumulative serving query must equal the batch
+operator over the whole set; replaying an epoch (foreachBatch
+at-least-once), once or twice, is skipped by the fold ledger, so the
+additive histogram never double-counts; a commit torn before its
+commit point leaves the committed state serving, and the replay
+lands the batch once. A random split with a replayed epoch is a
+hypothesis property."""
 
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 
+import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from nerd_spark.operators.sketches import exact_quantiles_by
@@ -32,9 +37,23 @@ def _serve(spark, state):
     }
 
 
-def test_streamed_quantiles_equal_batch_and_replay_idempotent(spark, sf_dir):
-    ev = read_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
+def _want(ev):
+    return {
+        (r.event_type, r.p, r.value)
+        for r in exact_quantiles_by(ev, "event_type", "value", PROBS).collect()
+    }
 
+
+def _events(spark, sf_dir):
+    return read_table(spark, sf_dir, "events").select(
+        "event_id", "event_type", "value"
+    )
+
+
+def test_streamed_quantiles_equal_batch_and_replay_idempotent(
+    spark, sf_dir, monkeypatch
+):
+    ev = _events(spark, sf_dir)
     base = tempfile.mkdtemp(prefix="nerd_q_stream_")
     src = os.path.join(base, "incoming")
     for i in range(3):
@@ -53,24 +72,57 @@ def test_streamed_quantiles_equal_batch_and_replay_idempotent(spark, sf_dir):
     q.awaitTermination(300)
 
     got = _serve(spark, state)
-    want = {
-        (r.event_type, r.p, r.value)
-        for r in exact_quantiles_by(ev, "event_type", "value", PROBS).collect()
-    }
-    assert got == want and len(want) > 0
+    assert got == _want(ev) and len(got) > 0
 
-    # at-least-once replay: re-absorbing epoch 0 rewrites identical
-    # state (deterministic histogram, own-epoch overwrite)
-    process_batch(spark, ev.filter(F.col("event_id") % 3 == 0), state, epoch_id=0)
-    assert _serve(spark, state) == got
+    # at-least-once replay, twice: the ledger skips an epoch it holds
+    part0 = ev.filter(F.col("event_id") % 3 == 0)
+    for _ in range(2):
+        process_batch(spark, part0, state, epoch_id=0)
+        assert _serve(spark, state) == got
 
-    # torn epoch: data files without _SUCCESS are not served
-    e0, e9 = os.path.join(state, "epoch=0"), os.path.join(state, "epoch=9")
-    shutil.copytree(e0, e9)
-    os.remove(os.path.join(e9, "_SUCCESS"))
+    # a commit torn at its manifest write (before the commit point)
+    # leaves the committed histogram serving; the replay, twice, lands
+    # the batch once
+    from nerd_spark.sources import fsutil
+
+    real = fsutil.write_text_atomic
+
+    def torn(*a, **kw):
+        raise OSError("torn manifest")
+
+    monkeypatch.setattr(fsutil, "write_text_atomic", torn)
+    with pytest.raises(OSError):
+        process_batch(spark, part0, state, epoch_id=3)
+    monkeypatch.setattr(fsutil, "write_text_atomic", real)
     assert _serve(spark, state) == got
+    for _ in range(2):
+        process_batch(spark, part0, state, epoch_id=3)
+    assert _serve(spark, state) == _want(ev.unionByName(part0))
 
     # empty state serves an empty, correctly-shaped frame
     empty = current_quantiles(spark, os.path.join(base, "nowhere"), PROBS)
     assert empty.collect() == []
     assert [f.name for f in empty.schema.fields] == ["event_type", "p", "value"]
+
+
+@pytest.mark.slow
+@given(
+    st.lists(st.integers(0, 3), min_size=8, max_size=8),
+    st.integers(0, 3),
+)
+@settings(max_examples=3, deadline=None)
+def test_random_split_with_replay_equals_batch(spark, sf_dir, assign, rep):
+    """A random split of the events into 1-4 batches, one epoch
+    replayed, serves the one-shot batch answer."""
+    ev = _events(spark, sf_dir)
+    state = tempfile.mkdtemp(prefix="nerd_q_prop_")
+    batch_of = F.element_at(
+        F.array(*[F.lit(a) for a in assign]),
+        (F.col("event_id") % len(assign) + 1).cast("int"),
+    )
+    ids = sorted(set(assign))
+    for i in ids:
+        process_batch(spark, ev.filter(batch_of == i), state, epoch_id=i)
+    r = ids[rep % len(ids)]
+    process_batch(spark, ev.filter(batch_of == r), state, epoch_id=r)
+    assert _serve(spark, state) == _want(ev)
