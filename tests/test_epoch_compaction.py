@@ -192,6 +192,107 @@ def test_compact_epochs_tear_sweep(spark, sf_dir, tmp_path, tear_sweep):
     tear_sweep(setup, fold, check, min_ops=7)
 
 
+def _stage_fold(spark, state, eps):
+    """What a compaction stages before its landing: the summed rows
+    of ``eps`` as a complete ``epoch=<eps[-1]>.staging`` listing them
+    as folded."""
+    from nerd_spark.sources.layout import _stage_dir
+
+    rows = read_epochs(spark, state, eps)
+    rows = rows.groupBy("term").agg(F.sum("tf").alias("tf"))
+    _stage_dir(
+        spark, rows, os.path.join(state, f"epoch={eps[-1]}"),
+        {"folded": eps}, one_file=False,
+    )
+
+
+def test_crash_window_resume(spark, sf_dir):
+    """The crash between the source deletes and the swap: a complete
+    staged base with its sources gone must be landed by the next call
+    before anything else — no data loss, serve restored."""
+    import shutil
+
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    base = tempfile.mkdtemp(prefix="nerd_epoch_crash_")
+    state = os.path.join(base, "hh")
+    for i in range(3):
+        hh_stream.process_batch(
+            spark, docs.filter(F.col("doc_id") % 3 == i), state, epoch_id=i
+        )
+    before = _hh_serve(spark, state)
+
+    _stage_fold(spark, state, [0, 1, 2])
+    for e in range(3):
+        shutil.rmtree(os.path.join(state, f"epoch={e}"))
+    # serve in the crash window: transient undercount, never a crash
+    assert _hh_serve(spark, state) == set()
+
+    assert compact_epochs(spark, state, "tf") == 0  # resume only
+    assert _epochs(spark, state) == [2]
+    assert _hh_serve(spark, state) == before
+    assert not _staging_left(state)
+
+    # a TORN staging (no _SUCCESS) is never landed — and is swept away
+    # so it can never linger into a later fold at the same base id
+    state2 = os.path.join(base, "hh2")
+    for i in range(2):
+        hh_stream.process_batch(
+            spark, docs.filter(F.col("doc_id") % 2 == i), state2, epoch_id=i
+        )
+    b2 = _hh_serve(spark, state2)
+    torn = os.path.join(state2, "epoch=5.staging")
+    os.makedirs(torn)
+    open(os.path.join(torn, "part-junk.parquet"), "wb").close()
+    assert compact_epochs(spark, state2, "tf") == 2
+    assert _epochs(spark, state2) == [1]
+    assert not os.path.exists(torn)
+    assert _hh_serve(spark, state2) == b2
+
+
+def test_crash_mid_delete_base_still_present(spark, sf_dir):
+    """A crash inside the delete loop BEFORE the base epoch dir itself
+    is removed. A resume that skipped because the base is present
+    would let the next compaction recompute from the surviving epochs
+    only — silent loss of the already-deleted epochs' counts. Resume
+    must treat the complete staging as authoritative: delete every
+    epoch it lists, land it."""
+    import shutil
+
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    base = tempfile.mkdtemp(prefix="nerd_epoch_middelete_")
+    state = os.path.join(base, "hh")
+    for i in range(4):
+        hh_stream.process_batch(
+            spark, docs.filter(F.col("doc_id") % 4 == i), state, epoch_id=i
+        )
+    before = _hh_serve(spark, state)
+
+    _stage_fold(spark, state, [0, 1, 2, 3])
+    # crash after deleting epochs 0 and 1 only: 2 and the base target
+    # 3 survive alongside the complete staging
+    shutil.rmtree(os.path.join(state, "epoch=0"))
+    shutil.rmtree(os.path.join(state, "epoch=1"))
+
+    assert compact_epochs(spark, state, "tf") == 0  # resume only
+    assert _epochs(spark, state) == [3]
+    assert _hh_serve(spark, state) == before
+    assert not _staging_left(state)
+
+    # and the stale-staging double-count path: new epochs past the
+    # base must keep summing correctly after the converged resume
+    hh_stream.process_batch(
+        spark, docs.filter(F.col("doc_id") % 4 == 0), state, epoch_id=4
+    )
+    from nerd_spark.operators.sketches import heavy_hitter_terms
+
+    doubled = docs.unionByName(docs.filter(F.col("doc_id") % 4 == 0))
+    want = {
+        (r.term, r.cnt, r.share)
+        for r in heavy_hitter_terms(doubled, 0.01).collect()
+    }
+    assert _hh_serve(spark, state) == want
+
+
 def test_failed_land_rename_raises_then_resumes(spark, sf_dir, monkeypatch):
     """Hadoop reports a failed rename by returning false. The landing
     step must raise, not report a fold whose base never landed (the
