@@ -52,11 +52,20 @@ from nerd_spark.queries import streamingq  # noqa: E402,F401
 #    of the r11-latest rows (38 rows — the staleness obligation the
 #    r12 verdict set, completing here);
 # The three r12-latest fill rows (corpus_curation, corpus_curation_v2,
-# dedup_best_of_cluster) left the list for group 0, and the list's
-# 51st row (weighted_sample_topk) falls just past the window. After
-# r14: no row older than r11; the r12 remainder (45 rows) is the next
-# staleness block.
+# dedup_best_of_cluster) left the list for group 0. After r14: no row
+# older than r11; the r12 remainder (45 rows) is the next staleness
+# block. The window fold's six readers (a2_window_served, a2 totals,
+# a3, a5, a6, a7) now head the list ahead of the streams, so its last
+# nine rows (p2_range_predicate .. weighted_sample_topk) fall past the
+# window.
 _WINDOW_PRIORITY = [
+    # the window fold's readers: its one re-derive regime serves these
+    "a2_window_served",
+    "a2_window_totals",
+    "a3_ewma",
+    "a5_type_profile",
+    "a6_source_reputation",
+    "a7_total_reputation",
     # streams whose state or commit moved onto the fold and the staged
     # epoch commit, and the batch queries sharing their fold state
     "streaming_cohort",
@@ -84,7 +93,6 @@ _WINDOW_PRIORITY = [
     "dedup_clusters_scalable",
     "ann_ivf_indexed",
     # 2 -- the r11-latest remainder (staleness bound)
-    "a2_window_totals",
     "a2_window_totals_approx",
     "a6_rep_blacklists",
     "a6_rep_dshield",

@@ -327,7 +327,7 @@ from nerd_spark.queries.base import _REP_DENOM_14, _REP_SQL  # noqa: E402
 
 
 # Default-config reputation values are MATERIALIZED on the window
-# table (sources/layout.py::_with_rep_columns, computed from the same
+# table (sources/layout.py::_window_rows, computed from the same
 # daily vectors by plans/derivations.vector_reputation_columns — the
 # reference likewise stores rep.* on the record, reputation.py:111+),
 # so the a6/a7 serve paths below are plain column reads: zero pow()
@@ -1167,13 +1167,13 @@ def a1_daily_served(spark, sf_dir):
 
 @query("a2_window_served", _A2_SQL)
 def a2_window_served(spark, sf_dir):
-    # Serve-tier certification of the WINDOW fold — the most involved
-    # algebra (additive merge in the no-day-roll regime, full re-age
-    # on day roll, composed behind the daily fold exactly as the
-    # ingest job orders them): per batch, fold daily THEN window, and
-    # answer a2's projection from the folded window table. The
-    # event-id-parity split makes batch two all late data for every
-    # day, exercising the late-arrival path of the merge.
+    # Serve-tier certification of the WINDOW fold (touched buckets
+    # re-derived from the daily summary, only `total` additive,
+    # composed behind the daily fold exactly as the ingest job orders
+    # them): per batch, fold daily THEN window, and answer a2's
+    # projection from the folded window table. The event-id-parity
+    # split makes batch two all late data for every day: a same-day
+    # fold whose buckets re-derive from daily holding both batches.
     import os
     import shutil
     import tempfile

@@ -22,7 +22,7 @@ from dataclasses import dataclass, replace
 from typing import Callable
 
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import SparkSession, functions as F, types as T
+from pyspark.sql import SparkSession, functions as F
 
 from nerd_spark.sources import fsutil
 
@@ -144,15 +144,15 @@ def _EMPTY_MAP():
 _WINDOWS = (1, 7, 30)
 
 # The window table is stored hash-bucketed by entity (partition column
-# wb = pmod(hash(entity), WINDOW_BUCKETS)) so the same-day incremental
-# merge rewrites ONLY the buckets containing batch entities — cost
+# wb = pmod(hash(entity), WINDOW_BUCKETS)) so a fold rewrites ONLY the
+# buckets it re-derives: the batch's, plus on a day-roll those holding
+# entities active in the old anchor's trailing window — cost
 # O(touched buckets), not O(entities). At the 10^8-entity design point
 # this is the difference between ~MB and ~GB written per micro-batch
 # (the reference's write path is likewise O(touched records),
-# NERDd/core/mongodb.py:98-119). The day-roll recompute (once per day)
-# still rewrites every bucket — every row's window ages shift then.
-# Size buckets so one bucket ~ a few hundred MB at the deployed entity
-# count; 32 keeps per-bucket files non-trivial at test scale.
+# NERDd/core/mongodb.py:98-119). Size buckets so one bucket ~ a few
+# hundred MB at the deployed entity count; 32 keeps per-bucket files
+# non-trivial at test scale.
 WINDOW_BUCKETS = 32
 
 
@@ -160,16 +160,15 @@ def _wbucket(col="entity"):
     return F.pmod(F.hash(F.col(col)), F.lit(WINDOW_BUCKETS))
 
 
-def _with_rep_columns(df):
-    """Materialize the default-config reputation columns from the
-    FINAL per-age vectors (after any merge) — applied by every window
-    writer so a6/a7 serve as plain column reads. Row-local, so the
-    cost lands only on rows being (re)written anyway."""
+def _window_rows(df):
+    """The stored rows of window-rollup values: the default-config
+    reputation columns from the final per-age vectors — applied by
+    every window writer so a6/a7 serve as plain column reads — and
+    the ``wb`` bucket, in one projection. Row-local, so the cost
+    lands only on rows being (re)written anyway."""
     from nerd_spark.plans.derivations import vector_reputation_columns
 
-    for name, col in vector_reputation_columns().items():
-        df = df.withColumn(name, col)
-    return df
+    return df.withColumns(dict(vector_reputation_columns(), wb=_wbucket()))
 
 # per-age daily vectors kept in the window table: ages 0.._VEC_DAYS-1
 # relative to as_of_d. This is the reference's own per-IP daily-bucket
@@ -187,10 +186,11 @@ def window_rollup(daily, as_of_d_df):
     precomputed answer to A2/A3/A6/A7, stored so the per-entity
     shuffle over (entities x days x cats) summary rows happens at
     INGEST time once, not on every query. The category sets (bounded
-    by the category vocabulary, not data) and the fixed-width daily
-    vectors are stored rather than derived numbers so the no-day-roll
-    incremental merge below stays exact: sets union, vectors add
-    element-wise."""
+    by the category vocabulary, not data), the fixed-width daily
+    vectors and the per-category map are stored rather than derived
+    numbers because the serve reads them: A5 reads the map, A3/A6/A7
+    the vectors. The fold re-derives them from the daily summary,
+    never merges them."""
     dwa = daily.crossJoin(F.broadcast(as_of_d_df))
     age = F.datediff(F.col("as_of_d"), F.col("d"))
     aggs = [F.sum("n").cast("long").alias("total")]
@@ -224,8 +224,7 @@ def window_rollup(daily, as_of_d_df):
     main = dwa.groupBy("entity").agg(*aggs)
     # per-category 30-day counts as a map (the A5 type-profile input):
     # bounded by the category vocabulary per entity; built via its own
-    # (entity, cat) rollup and joined back. Event-count sums, so the
-    # same-day incremental merge is a pure map union-add.
+    # (entity, cat) rollup and joined back.
     per_cat = (
         dwa.filter(age <= 30)
         .groupBy("entity", "cat")
@@ -239,9 +238,7 @@ def window_rollup(daily, as_of_d_df):
                         # null categories are legal rollup groups (the
                         # raw A5 path emits them) but illegal map keys:
                         # store them under the reserved sentinel; the
-                        # A5 serve decodes it back to null. Both build
-                        # paths (full + incremental batch) come through
-                        # here, so the sentinel merges with itself.
+                        # A5 serve decodes it back to null.
                         F.coalesce(
                             "cat", F.lit(NULL_CAT_SENTINEL)
                         ).alias("cat"),
@@ -251,38 +248,10 @@ def window_rollup(daily, as_of_d_df):
             )
         ).alias("cat_counts30")
     )
-    empty_map = F.map_from_entries(
-        F.array().cast("array<struct<cat:string,n30:bigint>>")
-    )
     return (
         main.join(cat_maps, "entity", "left")
-        .withColumn("cat_counts30", F.coalesce("cat_counts30", empty_map))
+        .withColumn("cat_counts30", F.coalesce("cat_counts30", _EMPTY_MAP()))
         .crossJoin(F.broadcast(as_of_d_df))
-    )
-
-
-def _window_schema(entity):
-    """The stored window columns the fold's merges read, typed as
-    :func:`window_rollup` types them (``entity``: the entity field).
-    Spelled out: analysing window_rollup's plan for its schema costs
-    the driver about as much as the footer probe it replaces."""
-    return T.StructType(
-        [
-            entity,
-            T.StructField("total", T.LongType()),
-            *[
-                f
-                for w in _WINDOWS
-                for f in (
-                    T.StructField(f"total{w}", T.LongType()),
-                    T.StructField(f"cats{w}", T.ArrayType(T.StringType())),
-                )
-            ],
-            T.StructField(
-                "cat_counts30", T.MapType(T.StringType(), T.LongType())
-            ),
-            T.StructField("wb", T.IntegerType()),
-        ]
     )
 
 
@@ -297,9 +266,10 @@ def _anchor(spark: SparkSession, as_of_d):
 
 def _window_spec(path: str, entity: str = "user_id"):
     """The window table as the fold's head and tail see it. Its state
-    of a batch is the batch's daily rollup. It has no ``merge``: its
-    two regimes key on the as-of anchor its meta carries beside the
-    binding (:func:`update_window_summary`)."""
+    of a batch is the batch's daily rollup. It has no ``merge``: the
+    fold re-derives the buckets it rewrites from the daily summary,
+    aged against the as-of anchor its meta carries beside the binding
+    (:func:`update_window_summary`)."""
     from nerd_spark.plans import derivations as D
 
     return _FoldSpec(
@@ -677,9 +647,9 @@ def optimize_layout(
             _seed(
                 spark,
                 window,
-                _with_rep_columns(
+                _window_rows(
                     window_rollup(sd, _anchor(spark, as_of_d)).drop("as_of_d")
-                ).withColumn("wb", _wbucket()),
+                ),
                 meta=dict(
                     window.binding, as_of_d=as_of_d and as_of_d.isoformat()
                 ),
@@ -828,34 +798,29 @@ def update_window_summary(
     daily_summary_path: str,
     new_events,
     entity: str = "user_id",
-    max_window: int = 30,
     batch_id: str | None = None,
 ) -> None:
     """Incremental maintenance of the per-entity window rollup —
     call AFTER :func:`update_daily_summary` has merged the same batch
-    (the day-roll path re-reads the merged daily summary; the two
-    compose under replay because each fold keeps its own batch
-    ledger — a replayed ``batch_id`` skips whichever folds already
-    hold it).
+    (the fold re-reads the merged daily summary; the two compose under
+    replay because each fold keeps its own batch ledger — a replayed
+    ``batch_id`` skips whichever folds already hold it).
 
-    Two regimes, keyed on whether the as-of DATE advances:
-
-    - **no day-roll** (the common many-batches-per-day case): existing
-      rows' window ages are unchanged, so the update is a pure
-      additive merge — per-entity batch sums add into total/totalN,
-      batch categories union into the per-window sets. Cost
-      O(batch entities + touched rows of the table via the outer
-      join); at scale the table is entity-bucketed so the join is
-      exchange-free on the big side.
-    - **day-roll** (once per day): window membership shifts — but only
-      for entities with any activity inside the trailing max_window
-      days (of either anchor): everyone else's windows/vectors are
-      already all-zero and stay so. The windowed parts recompute from
-      the merged daily summary *pruned to those date partitions*, and
-      the rewrite is bounded to buckets containing such ACTIVE
-      entities (plus the batch's); long-idle buckets stay
-      byte-identical on disk. The all-history `total` stays purely
-      additive (old total + batch counts).
+    One rule, as the reference recomputes an entity's windowed totals
+    from its per-day buckets: the fold rewrites a set R of entity
+    buckets, re-deriving their windowed parts (totals, category sets,
+    per-age vectors, per-category map) from the merged daily summary
+    pruned to the trailing ``max(_WINDOWS)`` days, through
+    :func:`window_rollup`. R is the batch's buckets when the as-of
+    anchor stays put (ages are unchanged, and daily already holds the
+    batch, so the re-derivation is exact); on a day-roll it adds the
+    buckets holding entities active in the old anchor's trailing
+    window — everyone else's windows and vectors are all-zero before
+    and after the roll. Every other bucket stays byte-identical on
+    disk. The all-history ``total`` is the one additive measure: the
+    live total of R plus the batch's counts (undated events too: they
+    move no window, and a window with no anchor yet waits for a dated
+    batch).
 
     The as-of anchor lives in the table's meta (``as_of_d`` beside
     the entity binding), NOT in the row schema — a per-row as_of_d
@@ -863,20 +828,20 @@ def update_window_summary(
     Recovery, replay skip, binding check and commit are :func:`_fold`'s
     (:func:`_fold_skip`, :func:`_fold_commit`); the staged commit's
     manifest carries the meta, so a resumed swap lands the anchor with
-    the rows. Live rows whose meta holds no anchor (a crash artifact
-    or an older format) are rebuilt from the daily summary through
-    the first-build path; the dir's batch ledger is kept.
+    the rows. A first build — or live rows whose meta holds no anchor
+    (a crash artifact or an older format) — rewrites every bucket,
+    with the all-history totals from the whole daily summary; the
+    dir's batch ledger is kept.
 
     Reads plan from what the fold knows: daily's ``d >= lo`` date
-    partitions by path and the window's own rows with the schema
-    window_rollup gives them (no footer-probe job, and no parallel
-    listing of daily's root past 32 date dirs); the anchor frame is
-    built in the JVM. Only the first build reads all of daily, for
-    the all-history totals.
+    partitions by path and the window's own rows with their known
+    schema (no footer-probe job, and no parallel listing of daily's
+    root past 32 date dirs); the anchor frame is built in the JVM.
+    One job before the commit finds R and the batch's newest day.
 
-    Either way the result is bit-identical to a full
-    :func:`window_rollup` over the merged summary (pinned by
-    tests/test_summary_window.py, including across a day boundary).
+    The result is bit-identical to a full :func:`window_rollup` over
+    the merged summary (pinned by tests/test_summary_window.py,
+    including across a day boundary).
     """
     import datetime as _dt
 
@@ -884,190 +849,106 @@ def update_window_summary(
     if _fold_skip(spark, spec, new_events, batch_id):
         return
     bd = spec.state(new_events)
-    # the batch's buckets and its newest day, in one job
-    got = bd.groupBy(_wbucket().alias("wb")).agg(F.max("d")).collect()
-    batch_max_d = max(filter(None, (r[1] for r in got)), default=None)
-    if batch_max_d is None:
-        return  # empty batch
-    have = bool(_parts(spark, window_path, "wb"))
     old_as_of_d = None
-    if have and (
+    if _parts(spark, window_path, "wb") and (
         _fold_binding(spark, window_path, spec.binding, True, spec.what)
         == "fold"
     ):
         a = read_summary_meta(spark, window_path).get("as_of_d")
         old_as_of_d = _dt.date.fromisoformat(a) if a else None
     have = old_as_of_d is not None  # no anchor: rebuild from daily
-    new_as_of_d = max(filter(None, [old_as_of_d, batch_max_d]))
-    asof_df = _anchor(spark, new_as_of_d)
     days = _date_parts(spark, daily_summary_path)
+    span = _dt.timedelta(days=max(_WINDOWS))
 
     def daily_since(lo):
         # daily's d >= lo partitions, by path, with daily's schema
         names = [n for d, n in sorted(days.items()) if d >= lo]
         return _read_parts(spark, daily_summary_path, names, bd)
 
-    def live(touched):
-        # the live rows of the touched buckets, with their known schema
-        return (
-            spark.read.schema(_window_schema(bd.schema["entity"]))
-            .parquet(window_path)
-            .filter(F.col("wb").isin(touched))
-            .drop("wb")
+    # one job: per bucket, the batch's newest day and whether the batch
+    # touches it, over the batch and the old anchor's trailing window
+    keys = bd.select(_wbucket().alias("wb"), "d", F.lit(True).alias("b"))
+    if have:
+        keys = keys.unionByName(
+            daily_since(old_as_of_d - span).select(
+                _wbucket().alias("wb"),
+                F.lit(None).cast("date").alias("d"),
+                F.lit(False).alias("b"),
+            )
         )
-
+    got = keys.groupBy("wb").agg(F.max("d"), F.max("b")).collect()
+    batch_max_d = max(filter(None, (r[1] for r in got)), default=None)
+    if not any(r[2] for r in got) or (batch_max_d is None and not have):
+        return  # empty batch, or no dated event to anchor a first build
+    new_as_of_d = max(filter(None, [old_as_of_d, batch_max_d]))
+    rolled = not have or new_as_of_d > old_as_of_d
+    recent = daily_since(new_as_of_d - span)
     zero = F.lit(0).cast("long")
-    empty = F.array().cast("array<string>")
-    zvec_l = F.array_repeat(F.lit(0).cast("long"), _VEC_DAYS)
-    zvec_i = F.array_repeat(F.lit(0).cast("int"), _VEC_DAYS)
-    _VECS = (("nd_days", zvec_l), ("cats_days", zvec_i), ("err_days", zvec_l))
-
-    if not have or new_as_of_d > old_as_of_d:
-        # day-roll (or first build): windowed parts from the merged
-        # daily summary, PRUNED to the partitions that can matter
-        lo = new_as_of_d - _dt.timedelta(days=max_window)
-        winpart = window_rollup(daily_since(lo), asof_df).drop(
-            "total", "as_of_d"
+    if have:
+        # the rewritten buckets: the batch's, and on a day-roll the
+        # old window's too; their live totals, with their known schema
+        rewrite = [r[0] for r in got if rolled or r[2]]
+        recent = recent.filter(_wbucket().isin(rewrite))
+        ent = bd.schema["entity"].dataType.simpleString()
+        old = (
+            spark.read.schema(f"entity {ent}, total bigint, wb int")
+            .parquet(window_path)
+            .filter(F.col("wb").isin(rewrite))
         )
-        if have:
-            # Bound the rewrite to buckets holding entities ACTIVE in
-            # the trailing window of either anchor (covers both rows
-            # whose windows gain days and rows whose windows age out),
-            # plus the batch's. Entities idle past both windows carry
-            # all-zero windows/vectors before AND after the roll —
-            # their buckets are not rewritten (byte-identical,
-            # tested). The active scan reads only pruned date
-            # partitions of the daily summary.
-            active = (
-                daily_since(old_as_of_d - _dt.timedelta(days=max_window))
-                .select(_wbucket().alias("wb"))
-                .unionByName(bd.select(_wbucket().alias("wb")))
-                .distinct()
-            )
-            old = live([r.wb for r in active.collect()])
-            # all-history total stays additive: old total + batch counts
-            b_tot = bd.groupBy("entity").agg(
-                F.sum("n").cast("long").alias("b_total")
-            )
-            totals = (
-                old.select("entity", "total")
-                .join(b_tot, "entity", "full")
-                .select(
-                    "entity",
-                    (
-                        F.coalesce("total", zero) + F.coalesce("b_total", zero)
-                    ).alias("total"),
-                )
-            )
-        else:
-            # FIRST build (or rebuild): all-history totals from the
-            # FULL daily summary — update_daily_summary has already
-            # merged this batch, and a pre-existing summary with
-            # history (window table deleted for rebuild, torn meta)
-            # would be silently undercounted by batch-only seeding
-            # (ADVICE r6). Assumes daily history is unpruned; when
-            # retention has already dropped partitions the rebuilt
-            # total can only reflect surviving history — say so
-            # loudly.
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "window summary first build at %s: deriving all-history "
-                "totals from the daily summary; if retention pruned old "
-                "daily partitions, `total` reflects surviving history "
-                "only (the incremental path preserves pruned counts)",
-                window_path,
-            )
-            totals = (
-                spark.read.parquet(daily_summary_path)
-                .groupBy("entity")
-                .agg(F.sum("n").cast("long").alias("total"))
-            )
-        merged = totals.join(winpart, "entity", "full").select(
+        b_tot = bd.groupBy("entity").agg(F.sum("n").cast("long").alias("b"))
+        totals = old.join(b_tot, "entity", "full").select(
             "entity",
-            F.coalesce("total", zero).alias("total"),
-            *[
-                c
-                for w in _WINDOWS
-                for c in (
-                    F.coalesce(f"total{w}", zero).alias(f"total{w}"),
-                    F.coalesce(f"cats{w}", empty).alias(f"cats{w}"),
-                )
-            ],
-            *[F.coalesce(v, z).alias(v) for v, z in _VECS],
-            F.coalesce("cat_counts30", _EMPTY_MAP()).alias("cat_counts30"),
+            (F.coalesce("total", zero) + F.coalesce("b", zero)).alias("total"),
         )
     else:
-        # same-day batch: ages unchanged -> additive merge for the
-        # event-count measures (each event lands in exactly one batch,
-        # so batch sums add: total, totalN, and the cats SETS union
-        # idempotently). The per-age cats_days COUNTS are the one
-        # non-mergeable measure — a (entity, d, cat) cell split across
-        # two batches must count ONCE, not once per batch — so the
-        # daily vectors recompute from the merged summary pruned to
-        # the last _VEC_DAYS partitions (bounded; the same cost class
-        # as the day-roll recompute, and update_event_summaries runs
-        # the daily merge first so the summary already holds the
-        # batch). Caught by the out-of-order streamed-batches test.
-        # Only the buckets the batch touches are merged and rewritten;
-        # every other bucket's files stay byte-identical on disk.
-        touched = [r.wb for r in got]
-        bagg = window_rollup(bd, asof_df).drop("as_of_d")
-        recent_v = daily_since(
-            new_as_of_d - _dt.timedelta(days=_VEC_DAYS - 1)
-        ).filter(_wbucket().isin(touched))
-        vecs = window_rollup(recent_v, asof_df).select(
-            "entity", *[v for v, _ in _VECS]
+        # FIRST build (or rebuild): all-history totals from the FULL
+        # daily summary — update_daily_summary has already merged this
+        # batch, and a pre-existing summary with history (window table
+        # deleted for rebuild, torn meta) would be silently
+        # undercounted by batch-only seeding (ADVICE r6). Assumes daily
+        # history is unpruned; when retention has already dropped
+        # partitions the rebuilt total can only reflect surviving
+        # history — say so loudly.
+        import logging
+
+        logging.getLogger(__name__).warning(
+            "window summary first build at %s: deriving all-history "
+            "totals from the daily summary; if retention pruned old "
+            "daily partitions, `total` reflects surviving history "
+            "only (the incremental path preserves pruned counts)",
+            window_path,
         )
-        o, b = live(touched).alias("o"), bagg.alias("b")
-        merge_cols = [
+        totals = (
+            spark.read.parquet(daily_summary_path)
+            .groupBy("entity")
+            .agg(F.sum("n").cast("long").alias("total"))
+        )
+    winpart = window_rollup(recent, _anchor(spark, new_as_of_d))
+    empty = F.array().cast("array<string>")
+    # entities with no day in the window read as all-zero windows
+    merged = totals.join(winpart.drop("total", "as_of_d"), "entity", "full")
+    merged = merged.select(
+        "entity",
+        F.coalesce("total", zero).alias("total"),
+        *[
             c
             for w in _WINDOWS
             for c in (
-                (
-                    F.coalesce(f"o.total{w}", zero)
-                    + F.coalesce(f"b.total{w}", zero)
-                ).alias(f"total{w}"),
-                F.array_sort(
-                    F.array_distinct(
-                        F.concat(
-                            F.coalesce(f"o.cats{w}", empty),
-                            F.coalesce(f"b.cats{w}", empty),
-                        )
-                    )
-                ).alias(f"cats{w}"),
+                F.coalesce(f"total{w}", zero).alias(f"total{w}"),
+                F.coalesce(f"cats{w}", empty).alias(f"cats{w}"),
             )
-        ]
-        merged = (
-            o.join(b, "entity", "full")
-            .select(
-                "entity",
-                (F.coalesce("o.total", zero) + F.coalesce("b.total", zero)).alias(
-                    "total"
-                ),
-                *merge_cols,
-                # per-cat 30d counts: event-count sums -> map union-add
-                F.map_zip_with(
-                    F.coalesce("o.cat_counts30", _EMPTY_MAP()),
-                    F.coalesce("b.cat_counts30", _EMPTY_MAP()),
-                    lambda k, x, y: F.coalesce(x, F.lit(0).cast("long"))
-                    + F.coalesce(y, F.lit(0).cast("long")),
-                ).alias("cat_counts30"),
-            )
-            .join(vecs, "entity", "left")
-            .select(
-                "entity",
-                "total",
-                *[c for w in _WINDOWS for c in (f"total{w}", f"cats{w}")],
-                *[F.coalesce(v, z).alias(v) for v, z in _VECS],
-                "cat_counts30",
-            )
-        )
-
+        ],
+        *[
+            F.coalesce(v, F.array_repeat(F.lit(0).cast(t), _VEC_DAYS)).alias(v)
+            for v, t in (("nd_days", "long"), ("cats_days", "int"),
+                         ("err_days", "long"))
+        ],
+        F.coalesce("cat_counts30", _EMPTY_MAP()).alias("cat_counts30"),
+    )
     _fold_commit(
         spark,
         spec,
-        _with_rep_columns(merged).withColumn("wb", _wbucket()),
+        _window_rows(merged),
         have,
         batch_id,
         dict(spec.binding, as_of_d=new_as_of_d.isoformat()),

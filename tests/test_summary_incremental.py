@@ -1035,13 +1035,27 @@ def test_fold_over_many_days_reads_touched_dirs_only(spark, tmp_path,
 
 
 @pytest.mark.slow
-def test_window_day_roll_reads_daily_by_path(spark, tmp_path, monkeypatch):
-    """The window day-roll over a 40-day daily summary reads daily's
+@pytest.mark.parametrize("late", [False, True], ids=["day_roll", "same_day"])
+def test_window_day_roll_reads_daily_by_path(spark, tmp_path, monkeypatch,
+                                             late):
+    """The window fold over a 40-day daily summary reads daily's
     d >= lo partitions by path (never its root) and still equals the
-    full rollup."""
+    full rollup in every stored column: on a day-roll, and on a late
+    same-day batch (every event older than the anchor, some 15-30
+    days back)."""
     from nerd_spark.sources.layout import update_window_summary, window_rollup
 
     hist, batch, dsum = _many_days(spark, tmp_path)
+    if late:
+        anchor = hist.agg(F.to_date(F.max("ts"))).first()[0]
+        batch = hist.filter(
+            (F.col("event_id") % 5 == 0) & (F.to_date("ts") < F.lit(anchor))
+        ).withColumn("event_id", F.col("event_id") + 1000)
+        ages = {
+            (anchor - r[0]).days
+            for r in batch.select(F.to_date("ts")).collect()
+        }
+        assert min(ages) > 0 and ages & set(range(15, 31))
     wsum = str(tmp_path / "window")
     update_window_summary(spark, wsum, dsum, hist)  # first build: whole
     update_daily_summary(spark, dsum, batch)
@@ -1053,11 +1067,16 @@ def test_window_day_roll_reads_daily_by_path(spark, tmp_path, monkeypatch):
     everything = hist.unionByName(batch)
 
     def win(df):
-        cols = ["entity", "total", "total1", "total7", "total30", "nd_days"]
+        cols = [
+            "entity", "total", "total1", "total7", "total30", "cats1",
+            "cats7", "cats30", "nd_days", "cats_days", "err_days",
+            F.array_sort(F.map_entries("cat_counts30")), "rep_events",
+            "rep_err",
+        ]
         return sorted(map(repr, (tuple(r) for r in df.select(cols).collect())))
 
     full = window_rollup(
         D.daily_rollup(everything, "user_id").select("entity", "d", "cat", "n"),
         everything.agg(F.to_date(F.max("ts")).alias("as_of_d")),
-    )
+    ).withColumns(D.vector_reputation_columns())
     assert win(spark.read.parquet(wsum)) == win(full)

@@ -60,8 +60,8 @@ def _win_meta_asof(spark, wpath):
 
 @pytest.mark.slow
 def test_incremental_window_equals_full_rebuild(spark, sf_dir):
-    """Three batches — the middle split INSIDE one day so both the
-    same-day additive merge and the day-roll recompute paths run —
+    """Three batches — the middle split INSIDE one day so the fold
+    runs both with the anchor staying put and across a day-roll —
     converge to exactly the one-shot rollup over everything."""
     ev = read_table(spark, sf_dir, "events")
     days = sorted(r.d for r in ev.select(F.to_date("ts").alias("d")).distinct().collect())
@@ -388,7 +388,7 @@ def test_same_day_merge_rewrites_only_touched_buckets(spark, sf_dir):
 def test_day_roll_skips_long_idle_buckets(spark):
     """A day-roll only rewrites buckets holding entities active inside
     the trailing window of either anchor: a bucket whose entities all
-    went idle >max_window days ago has all-zero windows before AND
+    went idle >30 days ago has all-zero windows before AND
     after the roll — its files must stay byte-identical — while the
     rolled table still equals the one-shot rollup exactly."""
     import datetime as _dt
@@ -584,8 +584,8 @@ def test_resumed_window_swap_lands_its_anchor(spark, tmp_path, monkeypatch):
     """A day-roll fold torn after its bucket swap, before its meta
     write: the replay's recovery completes the swap and writes the
     new anchor from the staged commit's manifest. A late batch dated
-    the OLD anchor's day then folds as a same-day merge against the
-    new anchor, and the window equals the one-shot rollup."""
+    the OLD anchor's day then folds against the new anchor, and the
+    window equals the one-shot rollup."""
     import datetime
 
     from nerd_spark.sources import layout
@@ -625,3 +625,33 @@ def test_resumed_window_swap_lands_its_anchor(spark, tmp_path, monkeypatch):
     update_window_summary(spark, wp, dp, b3, batch_id="b3")
     want = _win_rows(_full_rollup(spark, ev))
     assert _win_rows(spark.read.parquet(wp)) == want
+
+
+def test_undated_batch_adds_to_window_total(spark, tmp_path):
+    """A batch whose events all lack a timestamp lands in daily's null
+    day: it moves no window, but the all-history ``total`` counts it,
+    as the one-shot rollup over daily does. Before any dated event
+    there is no anchor to build on, so the window waits for one."""
+    from nerd_spark.sources.layout import (
+        SUMMARY_DAILY_DIRNAME,
+        update_daily_summary,
+        update_window_summary,
+    )
+
+    ev = _mk_events(spark, 3)
+    undated = ev.filter(F.col("event_id") % 4 == 0).withColumn(
+        "ts", F.lit(None).cast("timestamp")
+    )
+    dated = ev.filter(F.col("event_id") % 4 != 0)
+    dp = str(tmp_path / SUMMARY_DAILY_DIRNAME)
+    wp = str(tmp_path / SUMMARY_WINDOW_DIRNAME)
+    for bid, b in (("u1", undated.filter(F.col("event_id") < 120)),
+                   ("d", dated),
+                   ("u2", undated.filter(F.col("event_id") >= 120))):
+        update_daily_summary(spark, dp, b, batch_id=bid)
+        update_window_summary(spark, wp, dp, b, batch_id=bid)
+    daily = spark.read.parquet(dp).select("entity", "d", "cat", "n")
+    asof = dated.agg(F.to_date(F.max("ts")).alias("as_of_d"))
+    assert _win_rows(spark.read.parquet(wp)) == _win_rows(
+        window_rollup(daily, asof)
+    )
